@@ -18,6 +18,7 @@ from invoice_ocr_reconciler_spark.functions.parse_fields import (
     parse_invoice_fields,
 )
 from invoice_ocr_reconciler_spark.operators.reconcile import reconcile
+from invoice_ocr_reconciler_spark.util import with_scan_parallelism
 
 
 def _fields_schema(include_text: bool):
@@ -92,6 +93,11 @@ def extract_and_parse(
     standalone operators (two crossings) — kept for operator-level testing
     and reuse. All three paths are byte-identical (tested).
 
+    The fused path keeps its input's partitioning: it adds no exchange, so
+    a caller that already runs many inputs side by side (run_resumable's
+    bucket pool) pays no per-input shuffle. A caller whose single input may
+    be one scan split widens it first (run_pipeline does).
+
     ``include_text=False`` drops ``extracted_text`` from the OUTPUT schema —
     a mapInArrow/mapInPandas node is opaque to Catalyst, so column pruning
     cannot remove it downstream; when the consumer is reconciliation-only
@@ -100,14 +106,9 @@ def extract_and_parse(
     byte-identity contract) keeps the default.
     """
     if fused:
-        from invoice_ocr_reconciler_spark.util import with_scan_parallelism
-
-        pruned = with_scan_parallelism(pages.select("url", "html"))
-        schema = _fields_schema(include_text)
-        try:
-            return pruned.mapInArrow(_make_extract_parse_arrow(include_text), schema=schema)
-        except Exception:  # pandas fallback if the arrow path is unavailable
-            return pruned.mapInPandas(_make_extract_parse_batches(include_text), schema=schema)
+        return pages.select("url", "html").mapInArrow(
+            _make_extract_parse_arrow(include_text), schema=_fields_schema(include_text)
+        )
     extracted = extract_pages(pages)
     out = parse_invoice_fields(extracted)
     return out if include_text else out.drop("extracted_text")
@@ -126,8 +127,12 @@ def run_pipeline(
     ``include_text`` defaults False: reconciliation consumes four small
     fields, so the flagship path never ships the extracted text across the
     Arrow channel (see extract_and_parse). Pass True to keep
-    ``invoices.extracted_text`` for inspection/persistence."""
-    invoices = extract_and_parse(pages, include_text=include_text)
+    ``invoices.extracted_text`` for inspection/persistence.
+
+    ``pages`` is widened to at least defaultParallelism partitions before
+    extraction: a batch landed as one file is one scan split, which would
+    run every page's extraction on one core."""
+    invoices = extract_and_parse(with_scan_parallelism(pages), include_text=include_text)
     out = reconcile(
         invoices,
         ledger,

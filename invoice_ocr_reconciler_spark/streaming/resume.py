@@ -18,7 +18,8 @@ import re
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _BUCKET_RE = re.compile(r"url_bucket=(\d+)$")
@@ -122,12 +123,21 @@ def run_resumable(
 ) -> dict:
     """Process each incomplete url bucket through ``transform`` and commit.
 
-    Buckets are dispatched as CONCURRENT Spark jobs (driver-side thread
-    pool; the scheduler interleaves their tasks) — a bucket is one commit
-    unit, not one unit of cluster occupancy, so a bucket whose tasks can't
-    fill the executors doesn't serialize the whole backfill. Each bucket
-    still commits its manifest entry atomically and independently, so a
-    kill leaves exactly the completed buckets durable.
+    Buckets are dispatched as CONCURRENT Spark jobs from a driver-side
+    thread pool, ``max_concurrent`` wide (default: ``defaultParallelism``,
+    one bucket per core). The pool is the parallelism, so a transform need
+    not widen a bucket's partitioning (extract_and_parse does not, and pays
+    no per-bucket shuffle). Each pool thread inherits the caller's Spark local
+    properties (job group, description) and session tags, so a bucket's
+    jobs are attributed to the calling context.
+
+    With a narrow transform (extract_and_parse), a bucket costs two Spark
+    jobs: reading its input's parquet footer, and the write. The
+    manifest's ``rows``/``min_url``/``max_url`` come from an ``Observation``
+    on the written frame, read after the write returns, so the committed
+    output is never scanned again. Each bucket commits its manifest entry
+    atomically and independently, so a kill leaves exactly the completed
+    buckets durable.
 
     ``fail_after`` (tests only) stops dispatching after N buckets to
     simulate a mid-job kill (runs sequentially for determinism); the
@@ -154,14 +164,14 @@ def run_resumable(
         # transform_factory: bucket-aware transforms (e.g. a MERGE that
         # routes its updates frame to this bucket's key slice)
         tf = transform_factory(bucket) if transform_factory is not None else transform
-        tf(df).write.mode("overwrite").parquet(dst)
-        # lineage/metrics from the committed output (metadata-cheap scans)
-        out_df = spark.read.parquet(dst)
-        stats = out_df.agg(
-            F.count("*").alias("rows"),
+        obs = Observation()
+        tf(df).observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
             F.min("url").alias("min_url"),
             F.max("url").alias("max_url"),
-        ).collect()[0]
+        ).write.mode("overwrite").parquet(dst)
+        stats = obs.get  # filled by the write; read only after it returned
         prior = manifest.entry(bucket)
         manifest.record(
             bucket,
@@ -188,9 +198,15 @@ def run_resumable(
         from concurrent.futures import ThreadPoolExecutor, as_completed
 
         if max_concurrent is None:
-            max_concurrent = max(2, spark.sparkContext.defaultParallelism // 2)
+            max_concurrent = spark.sparkContext.defaultParallelism
         with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-            futures = {pool.submit(_one, b): b for b in todo}
+            # wrapped per bucket: a wrapper clones the caller's local
+            # properties once and installs that one object in its thread, so
+            # a wrapper shared by the pool would let a bucket that sets its
+            # own job group relabel the other buckets' jobs
+            futures = {
+                pool.submit(inheritable_thread_target(spark)(_one), b): b for b in todo
+            }
             for fut in as_completed(futures):
                 bucket = futures[fut]
                 try:

@@ -11,9 +11,14 @@ def with_scan_parallelism(df: DataFrame) -> DataFrame:
     A small corpus in one parquet file yields ONE scan split, which serializes
     every downstream Arrow/pandas UDF onto a single core. When the upstream
     partition count is below the cluster's default parallelism, repartition up
-    — exactly the case where the extra exchange is cheap (the data is small by
-    construction). At web scale the scan has thousands of file splits and this
-    is a no-op, so the hot path never pays the shuffle.
+    (round-robin). At web scale the scan has thousands of file splits and this
+    is a no-op.
+
+    The exchange is not cheap when many such frames run side by side: a
+    caller that already runs one small input per core (run_resumable's
+    bucket pool) would pay a shuffle per input for no added parallelism —
+    on 4 cores it tripled the executor time of per-bucket extraction. Widen
+    only a frame that is the cluster's single batch (run_pipeline does).
 
     Values are partition-invariant everywhere this is used (pure per-row
     functions; pinned by the two-parallelism determinism tests).

@@ -70,6 +70,25 @@ def test_fused_paths_byte_identical(spark):
     assert slim == slim_ref
 
 
+def test_scan_widened_by_run_pipeline_not_extract_and_parse(spark, tmp_path):
+    """extract_and_parse keeps its input's partitioning (no exchange: the
+    bucket pool runs it per bucket); run_pipeline widens a one-file batch
+    to at least defaultParallelism partitions before extraction."""
+    from invoice_ocr_reconciler_spark.pipeline import extract_and_parse
+
+    path = str(tmp_path / "pages")
+    datagen.pages_df(spark, 60).coalesce(1).write.parquet(path)
+    pages = spark.read.parquet(path)
+    assert pages.rdd.getNumPartitions() == 1
+
+    invoices = extract_and_parse(pages)
+    assert invoices.rdd.getNumPartitions() == 1
+    assert "Exchange" not in invoices._jdf.queryExecution().executedPlan().toString()
+
+    out = run_pipeline(pages, datagen.ledger_df(spark, 10, 60))
+    assert out["invoices"].rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
 def test_curation_identical_across_partitioning(spark):
     """Curation (incl. the MinHash near-dup stage) is partition-invariant:
     same curated id set and stage counters at different partition counts."""

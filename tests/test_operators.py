@@ -149,6 +149,8 @@ def test_register_csv_alias_coalesce(spark, tmp_path):
 
 
 def test_resumable_checkpoint(spark, tmp_path):
+    import pyarrow.parquet as pq
+
     from invoice_ocr_reconciler_spark import datagen
     from invoice_ocr_reconciler_spark.extraction.udfs import extract_pages
     from invoice_ocr_reconciler_spark.sources.pages import write_pages_bucketed
@@ -160,18 +162,113 @@ def test_resumable_checkpoint(spark, tmp_path):
     pages_path = str(tmp_path / "pages")
     out_path = str(tmp_path / "out")
     write_pages_bucketed(datagen.pages_df(spark, 120), pages_path, n_buckets=4)
+    # an empty bucket: schema, no rows
+    spark.read.parquet(f"{pages_path}/url_bucket=0").limit(0).write.parquet(
+        f"{pages_path}/url_bucket=4"
+    )
     manifest = CheckpointManifest(str(tmp_path / "manifest"))
 
     r1 = run_resumable(spark, pages_path, out_path, manifest, extract_pages, fail_after=2)
     assert len(r1["processed"]) == 2
     r2 = run_resumable(spark, pages_path, out_path, manifest, extract_pages)
-    assert len(r2["processed"]) == 2 and len(r2["skipped"]) == 2
+    assert len(r2["processed"]) == 3 and len(r2["skipped"]) == 2
     metrics = manifest.all_metrics()
     assert sum(m["rows"] for m in metrics) == 120
-    assert all(m["bytes"] > 0 and m["min_url"] <= m["max_url"] for m in metrics)
+    # the observed commit stats equal an independent read of each bucket
+    for m in metrics:
+        urls = pq.read_table(
+            f"{out_path}/url_bucket={m['bucket']}", columns=["url"]
+        ).column("url").to_pylist()
+        assert m["bytes"] > 0
+        assert (m["rows"], m["min_url"], m["max_url"]) == (
+            len(urls), min(urls, default=None), max(urls, default=None)
+        )
+    assert manifest.entry(4)["rows"] == 0
     # resumed run is a no-op
     r3 = run_resumable(spark, pages_path, out_path, manifest, extract_pages)
     assert r3["processed"] == []
+
+
+def _bucketed_pages(spark, path: str) -> list[int]:
+    """120 pages in 4 url buckets under ``path``; returns the bucket ids."""
+    from invoice_ocr_reconciler_spark import datagen
+    from invoice_ocr_reconciler_spark.sources.pages import write_pages_bucketed
+
+    write_pages_bucketed(datagen.pages_df(spark, 120), path, n_buckets=4)
+    return sorted(int(n.split("=")[1]) for n in os.listdir(path) if n.startswith("url_bucket="))
+
+
+def test_resumable_buckets_inherit_job_group(spark, tmp_path):
+    """Pool threads carry the caller's job group: every bucket's jobs are
+    attributed to it, two per bucket (input footer, write)."""
+    import time
+
+    from invoice_ocr_reconciler_spark.pipeline import extract_and_parse
+    from invoice_ocr_reconciler_spark.streaming.resume import (
+        CheckpointManifest,
+        run_resumable,
+    )
+
+    pages_path = str(tmp_path / "pages")
+    buckets = _bucketed_pages(spark, pages_path)
+    assert len(buckets) == 4
+    sc = spark.sparkContext
+    group = f"resume-inherit-{tmp_path.name}"
+    sc.setJobGroup(group, "run_resumable under a job group")
+    try:
+        result = run_resumable(
+            spark, pages_path, str(tmp_path / "out"),
+            CheckpointManifest(str(tmp_path / "manifest")), extract_and_parse,
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert result["processed"] == buckets
+    # the status store is fed by an asynchronous listener
+    deadline = time.monotonic() + 30
+    while (len(sc.statusTracker().getJobIdsForGroup(group)) < 2 * len(buckets)
+           and time.monotonic() < deadline):
+        time.sleep(0.1)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 * len(buckets)
+
+
+def test_resumable_failure_contract(spark, tmp_path):
+    """One bucket's Spark job fails: the others commit, the error names the
+    failed bucket, it leaves no manifest entry or temp file, and a rerun
+    redoes exactly that bucket."""
+    from invoice_ocr_reconciler_spark.pipeline import extract_and_parse
+    from invoice_ocr_reconciler_spark.streaming.resume import (
+        BucketRunError,
+        CheckpointManifest,
+        run_resumable,
+    )
+
+    pages_path = str(tmp_path / "pages")
+    out_path = str(tmp_path / "out")
+    buckets = _bucketed_pages(spark, pages_path)
+    bad = buckets[1]
+    manifest = CheckpointManifest(str(tmp_path / "manifest"))
+
+    def failing(df):
+        out = extract_and_parse(df)
+        boom = F.raise_error(F.lit("boom"))
+        return out.withColumn("url", F.when(F.col("url").isNotNull(), boom).otherwise(F.col("url")))
+
+    def factory(bucket):
+        return failing if bucket == bad else extract_and_parse
+
+    with pytest.raises(BucketRunError) as info:
+        run_resumable(spark, pages_path, out_path, manifest, None, transform_factory=factory)
+    assert info.value.processed == [b for b in buckets if b != bad]
+    assert [b for b, _ in info.value.failed] == [bad]
+    assert "boom" in info.value.failed[0][1]
+    assert manifest.entry(bad) is None
+    assert not [n for n in os.listdir(manifest.dir) if n.endswith(".tmp")]
+    assert manifest.completed_buckets() == set(buckets) - {bad}
+
+    rerun = run_resumable(spark, pages_path, out_path, manifest, extract_and_parse)
+    assert rerun["processed"] == [bad]
+    assert rerun["skipped"] == [b for b in buckets if b != bad]
+    assert sum(m["rows"] for m in manifest.all_metrics()) == 120
 
 
 def test_streaming_ingest_available_now(spark, tmp_path):
