@@ -310,6 +310,7 @@ def build_corpus_resumable(
         CheckpointManifest,
         _discover_buckets,
         run_resumable,
+        shuffle_pool_width,
     )
 
     manifest_dir = os.path.join(out_root, "manifest")
@@ -324,6 +325,8 @@ def build_corpus_resumable(
             manifest,
             clean_pages_bucket,
             fail_after=fail_after,
+            # latest_snapshot's window and extract_pages shuffle per bucket
+            max_concurrent=shuffle_pool_width(spark),
         )
     if phase in ("finish", "all"):
         # The finish phase is only well-defined over a COMPLETE extract

@@ -225,6 +225,7 @@ def write_back_bucketed(
     from invoice_ocr_reconciler_spark.streaming.resume import (
         _discover_buckets,
         run_resumable,
+        shuffle_pool_width,
     )
 
     if n_buckets is None:
@@ -254,6 +255,8 @@ def write_back_bucketed(
 
         return transform
 
+    if max_concurrent is None:  # each bucket is a join: a shuffle unless updates broadcast
+        max_concurrent = shuffle_pool_width(spark)
     return run_resumable(
         spark,
         input_path,

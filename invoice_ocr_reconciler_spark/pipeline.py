@@ -94,9 +94,10 @@ def extract_and_parse(
     and reuse. All three paths are byte-identical (tested).
 
     The fused path keeps its input's partitioning: it adds no exchange, so
-    a caller that already runs many inputs side by side (run_resumable's
-    bucket pool) pays no per-input shuffle. A caller whose single input may
-    be one scan split widens it first (run_pipeline does).
+    each run_resumable bucket pays no shuffle. A caller whose single input
+    may be one scan split widens it first (run_pipeline does). The
+    ``fused=False`` path still widens, inside extract_pages and
+    parse_invoice_fields, so its partitioning differs (its values do not).
 
     ``include_text=False`` drops ``extracted_text`` from the OUTPUT schema —
     a mapInArrow/mapInPandas node is opaque to Catalyst, so column pruning

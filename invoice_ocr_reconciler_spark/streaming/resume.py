@@ -111,6 +111,15 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def shuffle_pool_width(spark: SparkSession) -> int:
+    """Bucket pool width for transforms that shuffle inside each bucket.
+
+    Such a bucket already spreads over ``spark.sql.shuffle.partitions``
+    tasks, so half the cores' worth of buckets at a time keeps the
+    concurrent shuffles bounded (run_resumable's former default)."""
+    return max(2, spark.sparkContext.defaultParallelism // 2)
+
+
 def run_resumable(
     spark: SparkSession,
     input_path: str,
@@ -125,14 +134,17 @@ def run_resumable(
 
     Buckets are dispatched as CONCURRENT Spark jobs from a driver-side
     thread pool, ``max_concurrent`` wide (default: ``defaultParallelism``,
-    one bucket per core). The pool is the parallelism, so a transform need
-    not widen a bucket's partitioning (extract_and_parse does not, and pays
-    no per-bucket shuffle). Each pool thread inherits the caller's Spark local
-    properties (job group, description) and session tags, so a bucket's
-    jobs are attributed to the calling context.
+    one bucket per core). That default suits extract_and_parse, which adds
+    no exchange: each one-file bucket is one task, and the pool fills the
+    cores when at least as many buckets as cores are pending. Transforms
+    that shuffle inside every bucket (write_back_bucketed,
+    build_corpus_resumable) pass ``shuffle_pool_width`` instead. Each pool
+    thread inherits the caller's Spark local properties (job group,
+    description) and session tags, so a bucket's jobs are attributed to
+    the calling context.
 
-    With a narrow transform (extract_and_parse), a bucket costs two Spark
-    jobs: reading its input's parquet footer, and the write. The
+    With extract_and_parse, a bucket costs two Spark jobs: reading its
+    input's parquet footer, and the write. The
     manifest's ``rows``/``min_url``/``max_url`` come from an ``Observation``
     on the written frame, read after the write returns, so the committed
     output is never scanned again. Each bucket commits its manifest entry

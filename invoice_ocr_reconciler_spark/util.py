@@ -14,11 +14,10 @@ def with_scan_parallelism(df: DataFrame) -> DataFrame:
     (round-robin). At web scale the scan has thousands of file splits and this
     is a no-op.
 
-    The exchange is not cheap when many such frames run side by side: a
-    caller that already runs one small input per core (run_resumable's
-    bucket pool) would pay a shuffle per input for no added parallelism —
-    on 4 cores it tripled the executor time of per-bucket extraction. Widen
-    only a frame that is the cluster's single batch (run_pipeline does).
+    The exchange is not cheap when many such frames run side by side: under
+    run_resumable's bucket pool on 4 cores it tripled the executor time of
+    per-bucket extraction. So the fused extract_and_parse does not call it;
+    run_pipeline widens its pages before extraction instead.
 
     Values are partition-invariant everywhere this is used (pure per-row
     functions; pinned by the two-parallelism determinism tests).

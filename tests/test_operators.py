@@ -200,7 +200,7 @@ def _bucketed_pages(spark, path: str) -> list[int]:
 
 def test_resumable_buckets_inherit_job_group(spark, tmp_path):
     """Pool threads carry the caller's job group: every bucket's jobs are
-    attributed to it, two per bucket (input footer, write)."""
+    attributed to it."""
     import time
 
     from invoice_ocr_reconciler_spark.pipeline import extract_and_parse
@@ -228,7 +228,13 @@ def test_resumable_buckets_inherit_job_group(spark, tmp_path):
     while (len(sc.statusTracker().getJobIdsForGroup(group)) < 2 * len(buckets)
            and time.monotonic() < deadline):
         time.sleep(0.1)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 * len(buckets)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs >= len(buckets), f"{jobs} jobs in the caller's group for {len(buckets)} buckets"
+    # the per-bucket cost, separate from inheritance: Spark's parquet footer
+    # job on read plus the write job
+    assert jobs == 2 * len(buckets), (
+        f"job group inherited, but buckets cost {jobs / len(buckets):g} jobs each, not 2"
+    )
 
 
 def test_resumable_failure_contract(spark, tmp_path):
