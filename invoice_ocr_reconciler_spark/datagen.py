@@ -86,12 +86,6 @@ def invoice_number_for(i: int) -> str:
     return f"A{_h(f'invno:{i}') % 10_000_000:07d}"
 
 
-def invoice_total_for(i: int) -> float:
-    sub = _money(i, "subtotal")
-    tax = round(sub * 0.08, 2)
-    return round(sub + tax, 2)
-
-
 def _invoice_body(i: int) -> str:
     """Invoice-like text covering every parser regex branch by row index."""
     vendor = vendor_for(i)

@@ -14,7 +14,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 EXTRACTED_SCHEMA = T.StructType(
@@ -54,15 +53,8 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     Column-prunes to exactly the inputs the UDF needs before the Python
     boundary — never ship ``text`` (the hint column) or other metadata
     through Arrow when only (url, warc_ts, html, lang) are consumed.
+    Keeps its input's partitioning; a caller whose input may be one scan
+    split widens it first (``util.with_scan_parallelism``).
     """
-    from invoice_ocr_reconciler_spark.util import with_scan_parallelism
-
-    pruned = with_scan_parallelism(pages.select("url", "warc_ts", "html", "lang"))
+    pruned = pages.select("url", "warc_ts", "html", "lang")
     return pruned.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
-
-
-def with_extracted_text(pages: DataFrame) -> DataFrame:
-    """pages + extracted_text column, preserving other columns via join-free path."""
-    return extract_pages(pages).withColumn(
-        "doc_fingerprint", F.xxhash64(F.col("extracted_text"))
-    )

@@ -1,11 +1,5 @@
 from .parse_fields import parse_invoice_fields, parse_invoice_text, FIELDS_SCHEMA
 from .normalize import normalize_vendor_col, normalize_amount_col, vendor_block_key
-from .text import (
-    token_count_col,
-    quality_score_cols,
-    lang_id_cols,
-    fingerprint_col,
-)
 
 __all__ = [
     "parse_invoice_fields",
@@ -14,8 +8,4 @@ __all__ = [
     "normalize_vendor_col",
     "normalize_amount_col",
     "vendor_block_key",
-    "token_count_col",
-    "quality_score_cols",
-    "lang_id_cols",
-    "fingerprint_col",
 ]

@@ -292,21 +292,16 @@ def parse_scalar_fields(
                 out, columns=[f.name for f in SCALAR_SUBSET_SCHEMA.fields]
             )
 
-    from invoice_ocr_reconciler_spark.util import with_scan_parallelism
-
-    return with_scan_parallelism(frame.select(id_col, text_col)).mapInPandas(
-        gen, schema=SCALAR_SUBSET_SCHEMA
-    )
+    return frame.select(id_col, text_col).mapInPandas(gen, schema=SCALAR_SUBSET_SCHEMA)
 
 
 def parse_invoice_fields(extracted: DataFrame) -> DataFrame:
     """extracted(url, extracted_text, ...) -> one struct row per document.
 
     Vectorized over Arrow batches; all P1-P12 cascades in one Python pass
-    (one JVM<->Python crossing per batch, not per field).
+    (one JVM<->Python crossing per batch, not per field). Keeps its input's
+    partitioning, like extract_pages.
     """
-    from invoice_ocr_reconciler_spark.util import with_scan_parallelism
-
-    return with_scan_parallelism(extracted.select("url", "extracted_text")).mapInPandas(
+    return extracted.select("url", "extracted_text").mapInPandas(
         _parse_batches, schema=FIELDS_SCHEMA
     )

@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# roundn lives with the relational surface; re-exported for the text operators
+from invoice_ocr_reconciler_spark.plans.relational import roundn  # noqa: F401
+
 # per-language stopword markers for the n-gram/stopword heuristic language ID.
 # Word-bounded; chosen to be discriminative between the corpus languages.
 LANG_STOPWORDS = {
@@ -69,15 +72,6 @@ def md5_u60(col: Column) -> Column:
     than 32 bits but must fit BIGINT in both engines (DuckDB replay:
     ``('0x' || substr(md5(x), 1, 15))::UBIGINT``)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def roundn(x: Column, places: int) -> Column:
-    """Tie-free floor-half-up rounding: floor(x*10^p + 0.5)/10^p — pure
-    double ops, bit-identical across engines (ROUND() tie-breaking is not).
-    The single source of the cross-engine rounding contract every oracle
-    replays as floor(x * 1eP + 0.5) / 1eP."""
-    scale = float(10**places)
-    return F.floor(x * scale + F.lit(0.5)) / scale
 
 
 def _round4(x: Column) -> Column:

@@ -325,7 +325,7 @@ def build_corpus_resumable(
             manifest,
             clean_pages_bucket,
             fail_after=fail_after,
-            # latest_snapshot's window and extract_pages shuffle per bucket
+            # latest_snapshot's window shuffles in every bucket
             max_concurrent=shuffle_pool_width(spark),
         )
     if phase in ("finish", "all"):

@@ -12,11 +12,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from invoice_ocr_reconciler_spark.extraction.udfs import extract_pages
-from invoice_ocr_reconciler_spark.functions.parse_fields import (
-    FIELDS_SCHEMA,
-    parse_invoice_fields,
-)
+from invoice_ocr_reconciler_spark.functions.parse_fields import FIELDS_SCHEMA
 from invoice_ocr_reconciler_spark.operators.reconcile import reconcile
 from invoice_ocr_reconciler_spark.util import with_scan_parallelism
 
@@ -30,9 +26,10 @@ def _fields_schema(include_text: bool):
 
 
 def _extract_parse_rows(urls, htmls, include_text: bool) -> list[dict]:
-    # one Python crossing for both stages: the two-stage path ships the full
-    # extracted text JVM->Python->JVM->Python; fused, the text never leaves
-    # the worker between extraction and field parsing. Same pure functions,
+    # one Python crossing for both stages: composing extract_pages and
+    # parse_invoice_fields would ship the full extracted text
+    # JVM->Python->JVM->Python; fused, the text never leaves the worker
+    # between extraction and field parsing. Same pure functions,
     # byte-identical output (pinned by tests).
     from invoice_ocr_reconciler_spark.extraction.html_extract import extract_payload
     from invoice_ocr_reconciler_spark.functions.parse_fields import parse_invoice_text
@@ -83,21 +80,16 @@ def _make_extract_parse_batches(include_text: bool):
     return gen
 
 
-def extract_and_parse(
-    pages: DataFrame, fused: bool = True, include_text: bool = True
-) -> DataFrame:
+def extract_and_parse(pages: DataFrame, include_text: bool = True) -> DataFrame:
     """pages -> structured invoice rows (E1).
 
-    ``fused=True`` (default) runs extraction + field parsing in a single
-    Arrow-native crossing (mapInArrow); ``fused=False`` composes the
-    standalone operators (two crossings) — kept for operator-level testing
-    and reuse. All three paths are byte-identical (tested).
+    Runs extraction + field parsing in a single Arrow-native crossing
+    (mapInArrow). Its rows are byte-identical to composing the standalone
+    operators, ``parse_invoice_fields(extract_pages(pages))`` (tested).
 
-    The fused path keeps its input's partitioning: it adds no exchange, so
-    each run_resumable bucket pays no shuffle. A caller whose single input
-    may be one scan split widens it first (run_pipeline does). The
-    ``fused=False`` path still widens, inside extract_pages and
-    parse_invoice_fields, so its partitioning differs (its values do not).
+    It keeps its input's partitioning: it adds no exchange, so each
+    run_resumable bucket pays no shuffle. A caller whose single input may
+    be one scan split widens it first (run_pipeline does).
 
     ``include_text=False`` drops ``extracted_text`` from the OUTPUT schema —
     a mapInArrow/mapInPandas node is opaque to Catalyst, so column pruning
@@ -106,13 +98,9 @@ def extract_and_parse(
     row across the Arrow channel. The extracted-table write path (jobs/,
     byte-identity contract) keeps the default.
     """
-    if fused:
-        return pages.select("url", "html").mapInArrow(
-            _make_extract_parse_arrow(include_text), schema=_fields_schema(include_text)
-        )
-    extracted = extract_pages(pages)
-    out = parse_invoice_fields(extracted)
-    return out if include_text else out.drop("extracted_text")
+    return pages.select("url", "html").mapInArrow(
+        _make_extract_parse_arrow(include_text), schema=_fields_schema(include_text)
+    )
 
 
 def run_pipeline(

@@ -15,6 +15,15 @@ from pyspark.sql import functions as F
 from invoice_ocr_reconciler_spark.functions.normalize import normalize_vendor_col
 
 
+def roundn(x: Column, places: int) -> Column:
+    """Tie-free floor-half-up rounding: floor(x*10^p + 0.5)/10^p — pure
+    double ops, bit-identical across engines (ROUND() tie-breaking is not).
+    The single source of the cross-engine rounding contract every oracle
+    replays as floor(x * 1eP + 0.5) / 1eP."""
+    scale = float(10**places)
+    return F.floor(x * scale + F.lit(0.5)) / scale
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
@@ -317,8 +326,6 @@ def monthly_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, bounded error, no per-group sort. The exact version stays as the
     correctness oracle at test scale.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
-
     orders = load(spark, sf_dir, "orders")
     r4 = lambda c: roundn(c, 4)
     return (

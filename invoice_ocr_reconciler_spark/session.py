@@ -69,6 +69,17 @@ def shuffle_partitions_for_bytes(
     return max(int(min_parallelism), blocks, 1)
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical memory, at most 4g and at least 1g.
+
+    In local mode the driver JVM holds every executor thread, so its heap
+    must leave room for the Python workers and the OS; a runaway plan then
+    fails its own job with an OutOfMemoryError instead of growing the JVM
+    until the OS kills it. ``SPARK_GRAFT_DRIVER_MEM`` overrides this."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(4, total // (4 * 1024**3)))}g"
+
+
 def iceberg_confs(env: dict) -> dict[str, str]:
     """Iceberg catalog gate configs (empty when no jar is provided).
 
@@ -172,7 +183,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS_PER_BATCH),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

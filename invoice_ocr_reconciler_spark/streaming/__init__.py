@@ -1,12 +1,3 @@
 from .resume import CheckpointManifest, run_resumable
-from .ingest import read_pages_stream, start_extract_stream
-from .stateful import dedup_stream, host_window_counts
 
-__all__ = [
-    "CheckpointManifest",
-    "run_resumable",
-    "read_pages_stream",
-    "start_extract_stream",
-    "dedup_stream",
-    "host_window_counts",
-]
+__all__ = ["CheckpointManifest", "run_resumable"]

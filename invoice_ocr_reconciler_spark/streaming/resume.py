@@ -134,11 +134,12 @@ def run_resumable(
 
     Buckets are dispatched as CONCURRENT Spark jobs from a driver-side
     thread pool, ``max_concurrent`` wide (default: ``defaultParallelism``,
-    one bucket per core). That default suits extract_and_parse, which adds
-    no exchange: each one-file bucket is one task, and the pool fills the
-    cores when at least as many buckets as cores are pending. Transforms
-    that shuffle inside every bucket (write_back_bucketed,
-    build_corpus_resumable) pass ``shuffle_pool_width`` instead. Each pool
+    one bucket per core). That default suits extract_and_parse and
+    extract_pages, which add no exchange: each one-file bucket is one
+    task, and the pool fills the cores when at least as many buckets as
+    cores are pending. Transforms that shuffle inside every bucket
+    (write_back_bucketed's MERGE join, build_corpus_resumable's
+    latest-snapshot window) pass ``shuffle_pool_width`` instead. Each pool
     thread inherits the caller's Spark local properties (job group,
     description) and session tags, so a bucket's jobs are attributed to
     the calling context.

@@ -16,8 +16,10 @@ def with_scan_parallelism(df: DataFrame) -> DataFrame:
 
     The exchange is not cheap when many such frames run side by side: under
     run_resumable's bucket pool on 4 cores it tripled the executor time of
-    per-bucket extraction. So the fused extract_and_parse does not call it;
-    run_pipeline widens its pages before extraction instead.
+    per-bucket extraction. So only the caller decides: extract_and_parse,
+    extract_pages and parse_invoice_fields keep their input's partitioning,
+    and run_pipeline, whose single batch may be one file, widens its pages
+    before extraction.
 
     Values are partition-invariant everywhere this is used (pure per-row
     functions; pinned by the two-parallelism determinism tests).

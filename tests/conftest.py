@@ -1,4 +1,5 @@
 import pytest
+from pyspark.sql import SparkSession
 
 from invoice_ocr_reconciler_spark.session import get_spark
 
@@ -13,3 +14,15 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _release_cached_frames():
+    """Drop what a test module left persisted (reconcile, CC and the other
+    operators persist frames they never unpersist): the whole suite shares
+    one driver JVM, whose heap is sized to the box, and the cached blocks
+    and their plans would otherwise pile up in it module after module."""
+    yield
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()

@@ -16,7 +16,6 @@ from invoice_ocr_reconciler_spark.operators.events import (
     session_stats,
     sessionize,
 )
-from invoice_ocr_reconciler_spark.operators.tfidf import tfidf_top_terms
 from invoice_ocr_reconciler_spark.functions.pii import (
     pii_count_cols,
     redact_pii_col,
@@ -478,40 +477,6 @@ class TestPII:
         assert row["p"] == "unknown"
 
 
-class TestTfidf:
-    def test_scores_and_ranks(self, spark):
-        docs = spark.createDataFrame(
-            [(0, "cat cat dog"), (1, "dog fish"), (2, "fish fish fish")],
-            "doc_id long, text string",
-        )
-        rows = {
-            (r["doc_id"], r["term"]): (r["tf"], r["df"], r["term_rank"])
-            for r in tfidf_top_terms(docs, k=2).collect()
-        }
-        # cat: df=1 idf=ln(3); dog: df=2; fish: df=2
-        assert rows[(0, "cat")] == (2, 1, 1)
-        assert rows[(0, "dog")] == (1, 2, 2)
-        assert rows[(2, "fish")][2] == 1
-        assert (1, "fish") in rows and (1, "dog") in rows
-
-    def test_min_df_filter(self, spark):
-        docs = spark.createDataFrame(
-            [(0, "rare shared"), (1, "shared")], "doc_id long, text string"
-        )
-        out = tfidf_top_terms(docs, k=5, min_df=2)
-        assert {r["term"] for r in out.collect()} == {"shared"}
-
-    def test_broadcast_off_same_result(self, spark):
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        ).limit(100)
-        a = sorted(map(tuple, tfidf_top_terms(docs, k=3).collect()))
-        b = sorted(
-            map(tuple, tfidf_top_terms(docs, k=3, broadcast_vocab=False).collect())
-        )
-        assert a == b
-
-
 class TestExtractAnchors:
     def test_anchor_text_and_resolution(self, spark):
         from invoice_ocr_reconciler_spark.functions.urls import extract_anchors
@@ -593,62 +558,6 @@ class TestHostLinkGraph:
         assert abs(sum(r["rank"] for r in rows) - 1.0) < 1e-6
 
 
-class TestBM25:
-    def test_ranking_and_length_normalization(self, spark):
-        from invoice_ocr_reconciler_spark.operators.tfidf import bm25_search
-
-        filler = " ".join(f"pad{i}" for i in range(40))
-        docs = spark.createDataFrame(
-            [
-                (0, "cat dog"),                 # both terms, short
-                (1, "cat " + filler),           # one term, long
-                (2, "cat cat cat"),             # high tf, short
-                (3, "unrelated words only"),
-                (4, None),
-            ],
-            "doc_id long, text string",
-        )
-        rows = {r["doc_id"]: r.asDict()
-                for r in bm25_search(docs, ["CAT", "dog"], k=10).collect()}
-        # only matching docs are returned, query casing is normalized
-        assert sorted(rows) == [0, 1, 2]
-        assert rows[0]["n_matched"] == 2 and rows[1]["n_matched"] == 1
-        # doc 0 matches both terms: beats any single-term doc here
-        assert rows[0]["rank"] == 1
-        # same term set, shorter doc wins (length normalization):
-        assert rows[2]["score"] > rows[1]["score"]
-        ranks = sorted((r["rank"], i) for i, r in rows.items())
-        assert [i for _, i in ranks] == sorted(
-            rows, key=lambda i: (-rows[i]["score"], i)
-        )
-
-    def test_k_cut_ties_and_empty_query(self, spark):
-        from invoice_ocr_reconciler_spark.operators.tfidf import bm25_search
-
-        docs = spark.createDataFrame(
-            [(i, "same text here") for i in range(5)],
-            "doc_id long, text string",
-        )
-        out = bm25_search(docs, ["same"], k=3).collect()
-        # identical docs tie on score: id ascending breaks, k cuts
-        assert [(r["doc_id"], r["rank"]) for r in
-                sorted(out, key=lambda r: r["rank"])] == [(0, 1), (1, 2), (2, 3)]
-        assert bm25_search(docs, [], k=3).count() == 0
-        assert bm25_search(docs, ["absent"], k=3).count() == 0
-
-    def test_partition_invariant(self, spark):
-        from invoice_ocr_reconciler_spark.operators.tfidf import bm25_search
-
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        ).limit(200)
-        a = sorted(map(tuple, bm25_search(docs, ["merge", "scan"], k=15).collect()))
-        b = sorted(map(tuple,
-                       bm25_search(docs.repartition(9), ["merge", "scan"],
-                                   k=15).collect()))
-        assert a == b
-
-
 class TestCurationExactCC:
     def _chain_docs(self, spark):
         words = [f"w{i:03d}" for i in range(60)]
@@ -697,62 +606,6 @@ class TestCurationExactCC:
             s["n_exact_dup"] + s["n_filtered_out"] + s["n_near_dup"]
             + s["n_curated"] == s["n_input"]
         )
-
-
-class TestStreamingSessionWindows:
-    def test_matches_batch_sessionize(self, spark, tmp_path):
-        from invoice_ocr_reconciler_spark.operators.events import session_stats
-        from invoice_ocr_reconciler_spark.streaming.stateful import (
-            user_session_windows,
-        )
-
-        from pyspark.sql import Window
-
-        landing = str(tmp_path / "ev_landing")
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        # several micro-batches are needed for the watermark to advance and
-        # finalize sessions in append mode — but each batch must cover an
-        # INCREASING ts range (like a real time-ordered ingest): arbitrary
-        # file splits put events behind the watermark and they'd be dropped
-        sliced = ev.withColumn(
-            "slice", F.ntile(6).over(Window.orderBy("ts", "event_id"))
-        )
-        for i in range(1, 7):
-            sliced.filter(F.col("slice") == i).drop("slice").coalesce(
-                1
-            ).write.mode("append").parquet(landing)
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        ).option("maxFilesPerTrigger", 1).parquet(landing)
-        q = (
-            user_session_windows(stream, gap="30 minutes", watermark="1 minute")
-            .writeStream.format("memory")
-            .queryName("sess_win")
-            .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        emitted = spark.sql("SELECT * FROM sess_win").collect()
-        assert len(emitted) > 0
-        batch = {
-            (r["user_id"], str(r["session_start"])): (
-                r["n_events"],
-                r["value_sum"],
-            )
-            for r in session_stats(
-                spark.read.parquet(landing), gap_minutes=30
-            ).collect()
-        }
-        # every finalized streaming session must exist in the batch result
-        # with identical start/count/sum (ends differ by +gap by design)
-        for r in emitted:
-            key = (r["user_id"], str(r["session_start"]))
-            assert key in batch, key
-            assert batch[key] == (r["n_events"], r["value_sum"]), key
 
 
 class TestStratifiedSample:
@@ -851,58 +704,6 @@ class TestPercentile:
             F.percentile("x", 0.25).alias("p25"),
         ).collect()[0]
         assert row["p50"] == 2.5 and row["p25"] == 1.75
-
-
-class TestBloomSemiJoin:
-    def test_exactness_and_pruning(self, spark):
-        from invoice_ocr_reconciler_spark.operators.bloom import (
-            bloom_semi_join,
-            build_bloom_hex,
-            might_contain_col,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
-            "l_orderkey", "l_linenumber"
-        )
-        keys = (
-            spark.read.parquet(f"{sf}/orders.parquet")
-            .filter(F.col("o_orderstatus") == "P")
-            .select("o_orderkey")
-        )
-        got = sorted(
-            map(
-                tuple,
-                bloom_semi_join(
-                    li, keys, big_key="l_orderkey", keys_key="o_orderkey",
-                    m_bits=1 << 14,
-                ).collect(),
-            )
-        )
-        want = sorted(
-            map(
-                tuple,
-                li.join(
-                    keys.withColumnRenamed("o_orderkey", "l_orderkey"),
-                    "l_orderkey",
-                    "left_semi",
-                ).collect(),
-            )
-        )
-        assert got == want  # bloom never changes the result
-        # no false negatives: every true key passes the raw bloom probe
-        h = build_bloom_hex(keys, "o_orderkey", m_bits=1 << 14)
-        missed = (
-            keys.filter(
-                ~might_contain_col(F.col("o_orderkey"), h, m_bits=1 << 14)
-            ).count()
-        )
-        assert missed == 0
-        # and the probe actually prunes non-matching rows
-        kept = li.filter(
-            might_contain_col(F.col("l_orderkey"), h, m_bits=1 << 14)
-        ).count()
-        assert kept < li.count()
 
 
 class TestApplyCountDelta:
@@ -1025,79 +826,6 @@ class TestAsofTies:
         right = right.withColumnRenamed("(event_id + 1)", "event_id")
         out = asof_join(left, right, right_cols=("event_id", "value")).collect()[0]
         assert out["asof_event_id"] == 2 and out["asof_value"] == 9.0
-
-
-class TestInvertedIndex:
-    def test_postings_cap_and_df(self, spark):
-        from invoice_ocr_reconciler_spark.operators.tfidf import inverted_index
-
-        docs = spark.createDataFrame(
-            [(i, "common " + ("rare" if i == 7 else "word")) for i in range(9)],
-            "doc_id long, text string",
-        )
-        rows = {r["term"]: r for r in inverted_index(docs, max_postings=3).collect()}
-        assert rows["common"]["df"] == 9                  # true df uncapped
-        assert rows["common"]["postings"] == "0,1,2"      # capped ascending
-        assert rows["rare"]["df"] == 1 and rows["rare"]["postings"] == "7"
-        assert rows["word"]["df"] == 8
-
-
-class TestLocalClusterExecutors:
-    def test_pipeline_parity_on_separate_executor_jvms(self):
-        """The full pipeline on local-cluster (2 executor PROCESSES, own
-        JVM + Python workers each) must produce the exact golden status
-        counts — the in-sandbox stand-in for multi-executor correctness.
-        Runs in a subprocess: the suite's session owns the in-process
-        master, and local-cluster needs its own."""
-        import json
-        import subprocess
-        import sys
-
-        code = """
-import json
-from invoice_ocr_reconciler_spark.session import get_spark
-from invoice_ocr_reconciler_spark import datagen
-from invoice_ocr_reconciler_spark.pipeline import run_pipeline
-spark = get_spark(app_name="lc-test", cores=2, executors=2,
-                  executor_mem_mb=2048, shuffle_partitions=8,
-                  extra_conf={"spark.ui.showConsoleProgress": "false"})
-out = run_pipeline(datagen.pages_df(spark, 500), datagen.ledger_df(spark, 60, 500))
-counts = {r["match_status"]: r["count"]
-          for r in out["results"].groupBy("match_status").count().collect()}
-print("RESULT:" + json.dumps(counts, sort_keys=True))
-spark.stop()
-"""
-        proc = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True, text=True, timeout=420,
-            cwd="/root/repo",
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT:")][0]
-        counts = json.loads(line[len("RESULT:"):])
-        assert counts == {
-            "duplicate": 49, "matched": 25, "mismatch": 29, "missing": 397,
-        }
-
-
-class TestInvertedIndexBounded:
-    def test_hot_term_group_is_capped_before_collect(self, spark):
-        # a term in EVERY doc must still produce a bounded posting row
-        from invoice_ocr_reconciler_spark.operators.tfidf import inverted_index
-
-        docs = spark.createDataFrame(
-            [(i, f"everywhere unique{i}") for i in range(5000)],
-            "doc_id long, text string",
-        )
-        rows = {
-            r["term"]: r
-            for r in inverted_index(docs, max_postings=10)
-            .filter(F.col("term") == "everywhere")
-            .collect()
-        }
-        r = rows["everywhere"]
-        assert r["df"] == 5000
-        assert r["postings"] == ",".join(str(i) for i in range(10))
 
 
 class TestCCDurableCheckpoint:
@@ -1225,26 +953,6 @@ class TestDegenerateInputs:
         right = ev.select("user_id", "ts", "event_id", "value")
         assert asof_join(ev, right, right_cols=("event_id", "value")).count() == 0
 
-    def test_empty_docs(self, spark):
-        from invoice_ocr_reconciler_spark.operators.chunking import (
-            chunk_documents,
-            pack_sequences,
-        )
-        from invoice_ocr_reconciler_spark.operators.sampling import (
-            stratified_sample,
-        )
-        from invoice_ocr_reconciler_spark.operators.tfidf import (
-            inverted_index,
-            tfidf_top_terms,
-        )
-
-        docs = spark.createDataFrame([], "doc_id long, text string")
-        assert tfidf_top_terms(docs, k=3).count() == 0
-        assert inverted_index(docs).count() == 0
-        assert chunk_documents(docs).count() == 0
-        assert stratified_sample(docs, rates={"en": 50}, strata_col="text").count() == 0
-        with_tokens = spark.createDataFrame([], "doc_id long, n_tokens int")
-        assert pack_sequences(with_tokens).count() == 0
 
     def test_empty_diff_and_counts(self, spark):
         from invoice_ocr_reconciler_spark.operators.diff import (
@@ -1262,12 +970,6 @@ class TestDegenerateInputs:
         ec = spark.createDataFrame([], "key string, n long")
         assert apply_count_delta(ec, ec).count() == 0
 
-    def test_empty_bloom_keys(self, spark):
-        from invoice_ocr_reconciler_spark.operators.bloom import bloom_semi_join
-
-        big = spark.createDataFrame([(1, "x")], "k long, v string")
-        keys = spark.createDataFrame([], "k long")
-        assert bloom_semi_join(big, keys, big_key="k", m_bits=1 << 10).count() == 0
 
     def test_empty_curation_extended(self, spark):
         from invoice_ocr_reconciler_spark.operators.curation import curate_documents
@@ -1298,44 +1000,6 @@ class TestReviewRegressions:
         assert out["asof_event_id"] == 20
         assert out["asof_value"] is None
 
-    def test_bloom_cross_type_keys(self, spark):
-        from invoice_ocr_reconciler_spark.operators.bloom import bloom_semi_join
-
-        big = spark.createDataFrame(
-            [(i, f"v{i}") for i in range(10)], "k int, v string"
-        )
-        keys = spark.createDataFrame([(3,), (7,)], "j long")
-        got = sorted(
-            r["k"]
-            for r in bloom_semi_join(
-                big, keys, big_key="k", keys_key="j", m_bits=1 << 10
-            ).collect()
-        )
-        assert got == [3, 7]
-
-    def test_bloom_int_vs_double_keys_match_semi_join(self, spark):
-        # regression: int 5 stringifies '5', double 5.0 stringifies '5.0';
-        # the pre-filter must normalize through the join's own coercion or
-        # it drops rows the exact semi join WOULD match
-        from invoice_ocr_reconciler_spark.operators.bloom import bloom_semi_join
-
-        big = spark.createDataFrame(
-            [(float(i), f"v{i}") for i in range(10)], "k double, v string"
-        )
-        keys = spark.createDataFrame([(3,), (7,)], "j int")
-        got = sorted(
-            r["k"]
-            for r in bloom_semi_join(
-                big, keys, big_key="k", keys_key="j", m_bits=1 << 10
-            ).collect()
-        )
-        assert got == [3.0, 7.0]
-        # un-coercible mixes fail loudly instead of silently dropping rows
-        import pytest
-
-        skeys = spark.createDataFrame([("3",)], "j string")
-        with pytest.raises(TypeError, match="do not string-normalize"):
-            bloom_semi_join(big, skeys, big_key="k", keys_key="j")
 
     def test_snapshot_diff_null_fingerprint_is_presence(self, spark):
         # regression: presence was inferred from fp nullness, so a row
@@ -1370,18 +1034,6 @@ class TestReviewRegressions:
         with pytest.raises(ValueError, match="negative count"):
             apply_count_delta(old, twice, check_nonnegative=True)
 
-    def test_bloom_odd_m_bits(self, spark):
-        from invoice_ocr_reconciler_spark.operators.bloom import (
-            build_bloom_hex,
-            might_contain_col,
-        )
-
-        keys = spark.createDataFrame([(i,) for i in range(431)], "k long")
-        h = build_bloom_hex(keys, "k", m_bits=4310)  # not a multiple of 8
-        missed = keys.filter(
-            ~might_contain_col(F.col("k"), h, m_bits=4310)
-        ).count()
-        assert missed == 0
 
     def test_chunk_rejects_gappy_stride(self, spark):
         from invoice_ocr_reconciler_spark.operators.chunking import chunk_documents
@@ -2018,83 +1670,7 @@ def _psdocs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_phrase_search_consecutive_in_order_only(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import phrase_search
-
-    got = {
-        r["doc_id"]: (r["n_matches"], r["first_pos"])
-        for r in phrase_search(_psdocs(spark), ["merge", "stream"]).collect()
-    }
-    assert got == {1: (2, 1), 4: (1, 0)}
-
-
-def test_phrase_search_three_terms_and_duplicate_term(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import phrase_search
-
-    rows = [
-        (1, "the data the end"),
-        (2, "the data data the"),
-        (3, "data the data"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_matches"], r["first_pos"])
-        for r in phrase_search(df, ["the", "data", "the"]).collect()
-    }
-    assert got == {1: (1, 0)}
-
-
-def test_phrase_search_single_term_counts_occurrences(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import phrase_search
-
-    got = {
-        r["doc_id"]: (r["n_matches"], r["first_pos"])
-        for r in phrase_search(_psdocs(spark), ["merge"]).collect()
-    }
-    assert got[1] == (2, 1) and got[6] == (1, 0)
-
-
-def test_phrase_search_empty_phrase_raises(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import phrase_search
-
-    with pytest.raises(ValueError):
-        phrase_search(_psdocs(spark), [])
-
-
 # ---------------------------------------------------------- PRF expand
-
-
-def test_prf_expand_ranks_feedback_terms_and_excludes_query(spark):
-    """Feedback set = bm25 top-k for 'query'; expansion ranks co-occurring
-    terms by tf/df ppm — 'rare' (df=2, both in feedback) beats 'common'
-    (df=4, diluted by non-feedback docs); query terms never appear."""
-    from invoice_ocr_reconciler_spark.operators.tfidf import prf_expand
-
-    rows = [
-        (1, "query rare common"),
-        (2, "query rare common"),
-        (3, "other common filler"),
-        (4, "other common filler"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = prf_expand(df, ["query"], fb_k=2, n_expansion=5).collect()
-    terms = [r["term"] for r in out]
-    assert "query" not in terms
-    byt = {r["term"]: r for r in out}
-    assert byt["rare"]["score_ppm"] == 1_000_000  # tf 2 / df 2
-    assert byt["common"]["score_ppm"] == 500_000  # tf 2 / df 4
-    assert terms[0] == "rare"
-    assert byt["rare"]["fb_docs"] == 2
-
-
-def test_prf_expand_n_expansion_cut_and_rank_ties(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import prf_expand
-
-    rows = [(1, "q aa bb cc"), (2, "q aa bb cc")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = prf_expand(df, ["q"], fb_k=2, n_expansion=2).collect()
-    # identical scores -> tie broken by term asc, cut at 2
-    assert [r["term"] for r in sorted(out, key=lambda r: r["exp_rank"])] == ["aa", "bb"]
 
 
 # ------------------------------------------------------ takedown closure

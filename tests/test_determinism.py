@@ -44,14 +44,18 @@ def test_identical_output_across_partitioning(spark):
 
 def test_fused_paths_byte_identical(spark):
     """mapInArrow fused == mapInPandas fused == two-stage composition."""
+    from invoice_ocr_reconciler_spark.extraction.udfs import extract_pages
+    from invoice_ocr_reconciler_spark.functions.parse_fields import (
+        FIELDS_SCHEMA,
+        parse_invoice_fields,
+    )
     from invoice_ocr_reconciler_spark.pipeline import (
         _make_extract_parse_batches,
         extract_and_parse,
     )
-    from invoice_ocr_reconciler_spark.functions.parse_fields import FIELDS_SCHEMA
 
     pages = datagen.pages_df(spark, 200)
-    arrow = sorted(map(str, extract_and_parse(pages, fused=True).collect()))
+    arrow = sorted(map(str, extract_and_parse(pages).collect()))
     pandas_fused = sorted(
         map(
             str,
@@ -60,12 +64,12 @@ def test_fused_paths_byte_identical(spark):
             .collect(),
         )
     )
-    two_stage = sorted(map(str, extract_and_parse(pages, fused=False).collect()))
+    two_stage = sorted(map(str, parse_invoice_fields(extract_pages(pages)).collect()))
     assert arrow == pandas_fused == two_stage
     # text-free output == text-bearing output minus the text column
     slim = sorted(map(str, extract_and_parse(pages, include_text=False).collect()))
     slim_ref = sorted(
-        map(str, extract_and_parse(pages, fused=True).drop("extracted_text").collect())
+        map(str, extract_and_parse(pages).drop("extracted_text").collect())
     )
     assert slim == slim_ref
 
@@ -87,6 +91,28 @@ def test_scan_widened_by_run_pipeline_not_extract_and_parse(spark, tmp_path):
 
     out = run_pipeline(pages, datagen.ledger_df(spark, 10, 60))
     assert out["invoices"].rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def test_extract_pages_and_parse_fields_keep_partitioning(spark, tmp_path):
+    """The standalone operators add no exchange either: only the caller
+    decides whether a scan is widened (run_pipeline does)."""
+    from invoice_ocr_reconciler_spark.extraction.udfs import extract_pages
+    from invoice_ocr_reconciler_spark.functions.parse_fields import (
+        parse_invoice_fields,
+    )
+
+    path = str(tmp_path / "pages")
+    datagen.pages_df(spark, 60).coalesce(1).write.parquet(path)
+    pages = spark.read.parquet(path)
+    assert pages.rdd.getNumPartitions() == 1
+
+    for frame in (extract_pages(pages), parse_invoice_fields(extract_pages(pages))):
+        assert frame.rdd.getNumPartitions() == 1
+        assert "Exchange" not in frame._jdf.queryExecution().executedPlan().toString()
+
+    wide = datagen.pages_df(spark, 60, partitions=5)
+    assert extract_pages(wide).rdd.getNumPartitions() == 5
+    assert parse_invoice_fields(extract_pages(wide)).rdd.getNumPartitions() == 5
 
 
 def test_curation_identical_across_partitioning(spark):
@@ -133,40 +159,40 @@ def test_mutation_identical_across_partitioning(spark):
     assert run(2) == run(13)
 
 
-def test_linkage_band_identical_across_partitioning(spark):
-    """FS linkage, setjoin, containment, and collocations are pure
-    DataFrame algebra — identical sorted output regardless of input
-    partitioning / shuffle width."""
-    import random
+class TestLocalClusterExecutors:
+    def test_pipeline_parity_on_separate_executor_jvms(self):
+        """The full pipeline on local-cluster (2 executor PROCESSES, own
+        JVM + Python workers each) must produce the exact golden status
+        counts — the in-sandbox stand-in for multi-executor correctness.
+        Runs in a subprocess: the suite's session owns the in-process
+        master, and local-cluster needs its own."""
+        import json
+        import os
+        import subprocess
+        import sys
 
-    from invoice_ocr_reconciler_spark.operators.linkage import (
-        FieldSpec,
-        fs_linkage,
-    )
-    from invoice_ocr_reconciler_spark.operators.setjoin import (
-        containment_join,
-        prefix_filtered_jaccard_join,
-    )
-    from invoice_ocr_reconciler_spark.operators.tfidf import collocations
-
-    rng = random.Random(3)
-    vocab = [f"w{i}" for i in range(25)]
-    docs = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(6, 30))))
-        for i in range(120)
-    ]
-    fields = [FieldSpec("name", 0.9, 0.01)]
-    people = [(i, i % 7, f"p{i % 40}") for i in range(120)]
-
-    def run(parts):
-        d = spark.createDataFrame(docs, "doc_id int, text string").repartition(parts)
-        a = spark.createDataFrame(people, "id_a int, block int, a_name string").repartition(parts)
-        b = spark.createDataFrame(people, "id_b int, block int, b_name string").repartition(parts)
-        return (
-            sorted(map(tuple, fs_linkage(a, b, fields=fields, lower=-10.0, upper=5.0, keep_non_matches=True).collect())),
-            sorted(map(tuple, prefix_filtered_jaccard_join(d, tau_num=1, tau_den=2).collect())),
-            sorted(map(tuple, containment_join(d, tau_num=4, tau_den=5).collect())),
-            [tuple(r) for r in collocations(d, min_count=2, k=20).collect()],
+        code = """
+import json
+from invoice_ocr_reconciler_spark.session import get_spark
+from invoice_ocr_reconciler_spark import datagen
+from invoice_ocr_reconciler_spark.pipeline import run_pipeline
+spark = get_spark(app_name="lc-test", cores=2, executors=2,
+                  executor_mem_mb=2048, shuffle_partitions=8,
+                  extra_conf={"spark.ui.showConsoleProgress": "false"})
+out = run_pipeline(datagen.pages_df(spark, 500), datagen.ledger_df(spark, 60, 500))
+counts = {r["match_status"]: r["count"]
+          for r in out["results"].groupBy("match_status").count().collect()}
+print("RESULT:" + json.dumps(counts, sort_keys=True))
+spark.stop()
+"""
+        proc = subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True, text=True, timeout=420,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
-
-    assert run(2) == run(11)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT:")][0]
+        counts = json.loads(line[len("RESULT:"):])
+        assert counts == {
+            "duplicate": 49, "matched": 25, "mismatch": 29, "missing": 397,
+        }

@@ -40,9 +40,8 @@ def test_first_window_is_representative():
     for rep in ("stats_overview", "fuzzy_block_join", "dedup_exact",
                 "ann_brute_force", "token_count", "upsert_table",
                 "register_csv_scan", "token_budget", "pagerank",
-                "good_turing", "record_linkage_fs", "bm25_search",
-                "funnel_users", "benford", "ir_metrics",
-                "multimodal_features", "exact_span_profile"):
+                "good_turing", "funnel_users", "benford", "ir_metrics",
+                "multimodal_features"):
         assert rep in green, f"band representative {rep} missing from window"
 
 

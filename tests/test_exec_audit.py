@@ -23,16 +23,13 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SUBSET = [
-    "setjoin_prefix",
-    "containment_pairs",
     "skew_salted_agg",
-    "record_linkage_fs",
-    "collocations",
-    "k_core",
-    "pool_embeddings",
-    "sessionize",
     "dedup_exact",
-    "bm25f_search",
+    "scc",
+    "anti_join_missing",
+    "left_join_enrich",
+    "inner_join_agg",
+    "amount_tolerance_join",
 ]
 
 

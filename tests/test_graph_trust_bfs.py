@@ -90,40 +90,6 @@ def test_bfs_distance_cycle_terminates(spark):
 # ---------------------------------------------------------- cooccurrence
 
 
-def test_cooccurrence_hand_counts(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import cooccurrence
-
-    docs = spark.createDataFrame(
-        [(1, "a b a")], "doc_id long, text string"
-    )
-    # pairs (window 4, scale 12): d=1: (a,b)x2 wt 12; d=2: (a,a) wt 6
-    rows = {(r["w1"], r["w2"]): r for r in cooccurrence(docs).collect()}
-    assert rows[("a", "b")]["weight_lcm"] == 24
-    assert rows[("a", "b")]["n_pairs"] == 2
-    assert rows[("a", "a")]["weight_lcm"] == 6
-
-
-def test_cooccurrence_window_clip_and_short_docs(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import cooccurrence
-
-    docs = spark.createDataFrame(
-        [(1, "x y"), (2, "z"), (3, None), (4, "")],
-        "doc_id long, text string",
-    )
-    rows = {(r["w1"], r["w2"]): r["weight_lcm"] for r in cooccurrence(docs).collect()}
-    assert rows == {("x", "y"): 12}  # singletons/empties contribute nothing
-
-
-def test_cooccurrence_symmetry_canonicalization(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import cooccurrence
-
-    docs = spark.createDataFrame(
-        [(1, "b a"), (2, "a b")], "doc_id long, text string"
-    )
-    out = cooccurrence(docs).collect()
-    assert len(out) == 1 and out[0]["w1"] == "a" and out[0]["weight_lcm"] == 24
-
-
 # --------------------------------------------------------- extraction_f1
 
 
@@ -180,15 +146,3 @@ def test_extraction_f1_duplicate_ids_pool_to_one_row(spark):
     assert (r1["n_pred"], r1["n_gold"], r1["n_inter"]) == (3, 3, 3)
     s = extraction_f1_summary(extraction_f1(pairs)).collect()[0]
     assert s["n_docs"] == 2 and s["t_pred"] == 4
-
-
-def test_cooccurrence_max_tokens_cap(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import cooccurrence
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f")], "doc_id long, text string"
-    )
-    # cap at 3 tokens: only pairs within "a b c" survive
-    rows = {(r["w1"], r["w2"]) for r in
-            cooccurrence(docs, max_tokens=3).collect()}
-    assert rows == {("a", "b"), ("b", "c"), ("a", "c")}

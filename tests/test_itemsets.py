@@ -2,10 +2,6 @@
 and SCC condensation (operators/graph.py:condensation)."""
 
 from invoice_ocr_reconciler_spark.operators.graph import condensation, scc
-from invoice_ocr_reconciler_spark.operators.itemsets import (
-    association_rules,
-    frequent_pairs,
-)
 
 
 def _docs(spark, texts):
@@ -21,49 +17,6 @@ CORPUS = [
     "milk tea",
     "tea butter",
 ]
-
-
-def test_frequent_pairs_hand_computed(spark):
-    out = frequent_pairs(_docs(spark, CORPUS), min_support=2).collect()
-    got = {(r.t1, r.t2): r for r in out}
-    # supports: milk 4, bread 3, butter 2, tea 2; n_docs 5
-    # pairs >= 2: (bread, milk) 3
-    assert set(got) == {("bread", "milk")}
-    r = got[("bread", "milk")]
-    assert (r.supp_ab, r.supp_a, r.supp_b) == (3, 3, 4)
-    assert r.conf_a_b == 1.0          # bread -> milk always
-    assert r.conf_b_a == 0.75         # milk -> bread 3/4
-    assert r.lift == 1.25             # 3*5/(3*4)
-
-
-def test_pairs_are_set_based_not_positional(spark):
-    # duplicates inside a doc count once; non-adjacent terms still pair
-    out = frequent_pairs(
-        _docs(spark, ["a x a y a", "a q y"]), min_support=2
-    ).collect()
-    got = {(r.t1, r.t2): r.supp_ab for r in out}
-    assert got == {("a", "y"): 2}
-
-
-def test_max_items_cap_drops_mega_basket(spark):
-    wide = " ".join(f"w{i}" for i in range(10))
-    out = frequent_pairs(
-        _docs(spark, [wide, wide]), min_support=2, max_items=5
-    )
-    assert out.count() == 0  # both baskets capped away, no pairs
-
-
-def test_association_rules_direction_and_threshold(spark):
-    pairs = frequent_pairs(_docs(spark, CORPUS), min_support=2)
-    rules = association_rules(pairs, min_conf=0.8).collect()
-    assert [(r.antecedent, r.consequent, r.conf) for r in rules] == [
-        ("bread", "milk", 1.0)
-    ]
-    both = association_rules(pairs, min_conf=0.5).collect()
-    assert {(r.antecedent, r.consequent) for r in both} == {
-        ("bread", "milk"),
-        ("milk", "bread"),
-    }
 
 
 def test_condensation_collapses_scc_edges(spark):

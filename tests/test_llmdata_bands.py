@@ -7,10 +7,6 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from invoice_ocr_reconciler_spark.operators.labelqa import (
-    cohen_kappa_pairs,
-    fleiss_kappa,
-)
 from invoice_ocr_reconciler_spark.operators.preference import (
     bt_strengths,
     bt_strengths_reference,
@@ -20,8 +16,6 @@ from invoice_ocr_reconciler_spark.operators.profile import (
     ngram_diversity,
 )
 from invoice_ocr_reconciler_spark.operators.sampling import temperature_sampling
-from invoice_ocr_reconciler_spark.operators.sft import validate_conversations
-from invoice_ocr_reconciler_spark.operators.tfidf import class_tfidf_topics
 
 
 # --- Bradley-Terry ---------------------------------------------------------
@@ -68,40 +62,6 @@ def _labels(spark, rows):
     )
 
 
-def test_cohen_hand_example(spark):
-    # a=[x,x,y,y], b=[x,x,y,x]: po=3/4, sum a_k*b_k = 2*3+2*1 = 8,
-    # kappa = (4*3-8)/(16-8) = 0.5
-    rows = [
-        (1, "a", "x"), (2, "a", "x"), (3, "a", "y"), (4, "a", "y"),
-        (1, "b", "x"), (2, "b", "x"), (3, "b", "y"), (4, "b", "x"),
-    ]
-    r = cohen_kappa_pairs(_labels(spark, rows)).collect()[0]
-    assert (r.n_items, r.agree, r.kappa_num, r.kappa_den) == (4, 3, 4, 8)
-    assert r.po == 0.75 and r.pe == 0.5 and r.kappa == 0.5
-
-
-def test_cohen_perfect_and_degenerate(spark):
-    # identical raters over 2 labels -> kappa 1
-    rows = []
-    for i in range(10):
-        lab = "x" if i % 2 else "y"
-        rows += [(i, "a", lab), (i, "b", lab)]
-    r = cohen_kappa_pairs(_labels(spark, rows)).collect()[0]
-    assert r.kappa == 1.0
-    # single shared label everywhere -> pe = 1 -> kappa NULL
-    rows = [(i, r_, "x") for i in range(5) for r_ in ("a", "b")]
-    r = cohen_kappa_pairs(_labels(spark, rows)).collect()[0]
-    assert r.kappa_den == 0 and r.kappa is None
-
-
-def test_cohen_pairs_only_corated(spark):
-    # rater c rates a disjoint item set -> pairs with c have no rows
-    rows = [(1, "a", "x"), (1, "b", "x"), (99, "c", "y")]
-    pairs = {(r.rater_a, r.rater_b) for r in
-             cohen_kappa_pairs(_labels(spark, rows)).collect()}
-    assert pairs == {("a", "b")}
-
-
 def _fleiss_py(items):
     # items: list of per-item category-count dicts (constant R assumed)
     R = sum(next(iter(items)).values()) if items else 0
@@ -116,33 +76,6 @@ def _fleiss_py(items):
     num = po_num * pe_den - pe_num * po_den
     den = po_den * (pe_den - pe_num)
     return num / den
-
-
-def test_fleiss_matches_python(spark):
-    rows, items = [], []
-    import hashlib
-
-    def h(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    for i in range(30):
-        counts = {}
-        for r_ in ("a", "b", "c"):
-            lab = ["x", "y", "z"][h(f"{r_}:{i}") % 3]
-            counts[lab] = counts.get(lab, 0) + 1
-            rows.append((i, r_, lab))
-        items.append(counts)
-    out = fleiss_kappa(_labels(spark, rows), n_raters=3).collect()[0]
-    expect = _fleiss_py(items)
-    assert abs(out.kappa - expect) < 1e-9
-    assert out.n_items == 30
-
-
-def test_fleiss_drops_incomplete_items(spark):
-    rows = [(1, "a", "x"), (1, "b", "x"), (1, "c", "x"),
-            (2, "a", "x"), (2, "b", "x")]  # item 2 has only 2 ratings
-    out = fleiss_kappa(_labels(spark, rows), n_raters=3).collect()[0]
-    assert out.n_items == 1
 
 
 # --- temperature sampling ---------------------------------------------------
@@ -258,30 +191,6 @@ def test_bootstrap_empty(spark):
 # --- class TF-IDF topics -----------------------------------------------------
 
 
-def test_cluster_topics_distinctive_terms_win(spark):
-    rows = [(i, "en" if i % 2 else "de",
-             ("apple banana " * 4 if i % 2 else "kirsche apfel " * 4)
-             + "common words here")
-            for i in range(20)]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    out = class_tfidf_topics(docs, top_k=2)
-    top = {(r.group, r.rnk): r.term for r in out.collect()}
-    assert top[("en", 1)] in ("apple", "banana")
-    assert top[("de", 1)] in ("apfel", "kirsche")
-    # shared terms never beat class-exclusive ones
-    assert "common" not in top.values()
-
-
-def test_cluster_topics_min_tf_and_topk(spark):
-    rows = [(1, "en", "rare word"), (2, "en", "alpha beta alpha beta "
-            "alpha beta gamma gamma gamma delta")]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    out = class_tfidf_topics(docs, top_k=2, min_class_tf=3).collect()
-    terms = {r.term for r in out}
-    assert "rare" not in terms and len(out) <= 2
-    assert all(r.tf_class >= 3 for r in out)
-
-
 # --- SFT conversation validation ---------------------------------------------
 
 CASES = [
@@ -299,44 +208,3 @@ CASES = [
      "late_system"),
     (10, [("user", "a"), ("assistant", None)], "empty_turn"),
 ]
-
-
-def test_validate_conversations_matrix(spark):
-    cdf = spark.createDataFrame(
-        [(i, t) for i, t, _ in CASES],
-        "conv_id long, turns array<struct<role:string,content:string>>",
-    )
-    out = {r.conv_id: r for r in validate_conversations(cdf).collect()}
-    for i, turns, expect in CASES:
-        r = out[i]
-        assert r.first_violation == expect, (i, r)
-        assert r.valid == (expect is None)
-        assert r.n_turns == len(turns)
-
-
-def test_validate_conversations_total_over_nulls(spark):
-    # NULL role folds to '' (bad_role), NULL turns folds to empty_conv —
-    # three-valued logic must never leak NULL into valid/first_violation
-    cdf = spark.createDataFrame(
-        [
-            (1, [("user", "hi"), (None, "x"), ("assistant", "ok")]),
-            (2, None),
-        ],
-        "conv_id long, turns array<struct<role:string,content:string>>",
-    )
-    out = {r.conv_id: r for r in validate_conversations(cdf).collect()}
-    assert out[1].valid is False and out[1].bad_role
-    assert out[1].first_violation == "bad_role"
-    assert out[2].valid is False and out[2].n_turns == 0
-    assert out[2].first_violation == "empty_conv"
-
-
-def test_validate_conversations_flag_independence(spark):
-    # one conversation tripping several flags: precedence picks the first
-    cdf = spark.createDataFrame(
-        [(1, [("assistant", ""), ("assistant", "x"), ("user", "y")])],
-        "conv_id long, turns array<struct<role:string,content:string>>",
-    )
-    r = validate_conversations(cdf).collect()[0]
-    assert r.bad_start and r.repeated_role and r.empty_turn and r.bad_end
-    assert r.first_violation == "bad_start"

@@ -335,44 +335,3 @@ def test_manifest_df_lists_sessions(spark, tmp_path):
     # recency-style listing: order + limit are plain DataFrame ops
     top = df.orderBy(F.desc("wall_ms")).limit(2).collect()
     assert len(top) == 2
-
-
-def test_streaming_writeback_compounds_across_batches(spark, tmp_path):
-    """foreachBatch MERGE write-back: each drained batch of reconciliation
-    results updates the invoices table from its CURRENT state, and a second
-    drain (same checkpoint) compounds on the first — the streaming analog of
-    the reference's per-result UPDATE loop."""
-    import json as _json
-
-    from invoice_ocr_reconciler_spark.streaming.ingest import start_writeback_stream
-
-    tmp = str(tmp_path)
-    table = os.path.join(tmp, "table")
-    landing = os.path.join(tmp, "landing")
-    out = os.path.join(tmp, "out")
-    ckpt = os.path.join(tmp, "ckpt")
-    os.makedirs(landing)
-
-    spark.createDataFrame(
-        [Row(url=f"u{i}", status="pending", amount=float(i)) for i in range(20)]
-    ).write.parquet(table)
-    schema = "invoice_url string, match_status string"
-
-    with open(os.path.join(landing, "r1.json"), "w") as fh:
-        for i in range(5):
-            fh.write(_json.dumps({"invoice_url": f"u{i}", "match_status": "matched"}) + "\n")
-    q = start_writeback_stream(spark, landing, schema, table, out, ckpt)
-    q.awaitTermination(120)
-    got = {r["url"]: r["status"] for r in spark.read.parquet(out).collect()}
-    assert sum(1 for s in got.values() if s == "matched") == 5
-    assert sum(1 for s in got.values() if s == "pending") == 15
-
-    with open(os.path.join(landing, "r2.json"), "w") as fh:
-        for i in range(5, 8):
-            fh.write(_json.dumps({"invoice_url": f"u{i}", "match_status": "mismatch"}) + "\n")
-    q2 = start_writeback_stream(spark, landing, schema, table, out, ckpt)
-    q2.awaitTermination(120)
-    got = {r["url"]: r["status"] for r in spark.read.parquet(out).collect()}
-    assert sum(1 for s in got.values() if s == "matched") == 5  # batch 1 kept
-    assert sum(1 for s in got.values() if s == "mismatch") == 3
-    assert sum(1 for s in got.values() if s == "pending") == 12

@@ -60,16 +60,6 @@ def test_stratified_sample_no_shuffle(spark):
     assert _exchanges(df) == 0
 
 
-def test_tfidf_vocab_broadcast(spark):
-    from invoice_ocr_reconciler_spark.operators.tfidf import tfidf_top_terms
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = _plan(tfidf_top_terms(docs, k=3))
-    # the df join must be a broadcast hash join, never a shuffle of the
-    # exploded (big) side on the skewed term key
-    assert "BroadcastHashJoin" in p
-
-
 def test_status_filter_scan_pushdown_and_pruning(spark):
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     df = orders.filter(F.col("o_orderstatus").isin("O", "P")).select(
@@ -91,95 +81,6 @@ def test_label_centroids_single_agg_exchange(spark):
     # one exchange for the (label, dim) agg; partial aggregation map-side
     assert _exchanges(df) == 1
     assert "partial_" in _plan(df).lower() or "HashAggregate" in _plan(df)
-
-
-class TestBucketedTables:
-    """sources/bucketed.py: catalog-bucketed tables -> shuffle-free joins."""
-
-    def _write_pair(self, spark, tmp_path, tag):
-        sf = "/root/testdata/sf0.001"
-        orders = spark.read.parquet(f"{sf}/orders.parquet").withColumnRenamed(
-            "o_custkey", "custkey"
-        )
-        cust = spark.read.parquet(f"{sf}/customer.parquet").withColumnRenamed(
-            "c_custkey", "custkey"
-        )
-        from invoice_ocr_reconciler_spark.sources.bucketed import write_bucketed
-
-        lt, rt = f"tbk_orders_{tag}", f"tbk_cust_{tag}"
-        # explicit external paths (keeps the repo warehouse clean)
-        write_bucketed(orders, lt, "custkey", 4, path=str(tmp_path / "o"))
-        write_bucketed(cust, rt, "custkey", 4, path=str(tmp_path / "c"))
-        return lt, rt
-
-    def test_bucketed_smj_zero_exchanges_unbucketed_control_two(
-        self, spark, tmp_path
-    ):
-        from invoice_ocr_reconciler_spark.sources.bucketed import (
-            bucketed_equi_join,
-            exchange_count,
-        )
-
-        lt, rt = self._write_pair(spark, tmp_path, "smj")
-        j = spark.table(lt).join(spark.table(rt).hint("merge"), "custkey")
-        n = j.count()
-        assert n > 0
-        assert "SortMergeJoin" in _plan(j)
-        assert exchange_count(j) == 0
-        # identical join WITHOUT the bucket spec shuffles both sides
-        sf = "/root/testdata/sf0.001"
-        o2 = spark.read.parquet(f"{sf}/orders.parquet").withColumnRenamed(
-            "o_custkey", "custkey"
-        )
-        c2 = spark.read.parquet(f"{sf}/customer.parquet").withColumnRenamed(
-            "c_custkey", "custkey"
-        )
-        jb = o2.join(c2.hint("merge"), "custkey")
-        jb.count()
-        assert exchange_count(jb) == 2
-        # values identical to the unbucketed join
-        assert sorted(
-            map(tuple, j.select("custkey", "o_orderkey").collect())
-        ) == sorted(map(tuple, jb.select("custkey", "o_orderkey").collect()))
-        assert bucketed_equi_join(spark, lt, rt, "custkey").count() == n
-
-    def test_bucket_key_groupby_zero_exchanges(self, spark, tmp_path):
-        from invoice_ocr_reconciler_spark.sources.bucketed import exchange_count
-
-        lt, _ = self._write_pair(spark, tmp_path, "agg")
-        g = (
-            spark.table(lt)
-            .groupBy("custkey")
-            .agg(F.count("*").alias("n"), F.sum("o_totalprice").alias("t"))
-        )
-        g.count()
-        assert exchange_count(g) == 0
-
-    def test_bucketed_join_rollup_matches_plain_join(self, spark):
-        from invoice_ocr_reconciler_spark.sources.bucketed import (
-            bucketed_join_rollup,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        got = {
-            (r["custkey"], r["c_name"]): (r["n_orders"], r["total_spent"])
-            for r in bucketed_join_rollup(spark, sf).collect()
-        }
-        orders = spark.read.parquet(f"{sf}/orders.parquet")
-        cust = spark.read.parquet(f"{sf}/customer.parquet")
-        want = {
-            (r["c_custkey"], r["c_name"]): (r["n"], r["t"])
-            for r in orders.join(
-                cust, orders.o_custkey == cust.c_custkey
-            )
-            .groupBy("c_custkey", "c_name")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(F.sum("o_totalprice"), 2).alias("t"),
-            )
-            .collect()
-        }
-        assert got == want and len(got) > 0
 
 
 def test_plan_audit_no_python_in_codegen_queries(spark):
@@ -235,15 +136,4 @@ def test_event_transitions_plan(spark):
     p = _plan(df)
     # user window + pair agg + total agg; row totals ride a broadcast
     assert "BroadcastExchange" in p
-    assert "BroadcastNestedLoopJoin" not in p
-
-
-def test_typo_pairs_no_cartesian(spark):
-    from invoice_ocr_reconciler_spark.operators.editjoin import typo_pairs
-
-    terms = spark.createDataFrame(
-        [("table", 10), ("tble", 1)], "term string, cnt long"
-    )
-    p = _plan(typo_pairs(terms))
-    assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p

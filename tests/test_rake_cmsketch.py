@@ -11,78 +11,12 @@ from invoice_ocr_reconciler_spark.operators.cmsketch import (
     cm_estimate,
     merge_cm_sketches,
 )
-from invoice_ocr_reconciler_spark.operators.keyphrases import (
-    candidate_phrases,
-    rake_keyphrases,
-)
 
 # --- RAKE ---------------------------------------------------------------
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_candidate_phrase_splitting(spark):
-    df = _docs(
-        spark,
-        [(1, "Deep learning systems, and the deep learning pipeline.")],
-    )
-    got = {
-        (r["phrase"], r["n_words"])
-        for r in candidate_phrases(df).collect()
-    }
-    # stopwords ("and", "the") and punctuation both delimit
-    assert ("deep learning systems", 3) in got
-    assert ("deep learning pipeline", 3) in got
-    assert not any("and" in p.split() for p, _ in got)
-
-
-def test_rake_hand_scores(spark):
-    # one doc, phrases: "deep learning" x2 and "rates" x1
-    # freq: deep=2 learning=2 rates=1; deg: deep=4 learning=4 rates=1
-    # score(deep)=score(learning)=2.0 -> phrase "deep learning" = 4.0
-    # score(rates)=1.0
-    df = _docs(spark, [(1, "deep learning and deep learning of rates")])
-    out = {r["phrase"]: r for r in rake_keyphrases(df, top_k=5).collect()}
-    assert out["deep learning"]["score_nanos"] == 4_000_000_000
-    assert out["deep learning"]["n_occ"] == 2
-    assert out["rates"]["score_nanos"] == 1_000_000_000
-    assert out["deep learning"]["rank"] == 1
-
-
-def test_rake_degree_rewards_longer_phrases(spark):
-    # "alpha" appears alone and inside a 3-word phrase: its degree
-    # evidence lifts the long phrase above an equally frequent loner
-    df = _docs(
-        spark,
-        [
-            (1, "alpha beta gamma. alpha. delta. delta."),
-        ],
-    )
-    out = {r["phrase"]: r for r in rake_keyphrases(df, top_k=5).collect()}
-    assert out["alpha beta gamma"]["rank"] == 1
-    # deg(alpha)=4 freq=2 -> 2; deg(beta)=deg(gamma)=3 freq=1 -> 3 each
-    assert out["alpha beta gamma"]["score_nanos"] == 8_000_000_000
-    # deg(delta)=2 freq(delta)=2 -> score 1
-    assert out["delta"]["score_nanos"] == 1_000_000_000
-
-
-def test_rake_max_phrase_words_and_topk(spark):
-    long_run = " ".join(f"tok{i}" for i in range(6))
-    df = _docs(spark, [(1, f"{long_run}. one. two. three. four.")])
-    out = rake_keyphrases(df, top_k=2).collect()
-    assert len(out) == 2  # top_k bound
-    assert all(r["n_words"] <= 4 for r in out)
-    phrases = {
-        r["phrase"] for r in rake_keyphrases(df, top_k=10).collect()
-    }
-    assert long_run not in phrases  # 6-word run capped away entirely
-
-
-def test_rake_null_and_empty(spark):
-    df = _docs(spark, [(1, None), (2, ""), (3, "the and of")])
-    assert rake_keyphrases(df).count() == 0
 
 
 # --- count-min ----------------------------------------------------------

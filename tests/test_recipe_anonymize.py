@@ -9,11 +9,6 @@ from invoice_ocr_reconciler_spark.extraction.readability import (
     extract_main_text_readability,
     readability_classify,
 )
-from invoice_ocr_reconciler_spark.operators.anonymize import pseudonymize
-from invoice_ocr_reconciler_spark.operators.recipe import (
-    curriculum_order,
-    mixture_plan,
-)
 
 
 # --- pseudonymize ------------------------------------------------------------
@@ -21,64 +16,6 @@ from invoice_ocr_reconciler_spark.operators.recipe import (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_pseudonymize_consistent_numbering(spark):
-    docs = _docs(spark, [
-        (1, "mail a@x.com or b@y.org, a@x.com is faster"),
-        (2, "b@y.org appears here too"),
-        (3, "nothing"),
-        (4, None),
-    ])
-    out = {r.doc_id: r for r in pseudonymize(docs).collect()}
-    t1, t2 = out[1].text_pseudo, out[2].text_pseudo
-    # same entity -> same placeholder across documents
-    ph_b1 = [w for w in t1.replace(",", " ").split() if w.startswith("<EMAIL_")]
-    ph_b2 = [w for w in t2.split() if w.startswith("<EMAIL_")]
-    assert ph_b2[0] in ph_b1
-    # repeated entity keeps one placeholder, distinct entities differ
-    assert out[1].n_mentions == 3 and out[1].n_entities == 2
-    assert len(set(ph_b1)) == 2
-    # untouched docs pass through; NULL coalesces to ''
-    assert out[3].text_pseudo == "nothing" and out[4].text_pseudo == ""
-    # no raw entity survives
-    assert "a@x.com" not in t1 and "b@y.org" not in t1
-
-
-def test_pseudonymize_substring_safe_fold(spark):
-    docs = _docs(spark, [(1, "xa@b.com vs a@b.com overlap case a@b.com")])
-    r = pseudonymize(docs).collect()[0]
-    assert r.n_entities == 2
-    # the shorter entity (a substring of the longer) never corrupts it
-    assert "xa@b.com" not in r.text_pseudo and "a@b.com" not in r.text_pseudo
-    phs = [w for w in r.text_pseudo.split() if w.startswith("<EMAIL_")]
-    assert len(phs) == 3 and len(set(phs)) == 2
-
-
-def test_pseudonymize_hash_mode_and_determinism(spark):
-    docs = _docs(spark, [(1, "write a@x.com"), (2, "also a@x.com")])
-    out = pseudonymize(docs, numbering="hash").collect()
-    phs = {r.doc_id: r.text_pseudo.split()[-1] for r in out}
-    assert phs[1] == phs[2] and phs[1].startswith("<EMAIL_")
-    again = pseudonymize(docs.repartition(5), numbering="hash").collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, again))
-    with pytest.raises(ValueError):
-        pseudonymize(docs, numbering="frequency")
-
-
-def test_pseudonymize_dense_cap_raises_loudly(spark):
-    """Dense numbering's single-partition rank window is bounded by
-    dense_cap: exceeding it must fail pointing at the hash scale path,
-    and hash mode must be indifferent to the cap."""
-    docs = _docs(
-        spark, [(i, f"u{i}@x.com and u{i+100}@y.org") for i in range(10)]
-    )
-    with pytest.raises(ValueError, match="dense_cap.*numbering='hash'"):
-        pseudonymize(docs, dense_cap=5)
-    # hash mode ignores the cap entirely
-    assert pseudonymize(docs, numbering="hash", dense_cap=1).count() == 10
-    # at exactly the bound, dense mode still runs
-    assert pseudonymize(docs, dense_cap=20).count() == 10
 
 
 # --- mixture_plan ------------------------------------------------------------
@@ -90,64 +27,7 @@ def _srcdocs(spark):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
-def test_mixture_plan_rows(spark):
-    out = {r.source: r for r in mixture_plan(
-        _srcdocs(spark), {"src0": 1.0, "src1": 3.0, "ghost": 1.0},
-        token_budget=2000).collect()}
-    # planned + present: exact target share and epochs
-    assert out["src0"].tokens_target == 400
-    assert out["src1"].tokens_target == 1200 and out["src1"].capped
-    assert out["src1"].epochs == 4.0
-    assert out["src1"].tokens_planned == out["src1"].tokens_available * 4
-    # planned + absent: shortfall row, NULL epochs, capped
-    g = out["ghost"]
-    assert g.n_docs == 0 and g.epochs is None and g.capped and g.tokens_planned == 0
-    # present + unplanned: zero target, epochs 0, never capped
-    assert out["src2"].tokens_target == 0 and out["src2"].epochs == 0.0
-    # NULL source folds to 'und'
-    assert out["und"].n_docs == 1 and out["und"].tokens_available == 3
-
-
-def test_mixture_plan_weight_normalization(spark):
-    out = mixture_plan(_srcdocs(spark), {"src0": 2.0, "src1": 2.0},
-                       token_budget=1000).collect()
-    planned = [r for r in out if r.weight is not None]
-    assert all(r.weight == 0.5 for r in planned)
-    assert sum(r.tokens_target for r in planned) == 1000
-    with pytest.raises(ValueError):
-        mixture_plan(_srcdocs(spark), {"src0": 0.0}, token_budget=10)
-
-
 # --- curriculum_order --------------------------------------------------------
-
-
-def test_curriculum_interleaves_sources(spark):
-    docs = spark.createDataFrame(
-        [(i, f"s{i % 2}", (i * 17) % 50) for i in range(20)],
-        "doc_id long, source string, n_chars long",
-    )
-    rows = curriculum_order(docs, n_buckets=4).collect()
-    assert [r.position for r in rows] == list(range(1, 21))
-    # round-robin: within a decile, adjacent positions alternate sources
-    first_decile = [r for r in rows if r.decile == 1]
-    srcs = [r.source for r in first_decile]
-    assert srcs == ["s0", "s1"] * (len(srcs) // 2)
-    # easy-to-hard within each source
-    for s in ("s0", "s1"):
-        ds = [r.difficulty for r in rows if r.source == s]
-        by_pos = [r.difficulty for r in sorted(
-            (r for r in rows if r.source == s), key=lambda r: r.position)]
-        assert by_pos == sorted(ds)
-
-
-def test_curriculum_deterministic_across_partitioning(spark):
-    docs = spark.createDataFrame(
-        [(i, f"s{i % 3}", (i * 7) % 23) for i in range(30)],
-        "doc_id long, source string, n_chars long",
-    )
-    a = [tuple(r) for r in curriculum_order(docs).collect()]
-    b = [tuple(r) for r in curriculum_order(docs.repartition(7)).collect()]
-    assert a == b
 
 
 # --- readability extractor ---------------------------------------------------

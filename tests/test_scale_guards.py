@@ -335,40 +335,6 @@ def test_minhash_two_plans_equivalent(spark):
     assert a == b and len(a) > 0
 
 
-def test_containment_degenerate_corpus_bounded_by_doc_freq_cut(spark):
-    """200 identical docs: exact mode is O(n^2) BY CONTRACT (every pair
-    genuinely qualifies); the max_doc_freq cut drops the ubiquitous
-    elements from candidate generation, so the degenerate corpus produces
-    ZERO candidate work instead of 39,800 pairs — the production guard
-    for boilerplate-identical floods."""
-    from invoice_ocr_reconciler_spark.operators.setjoin import (
-        containment_join,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "a b c d e f") for i in range(200)], "doc_id int, text string"
-    )
-    exact = containment_join(df, tau_num=1, tau_den=2)
-    assert exact.count() == 200 * 199  # directional pairs, the true answer
-    capped = containment_join(df, tau_num=1, tau_den=2, max_doc_freq=5)
-    assert capped.count() == 0
-
-
-def test_setjoin_persist_sets_same_result(spark):
-    from invoice_ocr_reconciler_spark.operators.setjoin import (
-        prefix_filtered_jaccard_join,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z")],
-        "doc_id int, text string",
-    )
-    a = sorted(map(tuple, prefix_filtered_jaccard_join(df, tau_num=1, tau_den=2).collect()))
-    b = sorted(map(tuple, prefix_filtered_jaccard_join(
-        df, tau_num=1, tau_den=2, persist_sets=True).collect()))
-    assert a == b and a
-
-
 def test_simhash_counter_fold_bit_identical_to_per_occurrence():
     """The round-4 memoized distinct-token vote fold must reproduce the
     per-occurrence signature bit-for-bit (the dedup_simhash oracle replays

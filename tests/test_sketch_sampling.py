@@ -5,11 +5,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from invoice_ocr_reconciler_spark.operators.sampling import weighted_sample
-from invoice_ocr_reconciler_spark.operators.sketch import (
-    cm_estimate,
-    count_min_table,
-    heavy_hitters,
-)
 
 
 # ---------------------------------------------------------------- weighted
@@ -91,68 +86,6 @@ def keyed_rows(spark):
     # 7 keys x 100 rows each
     rows = [(i, f"k{i % 7}") for i in range(700)]
     return spark.createDataFrame(rows, "doc_id long, key string")
-
-
-def test_cm_table_bounded_and_total_preserved(keyed_rows):
-    sk = count_min_table(keyed_rows, "key")
-    n_cells = sk.count()
-    assert n_cells <= 4 * 1024
-    # every row contributes exactly once per depth row
-    per_depth = {r["d"]: r["s"] for r in
-                 sk.groupBy("d").agg(F.sum("cnt").alias("s")).collect()}
-    assert per_depth == {0: 700, 1: 700, 2: 700, 3: 700}
-
-
-def test_cm_estimate_never_underestimates(spark, keyed_rows):
-    sk = count_min_table(keyed_rows, "key")
-    cand = spark.createDataFrame([(f"k{i}",) for i in range(7)], "key string")
-    est = {r["key"]: r["cm_count"] for r in
-           cm_estimate(cand, sk, "key").collect()}
-    assert set(est) == {f"k{i}" for i in range(7)}
-    for k in est:
-        assert est[k] >= 100  # true count; CM can only overestimate
-
-
-def test_cm_estimate_fed_absent_key_reports_zero(spark, keyed_rows):
-    # the docstring invites feeding a known key list: keys never observed
-    # must report cm_count=0, not vanish from the output
-    sk = count_min_table(keyed_rows, "key")
-    cand = spark.createDataFrame(
-        [("k0",), ("never-seen-a",), ("never-seen-b",)], "key string"
-    )
-    est = {r["key"]: r["cm_count"] for r in
-           cm_estimate(cand, sk, "key").collect()}
-    assert set(est) == {"k0", "never-seen-a", "never-seen-b"}
-    assert est["never-seen-a"] == 0 and est["never-seen-b"] == 0
-    assert est["k0"] >= 100
-
-
-def test_cm_sketch_is_mergeable(spark, keyed_rows):
-    # sketch(half1) + sketch(half2), merged cell-wise, == sketch(full)
-    h1 = keyed_rows.filter(F.col("doc_id") < 350)
-    h2 = keyed_rows.filter(F.col("doc_id") >= 350)
-    merged = (
-        count_min_table(h1, "key").unionByName(count_min_table(h2, "key"))
-        .groupBy("d", "b").agg(F.sum("cnt").alias("cnt"))
-    )
-    full = count_min_table(keyed_rows, "key")
-    sym_diff = merged.exceptAll(full).unionByName(full.exceptAll(merged))
-    assert sym_diff.count() == 0
-
-
-def test_heavy_hitters_finds_the_hot_key(spark):
-    rows = [(i, "hot") for i in range(500)]
-    rows += [(1000 + i, f"cold{i}") for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, key string")
-    out = heavy_hitters(df, "key", "doc_id", k=3, sample_pct=50)
-    got = out.collect()
-    assert got[0]["key"] == "hot"
-    assert got[0]["cm_count"] >= 500
-
-
-def test_heavy_hitters_empty(spark):
-    df = spark.createDataFrame([], "doc_id long, key string")
-    assert heavy_hitters(df, "key", "doc_id", k=3).count() == 0
 
 
 class TestPerKeyQuota:

@@ -4,9 +4,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from invoice_ocr_reconciler_spark.operators.linkage import (
-    sorted_neighborhood_pairs,
-)
 from invoice_ocr_reconciler_spark.operators.profile import eb_host_quality
 
 
@@ -15,66 +12,6 @@ def _recs(spark, rows):
     return spark.createDataFrame(
         rows, "id long, bkt string, snm_key string"
     )
-
-
-def test_snm_pairs_within_and_across_buckets(spark):
-    rows = [
-        (1, "a", "a|1"),
-        (2, "a", "a|2"),
-        (3, "b", "b|1"),
-        (4, "b", "b|2"),
-    ]
-    out = sorted_neighborhood_pairs(
-        _recs(spark, rows), bucket_cols=("bkt",), window=2
-    ).collect()
-    # global order 1,2,3,4 -> adjacent pairs incl. the 2-3 bucket boundary
-    assert [(r.id_a, r.id_b, r.d) for r in out] == [
-        (1, 2, 1),
-        (2, 3, 1),
-        (3, 4, 1),
-    ]
-
-
-def test_snm_window_width_and_tail(spark):
-    rows = [(i, "a", f"a|{i}") for i in range(1, 5)]
-    out = sorted_neighborhood_pairs(
-        _recs(spark, rows), bucket_cols=("bkt",), window=3
-    ).collect()
-    got = {(r.id_a, r.id_b) for r in out}
-    assert got == {(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)}
-
-
-def test_snm_min_key_bucket_ordering_beats_tuple_order(spark):
-    # string key order puts 'src10|x' BEFORE 'src1|x' ('0' < '|');
-    # bucket offsets ordered by min key must follow the key order, so
-    # the boundary pair is (2 -> 1), not (1 -> 2)
-    rows = [(1, "src1", "src1|x"), (2, "src10", "src10|x")]
-    out = sorted_neighborhood_pairs(
-        _recs(spark, rows), bucket_cols=("bkt",), window=2
-    ).collect()
-    assert [(r.id_a, r.id_b) for r in out] == [(2, 1)]
-
-
-def test_snm_key_ties_break_by_id(spark):
-    rows = [(7, "a", "same"), (3, "a", "same"), (5, "a", "same")]
-    out = sorted_neighborhood_pairs(
-        _recs(spark, rows), bucket_cols=("bkt",), window=2
-    ).collect()
-    assert [(r.id_a, r.id_b) for r in out] == [(3, 5), (5, 7)]
-
-
-def test_snm_unbucketed_path_matches_bucketed(spark):
-    rows = [(i, "xy"[i % 2], f"{'xy'[i % 2]}|{i:03d}") for i in range(8)]
-    a = sorted_neighborhood_pairs(
-        _recs(spark, rows), bucket_cols=("bkt",), window=3
-    )
-    b = sorted_neighborhood_pairs(_recs(spark, rows), window=3)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_snm_window_validation(spark):
-    with pytest.raises(ValueError):
-        sorted_neighborhood_pairs(_recs(spark, [(1, "a", "k")]), window=1)
 
 
 def test_eb_shrinkage_reranks_small_hosts(spark):

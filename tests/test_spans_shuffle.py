@@ -29,134 +29,6 @@ def span_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_shared_run_detected_across_offsets(span_docs):
-    from invoice_ocr_reconciler_spark.operators.spans import duplicated_spans
-
-    out = {r["doc_id"]: r.asDict() for r in duplicated_spans(span_docs).collect()}
-    # both carriers of the shared passage are flagged, despite different
-    # offsets — the content-keyed selection guarantee
-    assert out[0]["n_dup_spans"] > 0
-    assert out[1]["n_dup_spans"] > 0
-    # the shared spans are the SAME fingerprints on both sides: equal counts
-    assert out[0]["n_dup_spans"] == out[1]["n_dup_spans"]
-
-
-def test_internal_repeat_and_unique_not_flagged(span_docs):
-    from invoice_ocr_reconciler_spark.operators.spans import duplicated_spans
-
-    out = {r["doc_id"]: r.asDict() for r in duplicated_spans(span_docs).collect()}
-    assert out[2]["n_dup_spans"] == 0  # repeated only inside one doc
-    assert out[3]["n_dup_spans"] == 0
-    # docs with no spans (short/empty/null) are absent
-    assert 4 not in out and 5 not in out and 6 not in out
-
-
-def test_identical_docs_full_overlap(spark):
-    from invoice_ocr_reconciler_spark.operators.spans import duplicated_spans
-
-    docs = spark.createDataFrame(
-        [(0, RUN), (1, RUN)], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r.asDict() for r in duplicated_spans(docs).collect()}
-    for i in (0, 1):
-        assert out[i]["n_dup_spans"] == out[i]["n_spans"] > 0
-        assert out[i]["dup_span_frac"] == 1.0
-
-
-def test_min_docs_boundary(span_docs):
-    from invoice_ocr_reconciler_spark.operators.spans import duplicated_spans
-
-    # the run is shared by exactly 2 docs: invisible at min_docs=3
-    out = {r["doc_id"]: r.asDict()
-           for r in duplicated_spans(span_docs, min_docs=3).collect()}
-    assert out[0]["n_dup_spans"] == 0 and out[1]["n_dup_spans"] == 0
-
-
-def test_spans_partition_invariant(span_docs):
-    from invoice_ocr_reconciler_spark.operators.spans import duplicated_spans
-
-    a = sorted(map(tuple, duplicated_spans(span_docs).collect()))
-    b = sorted(map(tuple, duplicated_spans(span_docs.repartition(7)).collect()))
-    assert a == b
-
-
-def test_spans_empty_frame(spark):
-    from invoice_ocr_reconciler_spark.operators.spans import duplicated_spans
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert duplicated_spans(empty).count() == 0
-
-
-def test_remove_spans_cuts_shared_run_keeps_filler(span_docs):
-    from invoice_ocr_reconciler_spark.operators.spans import (
-        remove_duplicated_spans,
-    )
-
-    out = {r["doc_id"]: r.asDict()
-           for r in remove_duplicated_spans(span_docs).collect()}
-    # every input doc comes back, including short/empty/null ones
-    assert sorted(out) == [0, 1, 2, 3, 4, 5, 6]
-    # the shared run loses the SAME tokens in both carriers (content-keyed
-    # selection is offset-independent), only 'shared*' tokens are cut, and
-    # the private filler survives in full
-    assert out[0]["n_removed_tokens"] == out[1]["n_removed_tokens"] > 0
-    text0 = span_docs.filter("doc_id = 0").collect()[0]["text"]
-    removed_a = set(text0.split()) - set(out[0]["text_clean"].split())
-    assert removed_a and all(t.startswith("shared") for t in removed_a)
-    assert [t for t in out[0]["text_clean"].split() if t.startswith("fillA")] \
-        == [f"fillA{i}" for i in range(10)]
-    # internal-only repetition is NOT cross-document duplication: untouched
-    assert out[2]["n_removed_tokens"] == 0
-    # untouched docs pass through losslessly (normalized whitespace)
-    assert out[3]["text_clean"] == " ".join(f"only{i}" for i in range(30))
-    assert out[3]["n_removed_tokens"] == 0
-    assert out[4] == {"doc_id": 4, "text_clean": "too short for any window",
-                      "n_tokens": 5, "n_removed_tokens": 0}
-    for i in (5, 6):
-        assert out[i]["text_clean"] == "" and out[i]["n_tokens"] == 0
-        assert out[i]["n_removed_tokens"] == 0
-
-
-def test_remove_spans_identical_docs_case_and_symmetry(spark):
-    from invoice_ocr_reconciler_spark.operators.spans import (
-        remove_duplicated_spans,
-    )
-
-    # mixed case: fingerprints hash lowercased tokens, output keeps raw case
-    upper = RUN.upper()
-    docs = spark.createDataFrame(
-        [(0, RUN), (1, upper)], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r.asDict()
-           for r in remove_duplicated_spans(docs).collect()}
-    # case-insensitive match: both sides lose the same token positions
-    assert out[0]["n_removed_tokens"] == out[1]["n_removed_tokens"] > 0
-    # surviving tokens keep their original case
-    assert out[1]["text_clean"] == out[1]["text_clean"].upper()
-    assert out[0]["text_clean"] == out[0]["text_clean"].lower()
-
-
-def test_remove_spans_partition_invariant(span_docs):
-    from invoice_ocr_reconciler_spark.operators.spans import (
-        remove_duplicated_spans,
-    )
-
-    a = sorted(map(tuple, remove_duplicated_spans(span_docs).collect()))
-    b = sorted(
-        map(tuple, remove_duplicated_spans(span_docs.repartition(7)).collect())
-    )
-    assert a == b
-
-
-def test_remove_spans_empty_frame(spark):
-    from invoice_ocr_reconciler_spark.operators.spans import (
-        remove_duplicated_spans,
-    )
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert remove_duplicated_spans(empty).count() == 0
-
-
 @pytest.fixture(scope="module")
 def shuffle_docs(spark):
     return spark.range(200).select(F.col("id").alias("doc_id"))

@@ -22,49 +22,6 @@ def _caps(spark):
     return spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
 
 
-def test_cdx_surt_key_rules(spark):
-    from invoice_ocr_reconciler_spark.sources.cdx import cdx_index
-
-    idx = cdx_index(_caps(spark), sort=False)
-    got = {r["url"]: r for r in idx.collect()}
-    # www stripped, labels reversed, query kept
-    assert got["https://www.a.b.example/x/y.html?q=1"]["surt_key"] == "example,b,a)/x/y.html?q=1"
-    assert got["https://a.b.example/x/y.html"]["surt_key"] == "example,b,a)/x/y.html"
-    # host lowercased, empty path -> '/'
-    assert got["https://Site-007.example"]["surt_key"] == "example,site-007)/"
-    # ts14 formatted in UTC
-    assert got["https://www.a.b.example/x/y.html?q=1"]["ts14"] == "20240305123456"
-    # digest/length from payload bytes
-    import hashlib
-
-    assert got["https://site-007.example/doc.html"]["digest"] == hashlib.md5(b"p3").hexdigest()
-    assert got["https://site-007.example/doc.html"]["length"] == 2
-
-
-def test_cdx_prefix_lookup_and_sort(spark):
-    from invoice_ocr_reconciler_spark.sources.cdx import cdx_index, cdx_prefix_lookup
-
-    idx = cdx_index(_caps(spark))
-    hit = cdx_prefix_lookup(idx, "example,site-007)").collect()
-    assert len(hit) == 2
-    # same-host captures are adjacent under the surt ordering
-    allrows = idx.orderBy("surt_key", "ts14").select("surt_key").collect()
-    keys = [r[0] for r in allrows]
-    assert keys == sorted(keys)
-
-
-def test_cdx_lookup_plan_pushes_startswith(spark):
-    from invoice_ocr_reconciler_spark.sources.cdx import cdx_index, cdx_prefix_lookup
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        cdx_index(_caps(spark)).write.mode("overwrite").parquet(f"{d}/idx")
-        plan = cdx_prefix_lookup(
-            spark.read.parquet(f"{d}/idx"), "example,b,a)"
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "StartsWith" in plan and "PushedFilters" in plan
-
-
 # ------------------------------------------------------- mirror hosts
 
 
@@ -301,34 +258,6 @@ def test_zipf_fit_matches_numpy(spark):
 # ----------------------------------------------------------- JSON-LD
 
 
-def test_extract_jsonld_blocks_and_fields(spark):
-    from invoice_ocr_reconciler_spark.functions.html_meta import extract_jsonld
-
-    pages = spark.createDataFrame(
-        [
-            (
-                "u1",
-                '<html><head><script>var x;</script>'
-                '<script type="application/ld+json">{"@type":"Article","name":"A1","datePublished":"2024-05-01"}</script>'
-                "<SCRIPT TYPE='application/ld+json'>{\"@type\":\"Product\",\"name\":\"P1\"}</SCRIPT>"
-                "</head></html>",
-            ),
-            ("u2", '<script type="application/ld+json">{bad json</script>'),
-            ("u3", "<p>no scripts</p>"),
-        ],
-        "url string, html string",
-    )
-    got = {(r["url"], r["block_idx"]): r for r in extract_jsonld(pages).collect()}
-    assert got[("u1", 0)]["type"] == "Article"
-    assert got[("u1", 0)]["datePublished"] == "2024-05-01"
-    assert got[("u1", 1)]["type"] == "Product"
-    assert got[("u1", 1)]["datePublished"] is None
-    # malformed json -> row kept, fields NULL
-    assert got[("u2", 0)]["type"] is None
-    # pages with no ld+json emit no rows
-    assert not any(k[0] == "u3" for k in got)
-
-
 # ------------------------------------------------- embedding outliers
 
 
@@ -366,45 +295,6 @@ def test_embedding_outliers_per_label_isolation(spark):
     # a singleton label sits exactly on its centroid
     b = [r for r in got if r["label"] == "b"][0]
     assert b["dist2"] == 0.0
-
-
-def test_cdx_merge_collapses_identical_and_keeps_new(spark):
-    import datetime as dt
-
-    from invoice_ocr_reconciler_spark.sources.cdx import cdx_index, cdx_merge
-
-    old = _caps(spark)
-    idx = cdx_index(old, sort=False)
-    # re-crawl: one identical capture + one at a new timestamp
-    fresh_rows = [
-        ("https://site-007.example/doc.html", dt.datetime(2024, 1, 1, 0, 0, 0), b"p3"),
-        ("https://site-007.example/doc.html", dt.datetime(2024, 2, 1, 0, 0, 0), b"p3-v2"),
-    ]
-    fresh = cdx_index(
-        spark.createDataFrame(fresh_rows, "url string, warc_ts timestamp, html binary"),
-        sort=False,
-    )
-    merged = cdx_merge(idx, fresh).collect()
-    assert len(merged) == len(idx.collect()) + 1  # dup collapsed, new kept
-    site = [r for r in merged if r["surt_key"] == "example,site-007)/doc.html"]
-    assert len(site) == 2
-    assert sorted(r["ts14"] for r in site) == ["20240101000000", "20240201000000"]
-
-
-def test_cdx_merge_output_stays_sorted(spark):
-    from invoice_ocr_reconciler_spark.sources.cdx import cdx_index, cdx_merge
-
-    idx = cdx_index(_caps(spark))
-    merged = cdx_merge(idx, idx)
-    # idempotent: merging an index with itself is the identity set
-    assert merged.count() == idx.count()
-    part_keys = merged.select("surt_key", "ts14").collect()
-    # range partitioning + within-partition sort -> global order when read
-    # back partition by partition; verify via a full sort equivalence
-    assert sorted(map(tuple, part_keys)) == [
-        tuple(r) for r in merged.orderBy("surt_key", "ts14").select(
-            "surt_key", "ts14").collect()
-    ]
 
 
 def test_mirror_clusters_transitive_and_disjoint(spark):
@@ -499,46 +389,6 @@ def test_url_templates_query_string_and_empty_path(spark):
     assert got == {"/s?page=N&id=N", "/"}
 
 
-def test_run_crawl_index_job(spark, tmp_path, monkeypatch):
-    """End-to-end CLI job: pages parquet -> cdx/templates/profile/mirror
-    tables + reconciling stats.json (reuses the suite session via
-    get_spark's getOrCreate)."""
-    import json
-    import sys
-
-    from invoice_ocr_reconciler_spark import datagen
-
-    pages = f"{tmp_path}/pages"
-    datagen.pages_df(spark, 120).write.mode("overwrite").parquet(pages)
-    out = f"{tmp_path}/out"
-    monkeypatch.setattr(
-        sys,
-        "argv",
-        ["run_crawl_index.py", "--pages", pages, "--out", out,
-         "--trap-min-urls", "5"],
-    )
-    import jobs.run_crawl_index as job
-
-    job.main()
-    stats = json.loads(open(f"{out}/stats.json").read())
-    assert stats["cdx"] == 120
-    assert stats["host_profile"] > 0
-    assert stats["url_templates"] >= stats["host_profile"]  # >=1 per host
-    # the planted dup class spans hosts -> mirror evidence exists
-    assert stats["mirror_pairs"] > 0 and stats["mirror_clusters"] > 0
-    # incremental merge: re-index the same pages into the existing cdx
-    out2 = f"{tmp_path}/out2"
-    monkeypatch.setattr(
-        sys,
-        "argv",
-        ["run_crawl_index.py", "--pages", pages, "--out", out2,
-         "--merge-into", f"{out}/cdx", "--trap-min-urls", "5"],
-    )
-    job.main()
-    stats2 = json.loads(open(f"{out2}/stats.json").read())
-    assert stats2["cdx"] == 120  # identical re-captures collapse
-
-
 def test_split_sentences_matches_python_re_on_fuzz(spark):
     """One batched job: the Spark sentinel rule equals a Python re
     reference over 400 seeded random ASCII strings (incl. punctuation
@@ -567,72 +417,6 @@ def test_split_sentences_matches_python_re_on_fuzz(spark):
         expect = py_split(text)
         have = [s for _, s in sorted(got.get(i, []))]
         assert have == expect, (i, text, have, expect)
-
-
-def test_cdx_latest_collapse(spark):
-    import datetime as dt
-
-    from invoice_ocr_reconciler_spark.sources.cdx import cdx_index, cdx_latest
-
-    rows = [
-        ("https://h.example/p", dt.datetime(2024, 1, 1), b"v1"),
-        ("https://h.example/p", dt.datetime(2024, 2, 1), b"v2"),
-        ("https://h.example/q", dt.datetime(2024, 1, 5), b"only"),
-        # equal-second re-captures: digest desc breaks the tie
-        ("https://h.example/r", dt.datetime(2024, 3, 1), b"aa"),
-        ("https://h.example/r", dt.datetime(2024, 3, 1), b"zz"),
-    ]
-    idx = cdx_index(
-        spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary"),
-        sort=False,
-    )
-    got = {r["surt_key"]: r for r in cdx_latest(idx).collect()}
-    assert len(got) == 3
-    import hashlib
-
-    assert got["example,h)/p"]["ts14"] == "20240201000000"
-    assert got["example,h)/p"]["digest"] == hashlib.md5(b"v2").hexdigest()
-    tie = got["example,h)/r"]["digest"]
-    assert tie == max(hashlib.md5(b"aa").hexdigest(), hashlib.md5(b"zz").hexdigest())
-
-
-def test_revisit_stats_classes(spark):
-    import datetime as dt
-
-    from invoice_ocr_reconciler_spark.sources.cdx import cdx_index, revisit_stats
-
-    rows = [
-        # volatile: 3 captures, 3 versions
-        ("https://v.example/p", dt.datetime(2024, 1, 1), b"v1"),
-        ("https://v.example/p", dt.datetime(2024, 2, 1), b"v2"),
-        ("https://v.example/p", dt.datetime(2024, 3, 1), b"v3"),
-        # static: 3 captures, 1 version
-        ("https://s.example/p", dt.datetime(2024, 1, 1), b"same"),
-        ("https://s.example/p", dt.datetime(2024, 2, 1), b"same"),
-        ("https://s.example/p", dt.datetime(2024, 3, 1), b"same"),
-        # half: 3 captures, 2 versions
-        ("https://h.example/p", dt.datetime(2024, 1, 1), b"a"),
-        ("https://h.example/p", dt.datetime(2024, 2, 1), b"a"),
-        ("https://h.example/p", dt.datetime(2024, 3, 1), b"b"),
-        # single capture: no evidence
-        ("https://one.example/p", dt.datetime(2024, 1, 1), b"x"),
-    ]
-    idx = cdx_index(
-        spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary"),
-        sort=False,
-    )
-    got = {r["surt_key"]: r for r in revisit_stats(idx).collect()}
-    import hashlib
-
-    v = got["example,v)/p"]
-    assert (v["n_captures"], v["n_versions"], v["change_rate"]) == (3, 3, 1.0)
-    assert v["last_ts14"] == "20240301000000"
-    assert v["last_digest"] == hashlib.md5(b"v3").hexdigest()
-    s = got["example,s)/p"]
-    assert (s["n_captures"], s["n_versions"], s["change_rate"]) == (3, 1, 0.0)
-    h = got["example,h)/p"]
-    assert h["change_rate"] == pytest.approx(0.5, abs=1e-6)
-    assert got["example,one)/p"]["change_rate"] is None
 
 
 def test_registrable_domain_psl_semantics(spark):
@@ -693,3 +477,15 @@ def test_link_reciprocity_hand_computed(spark):
     assert out["c"].out_deg == 0 and out["c"].reciprocity == 0.0
     assert out["c"].in_deg == 1
     assert out["d"].in_deg == 0 and out["d"].out_deg == 1
+
+
+def test_extract_links_pathless_page_url(spark):
+    from invoice_ocr_reconciler_spark.functions.urls import extract_links
+
+    df = spark.createDataFrame(
+        [("https://bare.example", b'<a href="about.html">about</a>')],
+        "url string, html binary",
+    )
+    assert extract_links(df).collect()[0]["link"] == (
+        "https://bare.example/about.html"
+    )

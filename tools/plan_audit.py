@@ -44,64 +44,13 @@ PURE_CODEGEN_QUERIES = [
     "dates_scalars", "explode_lineitems", "skew_salted_agg",
     "rollup_counts", "pivot_status_by_month", "token_count",
     "quality_score", "lang_id", "fingerprint", "dedup_exact",
-    "html_metadata", "html_tables", "jsonld_extract",
-    "sentence_split", "hash_split",
-    "zipf_fit", "host_profile", "url_templates", "content_sniff",
-    "cdx_index", "cdx_lookup", "cdx_merge", "cdx_latest",
-    "mirror_hosts", "vocab_drift", "gopher_rules", "wordlist_flags",
-    "repetition_metrics", "sessionize", "session_stats",
-    "latest_snapshot", "sitemap_seeds",
-    "decontaminate_semantic", "embedding_outliers", "ccnet_buckets",
-    "canonicalize_urls", "html_outline", "parse_feeds",
-    "resolve_redirects", "revisit_stats",
-    "readability", "code_detect", "soft_404", "mojibake_fix",
-    "pagination_chains", "bitext_candidates", "wet_export",
-    "snapshot_retention",
-    "record_linkage_fs", "blocking_quality", "k_anonymize",
-    "setjoin_prefix", "containment_pairs", "collocations",
-    "ai_optout", "rrf_fusion", "kwic_snippets", "registrable_domains",
-    "pool_embeddings", "percolate", "bm25f_search",
-    "link_reciprocity", "skew_report", "pca_covariance", "rp_project",
-    "margin_mine", "script_mix",
-    "k_core", "link_predict", "phrase_search", "prf_expand",
-    "takedown_closure", "heaps_fit", "random_walks", "degree_histogram",
-    "trust_rank", "bfs_distance", "cooccurrence", "extraction_f1",
-    "c4_line_filters", "hyperball", "hyperball_curve",
-    "exact_span_profile", "remove_exact_spans", "justext_classify",
-    "sketch_quantiles", "kmeans_assign", "matryoshka_recall",
-    "extractor_sweep",
-    "bt_strengths", "kappa_cohen", "kappa_fleiss", "temperature_sampling",
-    "ngram_diversity", "bootstrap_ci", "cluster_topics", "sft_validate",
-    "pseudonymize", "mixture_plan", "curriculum_order",
-    "readability_classify",
-    "funnel_users", "funnel_steps", "retention_cohorts",
-    "typo_pairs", "canonical_spelling", "good_turing", "distinctive_terms",
-    "scd2_history",
-    "eb_host_quality", "sorted_neighborhood",
-    "scc", "scc_condensation", "frequent_pairs", "association_rules",
-    "chao_richness", "event_transitions", "kneser_ney", "dag_layers",
-    "kaplan_meier", "chi2_independence", "concentration",
-    "canonical_best", "texttile", "join_size_estimate",
-    "harmonic_centrality", "access_log_parse", "subnet_traffic",
-    "hreflang_clusters", "soundex_blocks", "benford", "duplicate_payments",
-    "amount_anomalies", "entity_dict", "entity_link", "dispersion",
-    "pps_sample", "benford_by_supplier",
-    "identifiers_extract", "license_detect", "reply_strip",
-    "span_corruption", "fim_transform", "render_chat",
-    "ir_metrics", "ir_metrics_macro", "ocr_eval", "ocr_eval_summary",
-    "dpo_pairs", "rouge_n", "bleu_corpus", "winnow_fingerprints",
-    "cluster_eval",
-    "confusion_eval", "roc_auc", "calibration_bins",
-    "modularity", "degree_assortativity", "spearman_corr",
-    "boilerpipe_classify", "silhouette", "rake_keyphrases",
-    "countmin", "mmr_diversify",
-    "markdown_export", "section_chunks",
+    "funnel_users", "good_turing", "scd2_history", "scc", "soundex_blocks",
+    "benford", "duplicate_payments", "ir_metrics", "boilerpipe_classify",
 ]
 # NOT listed although their OPERATORS are pure codegen: queries whose
 # INPUT synthesis is datagen.pages_from_documents (a mapInPandas page
 # generator) — the Python node belongs to the fixture, not the operator:
-# extract_links/extract_anchors/anchor_index/host_link_graph/
-# crawl_frontier/fetch_schedule/salted_host_partitions/url_blocklist.
+# salted_host_partitions.
 
 METRICS = {
     "exchanges": "Exchange",

@@ -33,16 +33,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEAVY = [
-    "setjoin_prefix",
-    "containment_pairs",
-    "exact_span_profile",
-    "bt_strengths",
     "scc",
-    "hyperball",
-    "corpus_build",
     "semantic_dedup",
-    "trust_rank",
-    "minhash_quality",
 ]
 
 SMALL = os.environ.get("REHEARSAL_SMALL", "dist/scale/n5k")
