@@ -76,13 +76,63 @@ def main() -> None:
         "quality_score",
         "lang_id",
         "dedup_exact",
+        "dedup_minhash",
+        "curation_filter",   # composed annotate+dedup+filter (pure codegen)
+        "sessionize",        # single-exchange gap sessionization
+        "asof_enrich",       # union-and-carry as-of join (no range explosion)
+        "repetition_metrics",  # Gopher-style repetition cut (pure codegen)
+        "crawl_diff",        # CDC snapshot diff (full-outer fingerprint compare)
+        "shuffle_shards",    # deterministic global shuffle (one exchange)
         "semantic_dedup",    # SemDeDup cluster-then-prune over embeddings
+        "extract_links",     # codegen outlink harvest + URL resolution
+        "wordlist_flags",    # C4-style broadcast lexicon tagging
+        "calibrate_scores",  # per-domain zscore calibration (broadcast stats)
+        "latest_snapshot",   # re-crawl collapse (one exchange + window)
+        "crawl_frontier",    # frontier anti join (target-sized agg first)
+        "warc_ingest",       # WARC cursor walk (Arrow-batched mapInPandas)
+        "quality_classifier",  # NB quality filter (train + broadcast score)
+        "compression_ratio",   # zlib quality signal (pruned Arrow crossing)
+        "bpe_merges",        # BPE vocab induction (8 vocab-sized rounds)
+        "normalize_text",    # NFC + codegen hygiene (one Arrow crossing)
+        "corpus_build",      # end-to-end build: collapse->extract->curate->shards
+        "mirror_hosts",      # cross-host mirror pairs (capped group-to-array)
+        "sentence_split",    # sentinel-regex segmentation (pure codegen)
+        "zipf_fit",          # term-frequency OLS (bigint-exact sums)
+        "hits",              # 2-iter HITS (join+agg per half-pass)
+        "decontaminate_semantic",  # broadcast cosine benchmark sweep
+        "host_profile",      # per-domain curation stats (one groupBy)
+        "anchor_index",      # anchor aggregation (min-struct top pick)
+        "minhash_quality",   # measured LSH precision/recall guard
+        "vocab_drift",       # smoothed-KL snapshot drift (bigint-exact)
+        "url_templates",     # crawler-trap template mining
+        "content_sniff",     # magic-byte type router (codegen)
+        "resolve_redirects", # bounded-unroll 3xx chain resolution
         "ann_brute_force",
+        "matryoshka_recall",    # truncation-recall curve (4+1 exact passes)
         "align_sentences",      # Gale-Church bitext DP (one Arrow crossing)
+        "pca_covariance",       # exact-integer PCA moment pass (codegen)
         "upsert_table",         # MERGE/upsert over the orders table
         "status_writeback",     # E2 write-back (UPDATE-only MERGE)
+        "heaps_fit",            # vocab-growth curve (first-occurrence trick)
+        "k_core",               # iterative peel (semi-join rounds)
+        "link_predict",         # degree-capped wedge join (integer scores)
+        "random_walks",         # DeepWalk corpus (hash-pick steps)
+        "trust_rank",           # seeded PageRank (spam-mass signal)
+        "extraction_f1",        # extraction-QA multiset F1 (one shuffle)
+        "c4_line_filters",      # C4 cleaning rules (codegen projection)
+        "justext_classify",     # two-pass block classification (codegen)
+        "extractor_sweep",      # 7-config threshold frontier (codegen)
+        "sketch_quantiles",     # mergeable log-bucket quantile sketch
+        "bt_strengths",         # Bradley-Terry MM leaderboard (3 rounds)
+        "readability_classify", # Arc90 block scoring (codegen projection)
         "ir_metrics",           # P@k/MRR/MAP/nDCG vs qrels (integer-exact)
+        "ocr_eval",             # CER/WER bands (one Arrow DP crossing)
+        "dpo_pairs",            # preference-pair build (mirror-rank pairing)
+        "rouge_n",              # ROUGE-N overlap (exact integer pools)
+        "bleu_corpus",          # corpus BLEU (clipped n-gram pools)
+        "winnow_fingerprints",  # MOSS winnowing selection (pure codegen)
         "boilerpipe_classify",  # 4th extractor policy (lag/lead tree)
+        "countmin",             # count-min sketch round trip (d*w cells)
         "funnel_users",         # greedy funnel (one-shuffle array fold)
         "scd2_history",         # SCD2 interval collapse (one key shuffle)
         "scc",                  # coloring SCC (2-round peel on the fixture)
@@ -206,6 +256,48 @@ def main() -> None:
         flagship = {"error": str(exc)[:200]}
     machine["after_flagship"] = _machine_probe()
 
+    # training-data curation at scale: annotate + exact-dedup + quality/lang
+    # filter + MinHash near-dup over a 200k-doc corpus with planted exact
+    # and near duplicates (datagen.documents_df)
+    try:
+        from invoice_ocr_reconciler_spark.operators.curation import curate_documents
+
+        n_docs_big = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "200000"))
+        docs_path = f"/tmp/spark_graft_bench_docs_{n_docs_big}"
+        if not os.path.isdir(docs_path):
+            datagen.documents_df(spark, n_docs_big).write.mode("overwrite").parquet(
+                docs_path
+            )
+        docs_big = spark.read.parquet(docs_path)
+        curate_documents(docs_big.limit(2000), min_quality=0.4)  # warm pass
+        # drop the flagship leg's persisted frames before the timed run
+        spark.catalog.clearCache()
+        t0 = time.monotonic()
+        stats = curate_documents(docs_big, min_quality=0.4)["stats"].collect()[0]
+        wall = time.monotonic() - t0
+        curation = {
+            "n_docs": stats["n_input"],
+            "wall_sec": round(wall, 2),
+            "docs_per_sec": round(stats["n_input"] / wall, 1),
+            "n_exact_dup": stats["n_exact_dup"],
+            "n_near_dup": stats["n_near_dup"],
+            "n_curated": stats["n_curated"],
+        }
+        # exact connected-components variant: evidences the iterative CC
+        # operator at the 200k scale (pair graph from the same LSH pass)
+        spark.catalog.clearCache()
+        t0 = time.monotonic()
+        stats_cc = curate_documents(
+            docs_big, min_quality=0.4, near_dup_exact=True
+        )["stats"].collect()[0]
+        curation["exact_cc"] = {
+            "wall_sec": round(time.monotonic() - t0, 2),
+            "n_near_dup": stats_cc["n_near_dup"],
+            "n_curated": stats_cc["n_curated"],
+        }
+    except Exception as exc:
+        curation = {"error": str(exc)[:200]}
+    machine["after_curation"] = _machine_probe()
     calib_end = calibrate()
     machine["calibration_sec"] = {"start": calib_start, "end": calib_end}
     # loaded-machine sentinel: either the host was already busy before the
@@ -322,6 +414,7 @@ def main() -> None:
                 "extract_reconcile_docs_per_sec": pipeline_docs_per_sec,
                 "ann_recall_at_5": recall,
                 "flagship_200k": flagship,
+                "curation_200k": curation,
                 "scaling_exec": scaling,
                 "scale_rehearsal": rehearsal,
                 "scale_rehearsal_exec": rehearsal_exec,

@@ -351,7 +351,7 @@ def justext_sweep(
         .otherwise(F.col("cf_class") == "good")
         .cast("int")
     )
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     agg = (
         ctx.withColumn("is_good", is_good)
@@ -481,6 +481,7 @@ def compare_extractors(pages: DataFrame, gold: DataFrame) -> DataFrame:
         extraction_f1,
         extraction_f1_summary,
     )
+    from invoice_ocr_reconciler_spark.util import with_scan_parallelism
 
     gold = gold.select(F.col("url").alias("doc_id"), F.col("gold_text"))
 
@@ -504,7 +505,7 @@ def compare_extractors(pages: DataFrame, gold: DataFrame) -> DataFrame:
         extract_pages_readability,
     )
 
-    density = extract_pages(pages).select("url", "extracted_text")
+    density = extract_pages(with_scan_parallelism(pages)).select("url", "extracted_text")
     jt = extract_pages_justext(pages)
     rd = extract_pages_readability(pages)
     bp = extract_pages_boilerpipe(pages)

@@ -74,7 +74,7 @@ def subnet_traffic(
     a NULL-subnet row rather than vanishing (the reject path stays
     visible). One parse projection + one partial-agg groupBy.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     c = clf_cols(F.col(line_col))
     parsed = logs.select(

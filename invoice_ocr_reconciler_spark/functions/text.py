@@ -11,8 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# roundn lives with the relational surface; re-exported for the text operators
-from invoice_ocr_reconciler_spark.plans.relational import roundn  # noqa: F401
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 # per-language stopword markers for the n-gram/stopword heuristic language ID.
 # Word-bounded; chosen to be discriminative between the corpus languages.

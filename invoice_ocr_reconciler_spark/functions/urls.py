@@ -342,7 +342,7 @@ def url_templates(
         )
     )
     totals = per.groupBy("host").agg(F.sum("n_urls").alias("host_urls"))
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     share = F.col("n_urls").cast("double") / F.col("host_urls")
     return (

@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from invoice_ocr_reconciler_spark.functions.text import roundn, token_count_col
+from invoice_ocr_reconciler_spark.functions.text import token_count_col
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 # ---------------------------------------------------------------------------
 # soft-404

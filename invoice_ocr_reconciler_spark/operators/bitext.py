@@ -136,7 +136,7 @@ def margin_from_scored(
     partial-agg groupBys at candidate-set cardinality (|pairs| ~ n*k',
     never n^2), then two shuffled equi-joins back onto the pairs.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
     from pyspark.sql import Window
 
     scored = scored.select(

@@ -264,10 +264,8 @@ def vocab_coverage(
     are preserved by the final left join at corpus cardinality.
     oov_rate rides the 1e-6 grid (roundn) so engines agree bitwise.
     """
-    from invoice_ocr_reconciler_spark.functions.text import (
-        roundn,
-        tokens_col,
-    )
+    from invoice_ocr_reconciler_spark.functions.text import tokens_col
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     toks = docs.select(
         F.col(id_col).alias("doc_id"),

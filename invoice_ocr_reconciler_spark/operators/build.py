@@ -71,6 +71,7 @@ def build_corpus(
     )
     from invoice_ocr_reconciler_spark.extraction.udfs import extract_pages
     from invoice_ocr_reconciler_spark.operators.diff import latest_snapshot
+    from invoice_ocr_reconciler_spark.util import with_scan_parallelism
 
     n_pages_in = pages.count()
 
@@ -99,7 +100,7 @@ def build_corpus(
     # cut); the result feeds curation, the text join-back, AND the health
     # report — persist once. doc_id is a url-derived hash: deterministic,
     # retry/partitioning-invariant (the datagen/manifest id contract).
-    extracted = extract_pages(kept_pages)
+    extracted = extract_pages(with_scan_parallelism(kept_pages))
     cleaned = nfc_normalize_text(
         extracted, text_col="extracted_text", out_col="text"
     ).select(
@@ -260,12 +261,13 @@ def clean_pages_bucket(df: DataFrame) -> DataFrame:
     from invoice_ocr_reconciler_spark.functions.text import nfc_normalize_text
     from invoice_ocr_reconciler_spark.functions.urls import canonicalize_url_col
     from invoice_ocr_reconciler_spark.operators.diff import latest_snapshot
+    from invoice_ocr_reconciler_spark.util import with_scan_parallelism
 
     canon = df.withColumn("canonical_url", canonicalize_url_col(F.col("url")))
     collapsed = latest_snapshot(
         canon, key_col="canonical_url", ts_col="warc_ts", tiebreak_col=None
     ).drop("canonical_url")
-    extracted = extract_pages(collapsed)
+    extracted = extract_pages(with_scan_parallelism(collapsed))
     return nfc_normalize_text(
         extracted, text_col="extracted_text", out_col="text"
     ).select(F.xxhash64("url").alias("doc_id"), "url", "text")
@@ -325,7 +327,8 @@ def build_corpus_resumable(
             manifest,
             clean_pages_bucket,
             fail_after=fail_after,
-            # latest_snapshot's window shuffles in every bucket
+            # latest_snapshot's window and the widening before extract_pages
+            # shuffle per bucket
             max_concurrent=shuffle_pool_width(spark),
         )
     if phase in ("finish", "all"):

@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invoice_ocr_reconciler_spark.functions.text import roundn, tokens_col
+from invoice_ocr_reconciler_spark.functions.text import tokens_col
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 ADD_K = 0.5  # same Jeffreys-prior smoothing mass as lm_score.ADD_K
 

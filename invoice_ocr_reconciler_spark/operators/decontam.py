@@ -118,7 +118,7 @@ def decontaminate_semantic(
     over the array is fixed, so the rounded sim is partitioning- and
     engine-stable).
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
     from invoice_ocr_reconciler_spark.operators.similarity import cosine_sim
 
     c = corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"))

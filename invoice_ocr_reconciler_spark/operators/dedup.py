@@ -414,19 +414,31 @@ def ngram_jaccard_verify(candidates: DataFrame, docs: DataFrame,
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def jac(a: str, b: str) -> float:
-            sa = set(map(int, _shingle_hashes(a or "", k)))
-            sb = set(map(int, _shingle_hashes(b or "", k)))
+        def jac(sa: set[int], sb: set[int]) -> float:
             if not sa and not sb:
                 return 1.0
             return len(sa & sb) / len(sa | sb)
 
         for pdf in batches:
+            # a doc meets many partners in one batch: shingle it once per
+            # batch, not once per pair (the cache lives for one batch only)
+            sets: dict[int, set[int]] = {}
+
+            def shingles(doc_id: int, text: str) -> set[int]:
+                if doc_id not in sets:
+                    sets[doc_id] = set(map(int, _shingle_hashes(text or "", k)))
+                return sets[doc_id]
+
             yield pd.DataFrame(
                 {
                     "doc_a": pdf["doc_a"].astype("int64"),
                     "doc_b": pdf["doc_b"].astype("int64"),
-                    "jaccard": [round(jac(a, b), 4) for a, b in zip(pdf["text_a"], pdf["text_b"])],
+                    "jaccard": [
+                        round(jac(shingles(ia, a), shingles(ib, b)), 4)
+                        for ia, ib, a, b in zip(
+                            pdf["doc_a"], pdf["doc_b"], pdf["text_a"], pdf["text_b"]
+                        )
+                    ],
                 }
             )
 

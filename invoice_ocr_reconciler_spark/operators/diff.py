@@ -178,7 +178,8 @@ def vocab_drift(
     guard at 10^12-token corpora, not a convenience. The one final
     division chain divides int64-derived doubles; result on 1e-6.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn, tokens_col
+    from invoice_ocr_reconciler_spark.functions.text import tokens_col
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     def counts(df: DataFrame, name: str) -> DataFrame:
         return (

@@ -450,7 +450,7 @@ def funnel_summary(
     first = reached.where(F.col("stage") == 1).select(
         F.col("n_users").alias("n_first")
     )
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     w = Window.partitionBy(F.lit(1)).orderBy("stage")  # K-row frame
     out = (
@@ -515,7 +515,7 @@ def retention_cohorts(
     size = cell.where(F.col("offset_weeks") == 0).select(
         "cohort_week", F.col("n_active").alias("cohort_size")
     )
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     return (
         cell.join(F.broadcast(size), "cohort_week")
@@ -563,7 +563,7 @@ def event_transitions(
     totals = pairs.groupBy("from_type").agg(
         F.sum("n").cast("long").alias("n_from")
     )
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     return (
         pairs.join(F.broadcast(totals), "from_type")
@@ -599,7 +599,7 @@ def dispersion_index(
     Plan: per-(key, day) partial-agg counts -> per-key sums; the global
     span rides a broadcast 1-row aggregate. 6-grid output.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     day = F.date_trunc("day", F.col(ts_col).cast("timestamp")).cast("date")
     per = (

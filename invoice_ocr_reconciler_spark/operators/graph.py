@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from invoice_ocr_reconciler_spark.functions.text import roundn
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 DAMPING = 0.85
 
@@ -339,7 +339,7 @@ def mirror_hosts(
     # per is already distinct on (fp, host): counting rows per host IS the
     # distinct-fingerprint total, no second pass over the corpus
     totals = per.groupBy("host").agg(F.count("*").alias("n_fps"))
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     return (
         pairs.join(F.broadcast(totals.withColumnRenamed("host", "host_a")), "host_a")

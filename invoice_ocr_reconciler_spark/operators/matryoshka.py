@@ -27,7 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invoice_ocr_reconciler_spark.functions.text import roundn
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 from invoice_ocr_reconciler_spark.operators.similarity import (
     brute_force_topk,
 )

@@ -42,7 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invoice_ocr_reconciler_spark.functions.text import roundn
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 GRID = 10_000  # quantization grid for the moment pass
 

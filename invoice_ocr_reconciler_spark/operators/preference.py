@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from invoice_ocr_reconciler_spark.functions.text import roundn
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 ITER_PLACES = 12
 OUT_PLACES = 9

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from invoice_ocr_reconciler_spark.functions.text import roundn
+from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 _FRACTIONAL = (T.DoubleType, T.FloatType)
 
@@ -301,7 +301,7 @@ def host_language_mix(
     min-of-struct((-cnt, lang)) for asc ties where it matters).
     Share rides the 1e-6 grid over exact integer counts.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     per = (
         docs.select(

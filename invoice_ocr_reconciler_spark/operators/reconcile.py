@@ -386,12 +386,28 @@ def _greedy_assign_partition(batches):
         yield pd.DataFrame(columns=cols)
 
 
+class Reconciled(dict):
+    """reconcile's output frames; ``release()`` unpersists the three frames
+    reconcile caches to build them (the duplicate-flagged invoices, the
+    greedy assignment and ``results``). The outputs are lazy, so only the
+    caller knows when it is done with them: call ``release()`` after the
+    last action, or a long-lived session keeps every call's cached blocks."""
+
+    def __init__(self, frames: dict[str, DataFrame], cached: list[DataFrame]):
+        super().__init__(frames)
+        self._cached = cached
+
+    def release(self) -> None:
+        for df in self._cached:
+            df.unpersist()
+
+
 def reconcile(
     invoices: DataFrame,
     ledger: DataFrame,
     broadcast_ledger: bool = True,
     with_amount_suggestions: bool = True,
-) -> dict[str, DataFrame]:
+) -> Reconciled:
     """Full reconcile stage -> {'results', 'missing_records', 'summary'}.
 
     ``invoices`` needs (url, invoice_number, vendor_name, total_amount);
@@ -585,8 +601,11 @@ def reconcile(
     missing_agg = missing_records.agg(F.count("*").alias("missing_records"))
     summary = res_agg.crossJoin(inv_agg).crossJoin(led_agg).crossJoin(missing_agg)
 
-    return {
-        "results": results,
-        "missing_records": missing_records,
-        "summary": summary,
-    }
+    return Reconciled(
+        {
+            "results": results,
+            "missing_records": missing_records,
+            "summary": summary,
+        },
+        cached=[inv_flagged, assigned, results],
+    )

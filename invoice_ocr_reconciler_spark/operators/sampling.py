@@ -139,7 +139,7 @@ def weighted_sample(
     per-partition top-k then a k-row merge on one reducer; nothing but
     k rows crosses. Adds one md5 + two ln per row.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     u = (
         F.conv(
@@ -226,7 +226,7 @@ def calibrate_scores(
     prefer zscore when the group count is small and the corpus is huge.
     Both are pure codegen after the stats.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     x = F.col(score_col).cast("double")
     if method == "zscore":
@@ -580,7 +580,8 @@ def temperature_sampling(
     corpus shuffles zero times (the groupBy is partial-agg; the
     realization is a map-side broadcast probe + partial-agg count).
     """
-    from invoice_ocr_reconciler_spark.functions.text import md5_u60, roundn
+    from invoice_ocr_reconciler_spark.functions.text import md5_u60
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     g = F.coalesce(F.col(group_col).cast("string"), F.lit("und"))
     counts = docs.groupBy(g.alias("grp")).agg(F.count("*").alias("n_docs"))

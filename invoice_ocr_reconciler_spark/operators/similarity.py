@@ -876,7 +876,7 @@ def label_centroids(
         F.col(label_col).alias("label"),
         F.posexplode(vec_col).alias("dim", "val"),
     )
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     return ex.groupBy("label", "dim").agg(
         roundn(F.avg("val"), 6).alias("centroid"),
@@ -898,7 +898,7 @@ def quantize_embeddings_int8(
     compression loss measurable instead of assumed. Zero vectors get
     scale 0 and an all-zero code.
     """
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     amax = F.aggregate(
@@ -1124,7 +1124,7 @@ def embedding_outliers(
     """
     from pyspark.sql import Window
 
-    from invoice_ocr_reconciler_spark.functions.text import roundn
+    from invoice_ocr_reconciler_spark.plans.relational import roundn
 
     cent = label_centroids(emb, label_col=label_col, vec_col=vec_col)
     ex = emb.select(

@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from invoice_ocr_reconciler_spark.functions.parse_fields import FIELDS_SCHEMA
-from invoice_ocr_reconciler_spark.operators.reconcile import reconcile
+from invoice_ocr_reconciler_spark.operators.reconcile import Reconciled, reconcile
 from invoice_ocr_reconciler_spark.util import with_scan_parallelism
 
 
@@ -109,9 +109,10 @@ def run_pipeline(
     broadcast_ledger: bool = True,
     with_amount_suggestions: bool = True,
     include_text: bool = False,
-) -> dict[str, DataFrame]:
+) -> Reconciled:
     """Full extract+reconcile; returns results/missing_records/summary plus
-    the intermediate ``invoices`` frame for inspection.
+    the intermediate ``invoices`` frame for inspection. Call its
+    ``release()`` once done with the outputs (see ``Reconciled``).
 
     ``include_text`` defaults False: reconciliation consumes four small
     fields, so the flagship path never ships the extracted text across the

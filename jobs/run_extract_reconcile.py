@@ -67,6 +67,7 @@ def main() -> None:
     out["missing_records"].write.mode("overwrite").parquet(f"{args.out}/missing_records")
     out["summary"].write.mode("overwrite").json(f"{args.out}/summary")
     print("done:", {r: out[r].count() for r in ("results", "missing_records")})
+    out.release()
 
 
 if __name__ == "__main__":

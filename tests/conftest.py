@@ -18,10 +18,13 @@ def spark():
 
 @pytest.fixture(scope="module", autouse=True)
 def _release_cached_frames():
-    """Drop what a test module left persisted (reconcile, CC and the other
-    operators persist frames they never unpersist): the whole suite shares
-    one driver JVM, whose heap is sized to the box, and the cached blocks
-    and their plans would otherwise pile up in it module after module."""
+    """Drop what a test module left persisted: the auxiliary operators
+    (graph's CC and PageRank, cluster, preference, bpe, ...) persist frames
+    they never unpersist, and so do the __spark_entry__ queries, which have
+    no handle to release reconcile's output. The whole suite shares one
+    driver JVM, whose heap is sized to the box, and the cached blocks and
+    their plans would otherwise pile up in it module after module. Core
+    code releases its own: test_reconcile pins ``Reconciled.release``."""
     yield
     active = SparkSession.getActiveSession()
     if active is not None:

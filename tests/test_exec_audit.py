@@ -24,6 +24,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SUBSET = [
     "skew_salted_agg",
+    "k_core",
+    "pool_embeddings",
+    "sessionize",
     "dedup_exact",
     "scc",
     "anti_join_missing",

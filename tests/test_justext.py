@@ -107,6 +107,36 @@ def test_extractor_drops_boilerplate_keeps_content():
     assert "home" not in out and "terms" not in out  # link-dense nav/footer
 
 
+def test_extractor_compare_density_canary(spark):
+    # extractor_compare is a rows-only driver entry (HTML parsing is not
+    # SQL-expressible) — this test is its durable pin: the density
+    # extractor must score EXACTLY 1.0 on the identity gold subset (the
+    # byte-identity contract), and the justext policy must be a
+    # high-precision subset of it, never degenerate
+    import __spark_entry__ as e
+
+    df = e.queries()["extractor_compare"](spark, "/root/testdata/sf0.001")
+    rows = {r["extractor"]: r for r in df.collect()}
+    assert rows["density"]["micro_f1"] == 1.0
+    assert rows["density"]["micro_precision"] == 1.0
+    assert rows["density"]["micro_recall"] == 1.0
+    assert rows["justext"]["t_pred"] > 0
+    assert rows["justext"]["micro_precision"] >= 0.9
+    assert 0.05 < rows["justext"]["micro_recall"] < 1.0
+    # third extractor (Arc90 readability): present and non-degenerate —
+    # its keep rule is length/comma-driven, so on the plain synthetic
+    # pages it must neither copy density (1.0) nor go to zero
+    assert "readability" in rows
+    assert rows["readability"]["t_pred"] > 0
+    assert 0.0 < rows["readability"]["micro_f1"] <= 1.0
+    # fourth extractor (boilerpipe NumWords/LinkDensity): present and
+    # non-degenerate — its lag/lead tree keeps long plain blocks, so on
+    # the synthetic pages it must produce output without copying density
+    assert "boilerpipe" in rows
+    assert rows["boilerpipe"]["t_pred"] > 0
+    assert 0.0 < rows["boilerpipe"]["micro_f1"] <= 1.0
+
+
 def test_extractor_pure_and_empty():
     assert extract_main_text_justext("") == ""
     html = f"<div><p>{GOOD_PARA}</p></div>"

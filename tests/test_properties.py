@@ -135,46 +135,3 @@ def test_bpe_encode_word_reconstructs(s):
     cache: dict = {}
     assert _encode_word(s, ranks, cache) == out
     assert _encode_word(s, ranks, cache) == out
-
-
-# mirror of the prefix selection in operators/setjoin.py: rarest-first
-# global order, prefix length = sz - ceil(tau*sz) + 1 (all-integer)
-def _prefixes(sets, tau_num, tau_den):
-    from collections import Counter
-
-    freq = Counter(t for s in sets.values() for t in s)
-    out = {}
-    for k, s in sets.items():
-        ordered = sorted(s, key=lambda t: (freq[t], t))
-        sz = len(ordered)
-        p = sz - (tau_num * sz + tau_den - 1) // tau_den + 1
-        out[k] = set(ordered[:p])
-    return out
-
-
-@given(
-    st.lists(
-        st.lists(st.integers(min_value=0, max_value=12), min_size=1, max_size=12),
-        min_size=2,
-        max_size=12,
-    ),
-    st.sampled_from([(1, 2), (3, 5), (7, 10), (9, 10), (1, 1)]),
-)
-@settings(max_examples=200, deadline=None)
-def test_prefix_filter_admits_no_false_negatives(raw, tau):
-    """The prefix-filtering theorem as implemented (integer prefix-length
-    formula in operators/setjoin.py): any pair with Jaccard >= tau MUST
-    share at least one prefix token under the shared global ordering."""
-    tau_num, tau_den = tau
-    sets = {i: frozenset(s) for i, s in enumerate(raw)}
-    pref = _prefixes(sets, tau_num, tau_den)
-    ids = sorted(sets)
-    for ai in range(len(ids)):
-        for bi in range(ai + 1, len(ids)):
-            a, b = sets[ids[ai]], sets[ids[bi]]
-            inter = len(a & b)
-            uni = len(a | b)
-            if tau_den * inter >= tau_num * uni:
-                assert pref[ids[ai]] & pref[ids[bi]], (
-                    f"J>=tau pair with disjoint prefixes: {a} {b} tau={tau}"
-                )

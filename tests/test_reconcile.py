@@ -219,3 +219,24 @@ def test_broadcast_and_smj_paths_identical(spark):
         )
 
     assert rows(True) == rows(False)
+
+
+def test_release_leaves_no_cached_frames(spark):
+    """reconcile caches three frames per call; release() drops them, so a
+    session that reconciles batch after batch holds no more cached RDDs
+    after each batch than before the first."""
+    inv = spark.createDataFrame(
+        INVOICES, "url string, invoice_number string, vendor_name string, total_amount double"
+    )
+    led = spark.createDataFrame(
+        LEDGER, "record_id string, vendor_name string, expected_amount double"
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    for _ in range(2):
+        out = reconcile(inv, led)
+        out["summary"].collect()  # reads all three cached frames
+        assert persistent().size() == before + 3
+        out.release()
+        assert persistent().size() == before
+        assert not out["results"].is_cached

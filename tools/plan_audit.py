@@ -44,13 +44,56 @@ PURE_CODEGEN_QUERIES = [
     "dates_scalars", "explode_lineitems", "skew_salted_agg",
     "rollup_counts", "pivot_status_by_month", "token_count",
     "quality_score", "lang_id", "fingerprint", "dedup_exact",
-    "funnel_users", "good_turing", "scd2_history", "scc", "soundex_blocks",
-    "benford", "duplicate_payments", "ir_metrics", "boilerpipe_classify",
+    "sentence_split", "hash_split",
+    "zipf_fit", "host_profile", "url_templates", "content_sniff",
+    "mirror_hosts", "vocab_drift", "gopher_rules", "wordlist_flags",
+    "repetition_metrics", "sessionize", "session_stats",
+    "latest_snapshot",
+    "decontaminate_semantic", "embedding_outliers",
+    "canonicalize_urls",
+    "resolve_redirects",
+    "readability", "code_detect", "soft_404", "mojibake_fix",
+    "pagination_chains", "bitext_candidates", "wet_export",
+    "snapshot_retention",
+ "k_anonymize",
+ "registrable_domains",
+    "pool_embeddings",
+    "link_reciprocity", "pca_covariance", "rp_project",
+    "margin_mine", "script_mix",
+    "k_core", "link_predict",
+    "takedown_closure", "heaps_fit", "random_walks", "degree_histogram",
+    "trust_rank", "bfs_distance", "extraction_f1",
+    "c4_line_filters",
+ "justext_classify",
+    "sketch_quantiles", "matryoshka_recall",
+    "extractor_sweep",
+    "bt_strengths", "temperature_sampling",
+    "ngram_diversity", "bootstrap_ci",
+    "readability_classify",
+    "funnel_users", "funnel_steps", "retention_cohorts",
+ "good_turing", "distinctive_terms",
+    "scd2_history",
+    "eb_host_quality",
+    "scc", "scc_condensation",
+    "chao_richness", "event_transitions", "dag_layers",
+    "kaplan_meier", "chi2_independence", "concentration",
+    "canonical_best", "texttile", "join_size_estimate",
+ "access_log_parse", "subnet_traffic",
+ "soundex_blocks", "benford", "duplicate_payments",
+    "amount_anomalies", "dispersion",
+    "pps_sample", "benford_by_supplier",
+    "ir_metrics", "ir_metrics_macro", "ocr_eval", "ocr_eval_summary",
+    "dpo_pairs", "rouge_n", "bleu_corpus", "winnow_fingerprints",
+    "confusion_eval", "roc_auc", "calibration_bins",
+    "modularity", "degree_assortativity", "spearman_corr",
+    "boilerpipe_classify",
+    "countmin",
 ]
 # NOT listed although their OPERATORS are pure codegen: queries whose
 # INPUT synthesis is datagen.pages_from_documents (a mapInPandas page
 # generator) — the Python node belongs to the fixture, not the operator:
-# salted_host_partitions.
+# extract_links/extract_anchors/anchor_index/host_link_graph/
+# crawl_frontier/fetch_schedule/salted_host_partitions/url_blocklist.
 
 METRICS = {
     "exchanges": "Exchange",

@@ -33,8 +33,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEAVY = [
+    "bt_strengths",
     "scc",
+    "corpus_build",
     "semantic_dedup",
+    "trust_rank",
+    "minhash_quality",
 ]
 
 SMALL = os.environ.get("REHEARSAL_SMALL", "dist/scale/n5k")
