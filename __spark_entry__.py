@@ -5552,7 +5552,7 @@ def _reconcile_block() -> str:
     advances url-rank by url-rank carrying the used-record set as a
     delimited string; the pick is the lexicographic list_sort minimum
     over (combined_score, vendor_score, record_id) of the not-yet-used
-    candidates — _greedy_assign's strict-< scan exactly. Expects
+    candidates — the greedy kernel's (reconcile._assign) pick exactly. Expects
     ``parsed`` (P1-P12 replay) and ``ledger``; exposes ``recon``."""
     norm = lambda col: (  # noqa: E731
         f"trim(regexp_replace(regexp_replace(regexp_replace(lower(coalesce({col}, '')), "

@@ -1,49 +1,56 @@
 """Reconciliation: blocked fuzzy vendor join + greedy 1:1 assignment.
 
 Reimplements the reference's reconcile() semantics (reference:
-backend/reconciliationEngine.js:37-213) as a Spark-first pipeline:
+backend/reconciliationEngine.js:37-213) as a Spark-first pipeline that keeps
+one row per invoice from input to result:
 
 1. duplicate window    — first occurrence of lower(trim(invoice_number)) wins,
                          later ones flagged 'duplicate' (ref :43-51); reference
                          order = input array order, ours = url (stable, documented);
 2. key normalization   — pure column expressions (ref :15-23);
 3. blocked similarity join — block key = first token of the normalized vendor;
-                         ledger side broadcast when small (the Fuse index build
-                         at ref :53-67 becomes a broadcast dim), shuffled
-                         sort-merge on block key otherwise — the north_rule's
-                         "blocked sort-merge join on normalized keys";
+                         the ledger collapses to one array row per block and is
+                         broadcast (the Fuse index build at ref :53-67 becomes a
+                         broadcast dim), or joins shuffled on the block key when
+                         it is too big to broadcast;
 4. JVM-side scoring    — Levenshtein ratio + token-set (Dice) similarity,
                          vendor_score = 1 - max(lev_ratio, token_dice); the
                          amount-tolerance predicate abs(a-b)/max(a,b) <= 1%
                          (ref :25-35); combined = 0.6*vendor + 0.4*amount
                          (ref :113-138). All whole-stage-codegen expressions —
                          no Python in the pair-scoring hot path;
-5. top-10 candidates   — window rank per invoice (ref :113);
-6. greedy 1:1          — applyInPandas per block; a ledger record belongs to
-                         exactly one block (its own first token), so per-block
-                         greedy is globally exact — no cross-block contention
-                         by construction;
-7. missing / anti join — ledger records never matched (ref :199);
-8. summary             — conditional aggregation (ref :201-210).
+5. top-10 candidates   — each invoice row carries its <= 10 passing candidates
+                         as one array in (vendor_score, record_id) order
+                         (ref :113); a duplicate, or an invoice no ledger vendor
+                         matches, carries an empty array;
+6. greedy 1:1          — one exchange on the block key, rows sorted by
+                         (block_key, url) within each partition, then one Arrow
+                         kernel that walks the rows in order holding only the
+                         current block's used records, and emits exactly one
+                         result per invoice (matched, mismatch, missing or
+                         duplicate). A ledger record belongs to exactly one
+                         block (its own first token), so per-block greedy is
+                         globally exact — no cross-block contention;
+7. amount suggestions  — invoices no vendor matched are offered records of
+                         about their amount that no invoice claimed (ref :91-94);
+8. missing / summary   — ledger records never matched (ref :199); one
+                         conditional aggregation over the results next to the
+                         register's totals (ref :201-210).
 
 Scorer note (documented deviation): the reference scores vendors with
 Fuse.js's bitap algorithm; per the project north_star the target scorer is
 Levenshtein / token-set-ratio, which is what we implement (threshold 0.4 and
 the <0.3 match cut preserved). Golden tests pin OUR scorer.
 
-Scale note: the greedy group per block saturates once every ledger record in
-the block is claimed; the pandas kernel switches to a vectorized fill for the
-remaining invoices, so per-block cost is O(head pairs) + O(tail rows). Block
-cardinality on the ledger side is bounded by the dimension table; hot-host
-skew on the invoice side is handled upstream by salted repartitioning
-(sources/pages.py) and AQE skew-join splitting.
+Scale note: a Python worker holds one Arrow batch plus the current block's
+used record ids, whatever its partition holds. Greedy 1:1 in url order is
+sequential by definition, so one hot vendor block runs serially in one task.
 """
 
 from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -60,6 +67,7 @@ MATCH_VENDOR_SCORE = 0.3  # ref: vendorScore < 0.3 (:160)
 AMOUNT_TOLERANCE = 0.01  # ref: amountMatch threshold (:25)
 TOP_K_CANDIDATES = 10  # ref: vendorMatches.slice(0, 10) (:113)
 TOP_K_SUGGESTIONS = 3  # ref: .slice(0, 3) (:93,148,189)
+NO_VENDOR = "No matching vendor found in payment register for: "  # ref :96
 
 SUGGESTION_SCHEMA = T.ArrayType(
     T.StructType(
@@ -83,6 +91,12 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
+# the assignment kernel's rows: a result plus the invoice's normalized amount,
+# which the summary totals over every invoice, duplicates included
+ASSIGNED_SCHEMA = T.StructType(
+    RESULT_SCHEMA.fields + [T.StructField("inv_amount", T.DoubleType())]
+)
+
 
 def _vendor_score_col(inv_norm, rec_norm, inv_toks, rec_toks, inv_len, rec_len):
     """vendor_score = 1 - max(levenshtein_ratio, token_set_dice); 0 = identical.
@@ -103,6 +117,125 @@ def _vendor_score_col(inv_norm, rec_norm, inv_toks, rec_toks, inv_len, rec_len):
     return F.lit(1.0) - F.greatest(lev_ratio, dice)
 
 
+def _with_amount_scores(c):
+    """Candidate struct ``c`` plus its amount tolerance (ref :25-35) and
+    combined score + confidence (ref :120-129); percent_diff is the JS
+    Math.round int."""
+    inv, rec = F.col("inv_amount"), c["rec_amount"]
+    diff = F.abs(inv - rec)
+    bigger = F.greatest(inv, rec)
+    pct_raw = F.when(bigger == 0, F.lit(None)).otherwise(diff / bigger)
+    percent_diff = F.coalesce(F.round(pct_raw * 100).cast("int"), F.lit(0))
+    # JS `amountResult.percentDiff ? percentDiff/100 : 0` uses the ROUNDED int
+    combined = c["vendor_score"] * 0.6 + percent_diff / 100.0 * 0.4
+    return F.struct(
+        c["vendor_score"].alias("vendor_score"),
+        c["record_id"].alias("record_id"),
+        rec.alias("rec_amount"),
+        F.when(bigger == 0, F.lit(0.0)).otherwise(diff).alias("discrepancy"),
+        F.when(bigger == 0, F.lit(True))
+        .otherwise(pct_raw <= AMOUNT_TOLERANCE)
+        .alias("amount_match"),
+        percent_diff.alias("percent_diff"),
+        combined.alias("combined_score"),
+        F.round((1 - combined) * 100).cast("int").alias("confidence"),
+    )
+
+
+def _with_candidates(invoices: DataFrame, ledger: DataFrame, broadcast_ledger: bool) -> DataFrame:
+    """``invoices`` plus ``block_key``, ``inv_amount`` and ``cands``, one row
+    per input row: the <= 10 ledger records of the invoice's block whose
+    vendor scores within VENDOR_THRESHOLD, in (vendor_score, record_id) order
+    (ref :113), with their amount scores; empty when none does."""
+    keep = [*invoices.columns, "block_key", "inv_amount"]
+    inv = invoices.select(
+        "*", normalize_vendor_col(F.col("vendor_name")).alias("inv_norm")
+    ).select(
+        "*",
+        vendor_block_key(F.col("inv_norm")).alias("block_key"),
+        normalize_amount_col(F.col("total_amount")).alias("inv_amount"),
+        F.array_distinct(F.split("inv_norm", " ")).alias("inv_toks"),
+        F.length("inv_norm").alias("inv_len"),
+    )
+    led = ledger.select(
+        "record_id",
+        normalize_vendor_col(F.col("vendor_name")).alias("rec_norm"),
+        normalize_amount_col(F.col("expected_amount")).alias("rec_amount"),
+    ).select(
+        vendor_block_key(F.col("rec_norm")).alias("block_key"),
+        F.struct(
+            "record_id",
+            "rec_norm",
+            F.array_distinct(F.split("rec_norm", " ")).alias("rec_toks"),
+            F.length("rec_norm").alias("rec_len"),
+            "rec_amount",
+        ).alias("rec"),
+    )
+
+    def candidate(rec):
+        score = _vendor_score_col(
+            F.col("inv_norm"), rec["rec_norm"],
+            F.col("inv_toks"), rec["rec_toks"],
+            F.col("inv_len"), rec["rec_len"],
+        )
+        return F.struct(
+            score.alias("vendor_score"),
+            rec["record_id"].alias("record_id"),
+            rec["rec_amount"].alias("rec_amount"),
+        )
+
+    def passing(c):
+        return c["vendor_score"] <= VENDOR_THRESHOLD
+
+    if broadcast_ledger:
+        # the per-block ledger collapses to one array row (|blocks| rows —
+        # trivially broadcastable) and each invoice scores its block inside
+        # codegen array expressions: no pair rows at all. The left join keeps
+        # invoices whose block no record shares (null recs -> empty cands).
+        blocks = F.broadcast(
+            led.groupBy("block_key").agg(F.collect_list("rec").alias("recs"))
+        )
+        found = inv.join(blocks, "block_key", "left").select(
+            *keep, F.filter(F.transform("recs", candidate), passing).alias("found")
+        )
+    else:
+        # shuffled sort-merge path for a ledger too big to broadcast: scored
+        # pair rows, the passing ones collected back into one row per invoice
+        # (the left join keeps invoices with no record in their block)
+        c = F.col("c")
+        found = (
+            inv.join(led, "block_key", "left")
+            .withColumn("c", candidate(F.col("rec")))
+            .groupBy(*keep)
+            .agg(
+                F.collect_list(F.when(F.col("rec").isNotNull() & passing(c), c)).alias(
+                    "found"
+                )
+            )
+        )
+    # array_sort on (vendor_score, record_id, rec_amount) = the reference's
+    # Fuse order; slice keeps its 10; amounts are scored on those 10 only
+    top = F.transform(
+        F.slice(F.array_sort("found"), 1, TOP_K_CANDIDATES), _with_amount_scores
+    )
+    return found.select(*keep, F.coalesce(top, F.array()).alias("cands"))
+
+
+def candidate_pairs(
+    invoices: DataFrame, ledger: DataFrame, broadcast_ledger: bool = True
+) -> DataFrame:
+    """Blocked similarity join + JVM-side scoring as pair rows: one row per
+    (invoice url, candidate record), <= 10 per invoice — the candidates
+    ``reconcile`` assigns from, exploded."""
+    return (
+        _with_candidates(
+            invoices.select("url", "vendor_name", "total_amount"), ledger, broadcast_ledger
+        )
+        .select("url", "block_key", "inv_amount", F.explode("cands").alias("c"))
+        .select("url", "block_key", "inv_amount", "c.*")
+    )
+
+
 def with_duplicate_flags(invoices: DataFrame) -> DataFrame:
     """First occurrence of the normalized invoice number wins (ref :43-51).
 
@@ -117,281 +250,117 @@ def with_duplicate_flags(invoices: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    invoices: DataFrame, ledger: DataFrame, broadcast_ledger: bool = True
-) -> DataFrame:
-    """Blocked similarity join + JVM-side scoring; <= 10 candidates/invoice."""
-    inv = (
-        invoices.withColumn("inv_norm", normalize_vendor_col(F.col("vendor_name")))
-        .withColumn("block_key", vendor_block_key(F.col("inv_norm")))
-        .withColumn("inv_amount", normalize_amount_col(F.col("total_amount")))
-        .select(
-            "url",
-            F.col("invoice_number").alias("inv_invoice_number"),
-            F.col("vendor_name").alias("inv_vendor_name"),
-            "inv_norm",
-            F.array_distinct(F.split("inv_norm", " ")).alias("inv_toks"),
-            F.length("inv_norm").alias("inv_len"),
-            "block_key",
-            "inv_amount",
+def _assign(row: dict, used: set) -> dict:
+    """The result of one invoice row (ref :69-196); records its pick in
+    ``used``, the records its block has claimed so far."""
+    amount = row["inv_amount"]
+    out = {
+        "invoice_url": row["url"],
+        "record_id": None,
+        "match_status": "missing",
+        "discrepancy": amount,
+        "flag_reason": None,
+        "confidence_score": 0,
+        "suggestions": None,
+        "inv_amount": amount,
+    }
+    if row["is_duplicate"]:
+        return {
+            **out,
+            "match_status": "duplicate",
+            "discrepancy": 0.0,
+            "flag_reason": f"Duplicate invoice number: {row['invoice_number']}",
+            "confidence_score": 100,
+        }
+    cands = row["cands"]
+    if not cands:  # ref :89-104
+        return {**out, "flag_reason": NO_VENDOR + (row["vendor_name"] or "")}
+    free = [c for c in cands if c["record_id"] not in used]
+    if not free:  # saturated: every candidate record already claimed (ref :140-155)
+        return {
+            **out,
+            "flag_reason": "All potential matching records already used. "
+            f"Vendor: {row['vendor_name']}",
+            "suggestions": [
+                {
+                    "record_id": c["record_id"],
+                    "reason": f"Fuzzy vendor match ({c['confidence']}%) - "
+                    "Already linked to another invoice",
+                    "confidence": c["confidence"],
+                }
+                for c in cands[:TOP_K_SUGGESTIONS]
+            ],
+        }
+    # the first unused candidate with the lowest (combined_score,
+    # vendor_score, record_id): the reference's strict-< scan over
+    # ascending-fuzzy-score candidates
+    best = min(free, key=lambda c: (c["combined_score"], c["vendor_score"], c["record_id"]))
+    used.add(best["record_id"])
+    out = {**out, "record_id": best["record_id"], "discrepancy": best["discrepancy"]}
+    if best["amount_match"] and best["vendor_score"] < MATCH_VENDOR_SCORE:
+        return {
+            **out,
+            "match_status": "matched",
+            "confidence_score": max(best["confidence"], 70),
+            "suggestions": [],
+        }
+    reasons = []
+    if not best["amount_match"]:
+        reasons.append(
+            f"Amount mismatch: Invoice ${amount:.2f} vs "
+            f"Expected ${best['rec_amount']:.2f} "
+            f"({best['percent_diff']}% difference)"
         )
-    )
-    led = (
-        ledger.withColumn("rec_norm", normalize_vendor_col(F.col("vendor_name")))
-        .withColumn("block_key", vendor_block_key(F.col("rec_norm")))
-        .withColumn("rec_amount", normalize_amount_col(F.col("expected_amount")))
-        .select(
-            "record_id",
-            "rec_norm",
-            F.array_distinct(F.split("rec_norm", " ")).alias("rec_toks"),
-            F.length("rec_norm").alias("rec_len"),
-            "block_key",
-            "rec_amount",
-        )
-    )
-    if broadcast_ledger:
-        # Candidate generation WITHOUT row explosion: the per-block ledger
-        # collapses to one array row (|blocks| rows total — trivially
-        # broadcastable), and scoring + threshold + the reference's
-        # top-10-by-vendor-score cut (ref :113) all run inside codegen array
-        # expressions BEFORE anything is exploded. Semantically identical to
-        # the exploded join + per-url cut in the greedy kernel (url is the
-        # invoice PK, so per-row slice == per-url head), but the Python
-        # kernel now receives <= 10 rows per invoice instead of every
-        # passing pair — measured 34.4M -> 8.4M rows at 1.2M docs.
-        led_blocks = F.broadcast(
-            led.groupBy("block_key").agg(
-                F.collect_list(
-                    F.struct("record_id", "rec_norm", "rec_toks", "rec_len", "rec_amount")
-                ).alias("recs")
-            )
-        )
-        joined = inv.join(led_blocks, "block_key")
-        scored = F.transform(
-            F.col("recs"),
-            lambda r: F.struct(
-                _vendor_score_col(
-                    F.col("inv_norm"), r["rec_norm"],
-                    F.col("inv_toks"), r["rec_toks"],
-                    F.col("inv_len"), r["rec_len"],
-                ).alias("vendor_score"),
-                r["record_id"].alias("record_id"),
-                r["rec_amount"].alias("rec_amount"),
-            ),
-        )
-        # array_sort on (vendor_score, record_id, ...) = the kernel's stable
-        # candidate order; slice keeps the reference's 10
-        top = F.slice(
-            F.array_sort(
-                F.filter(scored, lambda c: c["vendor_score"] <= VENDOR_THRESHOLD)
-            ),
-            1,
-            TOP_K_CANDIDATES,
-        )
-        pairs = joined.withColumn("cand", F.explode(top)).select(
-            "url",
-            "block_key",
-            "inv_vendor_name",
-            "inv_norm",
-            "inv_amount",
-            F.col("cand.vendor_score").alias("vendor_score"),
-            F.col("cand.record_id").alias("record_id"),
-            F.col("cand.rec_amount").alias("rec_amount"),
-        )
-    else:
-        # shuffled sort-merge path for a ledger too big to broadcast: full
-        # exploded pairs, then the reference's top-10 cut (ref :113) applied
-        # JVM-SIDE (window per url, same (vendor_score, record_id) order the
-        # greedy kernel uses) BEFORE the Python crossing. Without this cut
-        # the whole exploded pair stream of a partition (34M rows pre-cut at
-        # 1.2M docs) would materialize in one Python worker — the exact
-        # scale this path exists for. The kernel's own head(10) remains as a
-        # no-op safety net, so both paths feed it identical frames.
-        pairs = inv.join(led, "block_key")
-        pairs = pairs.withColumn(
-            "vendor_score",
-            _vendor_score_col(
-                F.col("inv_norm"), F.col("rec_norm"),
-                F.col("inv_toks"), F.col("rec_toks"),
-                F.col("inv_len"), F.col("rec_len"),
-            ),
-        )
-        w_cut = Window.partitionBy("url").orderBy("vendor_score", "record_id")
-        pairs = (
-            pairs.filter(F.col("vendor_score") <= VENDOR_THRESHOLD)
-            .drop("inv_toks", "rec_toks", "inv_len", "rec_len")
-            .withColumn("_cand_rk", F.row_number().over(w_cut))
-            .filter(F.col("_cand_rk") <= TOP_K_CANDIDATES)
-            .drop("_cand_rk")
-        )
-
-    # amount tolerance (ref :25-35); percent_diff is the JS Math.round int
-    diff = F.abs(F.col("inv_amount") - F.col("rec_amount"))
-    bigger = F.greatest(F.col("inv_amount"), F.col("rec_amount"))
-    pct_raw = F.when(bigger == 0, F.lit(None)).otherwise(diff / bigger)
-    pairs = (
-        pairs.withColumn("discrepancy", F.when(bigger == 0, F.lit(0.0)).otherwise(diff))
-        .withColumn("amount_match", F.when(bigger == 0, F.lit(True)).otherwise(pct_raw <= AMOUNT_TOLERANCE))
-        .withColumn("percent_diff", F.coalesce(F.round(pct_raw * 100).cast("int"), F.lit(0)))
-    )
-    # combined score + candidate confidence (ref :120-129);
-    # JS `amountResult.percentDiff ? percentDiff/100 : 0` uses the ROUNDED int
-    amount_score = F.col("percent_diff") / 100.0
-    pairs = pairs.withColumn(
-        "combined_score", F.col("vendor_score") * 0.6 + amount_score * 0.4
-    ).withColumn(
-        "confidence", F.round((1 - F.col("combined_score")) * 100).cast("int")
-    )
-    # NOTE: the reference's top-10 candidate cap (ref :113) is applied
-    # JVM-side on BOTH paths before the greedy kernel (array slice on the
-    # broadcast path, per-url window on the SMJ path); the kernel's head(10)
-    # is a semantic no-op that keeps the two paths provably aligned.
-    return pairs
+    if best["vendor_score"] >= MATCH_VENDOR_SCORE:
+        # JS Math.round = floor(x+0.5); Python round() is banker's
+        v_conf = int((1 - best["vendor_score"]) * 100 + 0.5)
+        reasons.append(f"Vendor name fuzzy match confidence: {v_conf}%")
+    # alternative suggestions: the other candidates in fuzzy-score order
+    alts = [c for c in cands if c["record_id"] != best["record_id"]]
+    return {
+        **out,
+        "match_status": "mismatch",
+        "flag_reason": "; ".join(reasons),
+        "confidence_score": best["confidence"],
+        "suggestions": [
+            {
+                "record_id": c["record_id"],
+                "reason": f"Alternative fuzzy match ({c['confidence']}% confidence)",
+                "confidence": c["confidence"],
+            }
+            for c in alts[:TOP_K_SUGGESTIONS]
+        ],
+    }
 
 
-def _greedy_assign(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Exact greedy 1:1 assignment within one block (ref :69-196).
+def assign_batches(batches):
+    """mapInArrow kernel: exact greedy 1:1 assignment (ref :69-196).
 
-    Invoices in stable url order; per invoice the unused candidate with the
-    lowest (combined_score, vendor_score, record_id) wins — reproducing the
-    reference's strict-< scan over ascending-fuzzy-score candidates.
-
-    Single sorted pass over tuples; once every record in the block is used
-    the remaining invoices short-circuit to the vectorized 'all used' path
-    (per-block cost O(head pairs) + O(tail rows)).
+    Takes rows sorted by (block_key, url) with every row of a block in one
+    partition, and yields one ASSIGNED_SCHEMA row per input row. Only the
+    current block's used records are held; they carry over from one Arrow
+    batch to the next and reset where the block key changes.
     """
-    # top-10 fuzzy candidates per invoice, Fuse-order = ascending vendor
-    # score (ref :113) — a semantic no-op on both paths (each is already
-    # cut JVM-side), kept as the alignment safety net
-    pdf = (
-        pdf.sort_values(["url", "vendor_score", "record_id"], kind="mergesort")
-        .groupby("url", sort=False)
-        .head(TOP_K_CANDIDATES)
-    )
-    # ONE itertuples pass builds url -> vendor-sorted candidate lists (<= 10
-    # tuples each, insertion order = url asc since the frame is url-sorted);
-    # all per-url work then happens on tiny python lists. This replaced a
-    # per-url pandas groupby + to_dict('records') loop that dominated the
-    # flagship wall at 10^6 rows (measured 2x on the greedy stage).
-    by_url: dict = {}
-    for r in pdf.itertuples(index=False):
-        by_url.setdefault(r.url, []).append(r)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    used: set = set()
-    out = []
-    for url, cands in by_url.items():
-        # best unused by (combined_score, vendor_score, record_id) — the
-        # reference's strict-< scan over ascending-fuzzy-score candidates
-        best = None
-        bkey = None
-        for r in cands:
-            if r.record_id in used:
-                continue
-            k = (r.combined_score, r.vendor_score, r.record_id)
-            if bkey is None or k < bkey:
-                best, bkey = r, k
-        if best is None:
-            # saturated: every candidate record already claimed (ref :140-155)
-            first = cands[0]
-            out.append(
-                {
-                    "invoice_url": url,
-                    "record_id": None,
-                    "match_status": "missing",
-                    "discrepancy": float(first.inv_amount),
-                    "flag_reason": "All potential matching records already used. "
-                    f"Vendor: {first.inv_vendor_name}",
-                    "confidence_score": 0,
-                    "suggestions": [
-                        {
-                            "record_id": r.record_id,
-                            "reason": f"Fuzzy vendor match ({int(r.confidence)}%) - "
-                            "Already linked to another invoice",
-                            "confidence": int(r.confidence),
-                        }
-                        for r in cands[:TOP_K_SUGGESTIONS]
-                    ],
-                }
-            )
-            continue
-        used.add(best.record_id)
-        if best.amount_match and best.vendor_score < MATCH_VENDOR_SCORE:
-            out.append(
-                {
-                    "invoice_url": url,
-                    "record_id": best.record_id,
-                    "match_status": "matched",
-                    "discrepancy": best.discrepancy,
-                    "flag_reason": None,
-                    "confidence_score": max(int(best.confidence), 70),
-                    "suggestions": [],
-                }
-            )
-        else:
-            reasons = []
-            if not best.amount_match:
-                reasons.append(
-                    f"Amount mismatch: Invoice ${best.inv_amount:.2f} vs "
-                    f"Expected ${best.rec_amount:.2f} "
-                    f"({best.percent_diff}% difference)"
-                )
-            if best.vendor_score >= MATCH_VENDOR_SCORE:
-                # JS Math.round = floor(x+0.5); Python round() is banker's
-                v_conf = int((1 - best.vendor_score) * 100 + 0.5)
-                reasons.append(f"Vendor name fuzzy match confidence: {v_conf}%")
-            # alternative suggestions: other candidates in fuzzy-score order
-            # (cands is already vendor-score-sorted)
-            alts = [r for r in cands if r.record_id != best.record_id][
-                :TOP_K_SUGGESTIONS
-            ]
-            out.append(
-                {
-                    "invoice_url": url,
-                    "record_id": best.record_id,
-                    "match_status": "mismatch",
-                    "discrepancy": best.discrepancy,
-                    "flag_reason": "; ".join(reasons),
-                    "confidence_score": int(best.confidence),
-                    "suggestions": [
-                        {
-                            "record_id": r.record_id,
-                            "reason": f"Alternative fuzzy match ({int(r.confidence)}% confidence)",
-                            "confidence": int(r.confidence),
-                        }
-                        for r in alts
-                    ],
-                }
-            )
-    cols = [f.name for f in RESULT_SCHEMA.fields]
-    return pd.DataFrame(out, columns=cols)
-
-
-def _greedy_assign_partition(batches):
-    """mapInPandas wrapper: greedy over every block in one partition.
-
-    Upstream ``repartition(block_key)`` co-locates each block; the pandas
-    groupby here replaces one applyInPandas invocation (and its Arrow
-    round-trip) per block with one per partition. Output is identical —
-    `_greedy_assign` sees exactly the same per-block frames.
-    """
-    cols = [f.name for f in RESULT_SCHEMA.fields]
-    frames = list(batches)
-    pdf = pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=cols)
-    if len(pdf):
-        yield pd.concat(
-            [_greedy_assign(g) for _k, g in pdf.groupby("block_key", sort=False)],
-            ignore_index=True,
-        )
-    else:
-        yield pd.DataFrame(columns=cols)
+    schema = to_arrow_schema(ASSIGNED_SCHEMA)
+    block, used = None, set()
+    for batch in batches:
+        out = []
+        for row in batch.to_pylist():
+            if row["block_key"] != block:
+                block, used = row["block_key"], set()
+            out.append(_assign(row, used))
+        yield pa.RecordBatch.from_pylist(out, schema=schema)
 
 
 class Reconciled(dict):
-    """reconcile's output frames; ``release()`` unpersists the three frames
-    reconcile caches to build them (the duplicate-flagged invoices, the
-    greedy assignment and ``results``). The outputs are lazy, so only the
-    caller knows when it is done with them: call ``release()`` after the
-    last action, or a long-lived session keeps every call's cached blocks."""
+    """reconcile's output frames; ``release()`` unpersists the one frame
+    reconcile caches to build them (the greedy assignment, one row per
+    invoice). The outputs are lazy, so only the caller knows when it is done
+    with them: call ``release()`` after the last action, or a long-lived
+    session keeps every call's cached blocks."""
 
     def __init__(self, frames: dict[str, DataFrame], cached: list[DataFrame]):
         super().__init__(frames)
@@ -413,81 +382,34 @@ def reconcile(
     ``invoices`` needs (url, invoice_number, vendor_name, total_amount);
     ``ledger`` needs (record_id, vendor_name, expected_amount).
     """
-    # column-prune FIRST: everything downstream shuffles these rows several
-    # times (duplicate window, candidate join, top-k window); dragging the
-    # extracted_text / line_items payload through those shuffles is the #1
-    # scale killer. Reconciliation needs exactly four columns.
-    invoices_slim = invoices.select(
-        "url", "invoice_number", "vendor_name", "total_amount"
+    # column-prune FIRST: dragging the extracted_text / line_items payload
+    # through the duplicate window and the block exchange is the #1 scale
+    # killer. Reconciliation needs exactly four columns.
+    flagged = with_duplicate_flags(
+        invoices.select("url", "invoice_number", "vendor_name", "total_amount")
     )
-    # the results frame unions three branches that all derive from the input;
-    # without a persist each branch would recompute the upstream DAG (incl.
-    # the extraction UDF) — the batch analog of the reference persisting OCR
-    # output before reconciling (backend/server.js:298-315 then :516-529)
-    inv_flagged = with_duplicate_flags(invoices_slim).persist(StorageLevel.MEMORY_AND_DISK)
-    dup = inv_flagged.filter(F.col("is_duplicate"))
-    live = inv_flagged.filter(~F.col("is_duplicate"))
-
-    dup_results = dup.select(
-        F.col("url").alias("invoice_url"),
-        F.lit(None).cast("string").alias("record_id"),
-        F.lit("duplicate").alias("match_status"),
-        F.lit(0.0).alias("discrepancy"),
-        F.concat(F.lit("Duplicate invoice number: "), F.col("invoice_number")).alias(
-            "flag_reason"
-        ),
-        F.lit(100).alias("confidence_score"),
-        F.lit(None).cast(SUGGESTION_SCHEMA).alias("suggestions"),
-    )
-
-    cands = candidate_pairs(live, ledger, broadcast_ledger=broadcast_ledger)
-    # prune to exactly what the greedy kernel reads BEFORE the exchange —
-    # the normalized-name columns (inv_norm / SMJ-path rec_norm) are scoring
-    # intermediates and must not ride the 10-rows-per-url shuffle + Arrow
-    # crossing as dead weight
-    cands = cands.select(
-        "url", "block_key", "inv_vendor_name", "inv_amount", "vendor_score",
-        "record_id", "rec_amount", "discrepancy", "amount_match",
-        "percent_diff", "combined_score", "confidence",
-    )
-    # reused by: results union, used-record anti join, matched-record anti join.
-    # One exchange on block_key, then ONE Python crossing per partition (the
-    # in-partition groupby replaces a per-block applyInPandas call — hundreds
-    # of tiny Arrow round-trips collapse into ~#partitions).
+    # results, missing_records and summary all read the assignment: persist
+    # it so the upstream DAG (incl. the extraction UDF) runs once — the batch
+    # analog of the reference persisting OCR output before reconciling
+    # (backend/server.js:298-315 then :516-529)
     assigned = (
-        cands.repartition("block_key")
-        .mapInPandas(_greedy_assign_partition, schema=RESULT_SCHEMA)
+        _with_candidates(flagged, ledger, broadcast_ledger)
+        .select(
+            "url", "block_key", "is_duplicate", "invoice_number", "vendor_name",
+            "inv_amount",
+            F.when(F.col("is_duplicate"), F.array()).otherwise(F.col("cands")).alias("cands"),
+        )
+        .repartition("block_key")
+        .sortWithinPartitions("block_key", "url")
+        .mapInArrow(assign_batches, schema=ASSIGNED_SCHEMA)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    used_ids = assigned.filter(F.col("record_id").isNotNull()).select("record_id")
+    missing_records = ledger.join(used_ids, "record_id", "left_anti")
 
-    # invoices with zero fuzzy candidates -> 'missing' (ref :89-104).
-    # Anti join against the (persisted) greedy output — it emits exactly one
-    # row per url that had any candidate — instead of recomputing the scored
-    # candidate join a second time.
-    no_cand = live.join(
-        assigned.select(F.col("invoice_url").alias("url")), "url", "left_anti"
-    ).select(
-        F.col("url").alias("invoice_url"),
-        F.col("vendor_name"),
-        normalize_amount_col(F.col("total_amount")).alias("inv_amount"),
-    )
-    missing_results = no_cand.select(
-        F.col("invoice_url"),
-        F.lit(None).cast("string").alias("record_id"),
-        F.lit("missing").alias("match_status"),
-        F.col("inv_amount").alias("discrepancy"),
-        F.concat(
-            F.lit("No matching vendor found in payment register for: "),
-            F.coalesce(F.col("vendor_name"), F.lit("")),
-        ).alias("flag_reason"),
-        F.lit(0).alias("confidence_score"),
-        F.lit(None).cast(SUGGESTION_SCHEMA).alias("suggestions"),
-    )
-
-    results = assigned.unionByName(missing_results).unionByName(dup_results)
-
+    results = assigned
     # amount-only suggestions for vendor-miss invoices (ref :91-94) against
-    # records unused after assignment. NOT a nested-loop theta join — both
+    # the records no invoice claimed. NOT a nested-loop theta join — both
     # sides grow with the corpus, so BNLJ goes quadratic. Amounts are banded
     # on a log_{1.01} grid: any pair within the 1% tolerance lands within
     # +-2 bands, so exploding the (small) unused side over its neighbor
@@ -495,41 +417,31 @@ def reconcile(
     # records collapse to ONE ARRAY ROW (same shape as the candidate join),
     # and the exact tolerance filter, the record_id-ascending top-3 cut
     # (ref :93) and the suggestion structs all run inside codegen array
-    # expressions — no pair-row explosion, no dedup/window/groupBy
-    # shuffles. (The previous exploded join materialized ~10M intermediate
-    # rows through 3 shuffles at 200k docs — over half the pipeline wall.)
+    # expressions. Only vendor-miss rows get a band, so the left join
+    # leaves every other row as it is.
     if with_amount_suggestions:
-        used_ids = assigned.filter(F.col("record_id").isNotNull()).select("record_id")
         band_width = math.log(1.01)
-        unused = (
-            ledger.join(used_ids, "record_id", "left_anti")
-            .select(
+
+        def band(amount: str, d: int = 0):
+            return (F.floor(F.log1p(amount) / band_width) + d).cast("long")
+
+        # a record appears ONCE per band group, so the per-row array join
+        # yields each candidate at most once — no dedup pass needed
+        band_arrays = F.broadcast(
+            missing_records.select(
                 F.col("record_id").alias("s_record_id"),
                 normalize_amount_col(F.col("expected_amount")).alias("s_amount"),
             )
             .withColumn(
                 "amount_band",
-                F.explode(
-                    F.array(
-                        *[
-                            (F.floor(F.log1p("s_amount") / band_width) + d).cast("long")
-                            for d in (-2, -1, 0, 1, 2)
-                        ]
-                    )
-                ),
+                F.explode(F.array(*[band("s_amount", d) for d in (-2, -1, 0, 1, 2)])),
             )
-        )
-        # a record appears ONCE per band group, so the per-row array join
-        # yields each candidate at most once — no dedup pass needed
-        band_arrays = F.broadcast(
-            unused.groupBy("amount_band").agg(
+            .groupBy("amount_band")
+            .agg(
                 F.array_sort(
                     F.collect_list(F.struct("s_record_id", "s_amount"))
                 ).alias("band_cands")
             )
-        )
-        no_cand_banded = no_cand.withColumn(
-            "amount_band", F.floor(F.log1p("inv_amount") / band_width).cast("long")
         )
         tol = f"CAST({AMOUNT_TOLERANCE!r} AS DOUBLE)"
         top_expr = f"""
@@ -544,62 +456,51 @@ def reconcile(
                           'Matching amount' AS reason,
                           50 AS confidence))
         """
-        sug = (
-            no_cand_banded.join(band_arrays, "amount_band")
-            .withColumn("amount_suggestions", F.expr(top_expr))
-            .filter(F.size("amount_suggestions") > 0)
-            .select("invoice_url", "amount_suggestions")
-        )
+        no_vendor = F.col("flag_reason").startswith(NO_VENDOR)
         results = (
-            results.join(sug, "invoice_url", "left")
+            assigned.withColumn("amount_band", F.when(no_vendor, band("inv_amount")))
+            .join(band_arrays, "amount_band", "left")
+            .withColumn("amount_suggestions", F.expr(top_expr))
             .withColumn(
                 "suggestions",
                 F.when(
-                    (F.col("match_status") == "missing")
-                    & F.col("record_id").isNull()
-                    & F.col("amount_suggestions").isNotNull()
-                    & F.col("flag_reason").startswith("No matching vendor"),
-                    F.col("amount_suggestions"),
+                    F.size("amount_suggestions") > 0, F.col("amount_suggestions")
                 ).otherwise(F.col("suggestions")),
             )
-            .drop("amount_suggestions")
         )
+    results = results.select(*RESULT_SCHEMA.fieldNames())
 
-    results = results.persist(StorageLevel.MEMORY_AND_DISK)
-    matched_ids = results.filter(F.col("record_id").isNotNull()).select("record_id")
-    missing_records = ledger.join(matched_ids, "record_id", "left_anti")
-
-    # summary (ref :201-210): one conditional-agg job per side
-    # coalesce: SQL SUM over zero rows is NULL, but the reference's counters
-    # start at 0 (ref :201-210) — an empty invoice set must report 0s
+    # summary (ref :201-210): one conditional aggregation over the
+    # assignment next to one over the register. coalesce: SQL SUM over zero
+    # rows is NULL, but the reference's counters start at 0. A register row
+    # is missing when no invoice claimed its id — counted on the rows, not
+    # the ids, so the count equals missing_records' even where two identical
+    # register rows share their content-hash id (sources/registers.py).
     def _n(status: str):
         return F.coalesce(
             F.sum(F.when(F.col("match_status") == status, 1).otherwise(0)), F.lit(0)
         )
 
-    res_agg = results.agg(
+    claimed = used_ids.distinct().withColumn("claimed", F.lit(True))
+    summary = assigned.agg(
         F.count("*").alias("total_invoices"),
         _n("matched").alias("matched"),
         _n("mismatch").alias("mismatched"),
         _n("missing").alias("missing_invoices"),
         _n("duplicate").alias("duplicate"),
+        F.coalesce(F.round(F.sum("inv_amount"), 2), F.lit(0.0)).alias(
+            "total_amount_invoiced"
+        ),
+    ).crossJoin(
+        ledger.join(claimed, "record_id", "left").agg(
+            F.count("*").alias("total_records"),
+            F.coalesce(
+                F.round(F.sum(normalize_amount_col(F.col("expected_amount"))), 2),
+                F.lit(0.0),
+            ).alias("total_amount_expected"),
+            F.count(F.when(F.col("claimed").isNull(), 1)).alias("missing_records"),
+        )
     )
-    # sum over ALL invoices (duplicates included) from the persisted slim
-    # frame — using the raw `invoices` here would re-run the upstream
-    # extraction UDF just to add four doubles per row
-    inv_agg = inv_flagged.agg(
-        F.coalesce(
-            F.round(F.sum(normalize_amount_col(F.col("total_amount"))), 2), F.lit(0.0)
-        ).alias("total_amount_invoiced")
-    )
-    led_agg = ledger.agg(
-        F.count("*").alias("total_records"),
-        F.coalesce(
-            F.round(F.sum(normalize_amount_col(F.col("expected_amount"))), 2), F.lit(0.0)
-        ).alias("total_amount_expected"),
-    )
-    missing_agg = missing_records.agg(F.count("*").alias("missing_records"))
-    summary = res_agg.crossJoin(inv_agg).crossJoin(led_agg).crossJoin(missing_agg)
 
     return Reconciled(
         {
@@ -607,5 +508,5 @@ def reconcile(
             "missing_records": missing_records,
             "summary": summary,
         },
-        cached=[inv_flagged, assigned, results],
+        cached=[assigned],
     )

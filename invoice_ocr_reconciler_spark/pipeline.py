@@ -106,8 +106,6 @@ def extract_and_parse(pages: DataFrame, include_text: bool = True) -> DataFrame:
 def run_pipeline(
     pages: DataFrame,
     ledger: DataFrame,
-    broadcast_ledger: bool = True,
-    with_amount_suggestions: bool = True,
     include_text: bool = False,
 ) -> Reconciled:
     """Full extract+reconcile; returns results/missing_records/summary plus
@@ -123,11 +121,6 @@ def run_pipeline(
     extraction: a batch landed as one file is one scan split, which would
     run every page's extraction on one core."""
     invoices = extract_and_parse(with_scan_parallelism(pages), include_text=include_text)
-    out = reconcile(
-        invoices,
-        ledger,
-        broadcast_ledger=broadcast_ledger,
-        with_amount_suggestions=with_amount_suggestions,
-    )
+    out = reconcile(invoices, ledger)
     out["invoices"] = invoices
     return out

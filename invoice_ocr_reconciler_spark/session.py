@@ -38,8 +38,13 @@ SHUFFLE_BLOCK_TARGET_BYTES = 128 * 1024 * 1024
 #     containment_pairs@50k included, AND it is exactly what local[32]
 #     already derived from 2x cores — so the bench regime is untouched.
 #
-# Below the floor AQE coalesces to actual map-output bytes (small jobs pay
-# nothing); above it, 64 x 128 MB ≈ 8 GB per shuffle stage before a
+# Below the floor AQE coalesces a shuffle's reducers to actual map-output
+# bytes. That does not make every small job free: AQE does not change the
+# output partitioning of a persisted frame's plan (Spark's
+# spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is off), so a
+# small cached frame can still run 64 tasks per stage — ROADMAP item 1
+# measured a 2k-page reconcile batch at 1,672 tasks this way, against 97
+# with that conf on. Above the floor, 64 x 128 MB ≈ 8 GB per shuffle stage before a
 # 100-TB submitter must raise it — via spark-submit --conf exactly as
 # they raise shuffle.partitions, or programmatically via
 # get_spark(data_bytes_hint=...) which sizes both knobs from input bytes

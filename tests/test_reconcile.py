@@ -182,8 +182,7 @@ def test_amount_tolerance_symmetry(spark):
 
 def test_reconcile_empty_invoices(spark):
     """Degenerate input: zero invoices -> zero results, every ledger record
-    missing, summary all-zero counters (exercises the empty-partition branch
-    of the mapInPandas greedy wrapper)."""
+    missing, summary all-zero counters (the greedy kernel sees no rows)."""
     from invoice_ocr_reconciler_spark import datagen
     from invoice_ocr_reconciler_spark.operators.reconcile import reconcile
 
@@ -221,10 +220,31 @@ def test_broadcast_and_smj_paths_identical(spark):
     assert rows(True) == rows(False)
 
 
+def test_summary_counts_missing_register_rows(spark):
+    """Two identical register rows share their content-hash record_id; the
+    summary's missing_records still equals the missing_records frame's."""
+    from invoice_ocr_reconciler_spark.sources.registers import normalize_register
+
+    raw = spark.createDataFrame(
+        [("Acme Corp", "100.00", "2024-01-01", "REF-1")] * 2
+        + [("Zeta Ltd", "50.00", "2024-01-02", "REF-2")],
+        "vendor string, amount string, due_date string, reference string",
+    )
+    inv = spark.createDataFrame(
+        [("u1", "INV-1", "Acme Corp", 100.0)],
+        "url string, invoice_number string, vendor_name string, total_amount double",
+    )
+    out = reconcile(inv, normalize_register(raw))
+    s = out["summary"].collect()[0]
+    assert (s["total_records"], s["missing_records"]) == (3, 1)
+    assert out["missing_records"].count() == 1
+    out.release()
+
+
 def test_release_leaves_no_cached_frames(spark):
-    """reconcile caches three frames per call; release() drops them, so a
-    session that reconciles batch after batch holds no more cached RDDs
-    after each batch than before the first."""
+    """reconcile caches one frame per call (the greedy assignment); release()
+    drops it, so a session that reconciles batch after batch holds no more
+    cached RDDs after each batch than before the first."""
     inv = spark.createDataFrame(
         INVOICES, "url string, invoice_number string, vendor_name string, total_amount double"
     )
@@ -235,8 +255,133 @@ def test_release_leaves_no_cached_frames(spark):
     before = persistent().size()
     for _ in range(2):
         out = reconcile(inv, led)
-        out["summary"].collect()  # reads all three cached frames
-        assert persistent().size() == before + 3
+        out["summary"].collect()  # reads the cached assignment
+        assert persistent().size() == before + 1
         out.release()
         assert persistent().size() == before
         assert not out["results"].is_cached
+
+
+# --- the greedy kernel on hand-built Arrow batches (no Spark session) ---
+
+def _kernel_batch(rows):
+    """One Arrow batch shaped like the rows reconcile feeds the kernel."""
+    import pyarrow as pa
+
+    cand = pa.struct([
+        ("vendor_score", pa.float64()), ("record_id", pa.string()),
+        ("rec_amount", pa.float64()), ("discrepancy", pa.float64()),
+        ("amount_match", pa.bool_()), ("percent_diff", pa.int32()),
+        ("combined_score", pa.float64()), ("confidence", pa.int32()),
+    ])
+    schema = pa.schema([
+        ("url", pa.string()), ("block_key", pa.string()),
+        ("is_duplicate", pa.bool_()), ("invoice_number", pa.string()),
+        ("vendor_name", pa.string()), ("inv_amount", pa.float64()),
+        ("cands", pa.list_(cand)),
+    ])
+    full = [
+        {"is_duplicate": False, "invoice_number": "N-" + r["url"],
+         "vendor_name": "Acme Corp", "inv_amount": 100.0, "cands": [], **r}
+        for r in rows
+    ]
+    return pa.RecordBatch.from_pylist(full, schema=schema)
+
+
+def _cand(record_id, vendor_score=0.0, combined_score=0.0, confidence=100):
+    return {"vendor_score": vendor_score, "record_id": record_id, "rec_amount": 100.0,
+            "discrepancy": 0.0, "amount_match": True, "percent_diff": 0,
+            "combined_score": combined_score, "confidence": confidence}
+
+
+def _run_kernel(*batches):
+    from invoice_ocr_reconciler_spark.operators.reconcile import (
+        ASSIGNED_SCHEMA,
+        assign_batches,
+    )
+
+    out = list(assign_batches(iter(batches)))
+    assert len(out) == len(batches)
+    assert all(b.schema.names == ASSIGNED_SCHEMA.fieldNames() for b in out)
+    return {r["invoice_url"]: r for b in out for r in b.to_pylist()}
+
+
+def test_kernel_used_records_carry_across_batches():
+    """A block split over two Arrow batches: the record the first batch
+    claimed is still used in the second."""
+    rows = _run_kernel(
+        _kernel_batch([{"url": "u1", "block_key": "acme", "cands": [_cand("R1")]}]),
+        _kernel_batch([{"url": "u2", "block_key": "acme", "cands": [_cand("R1")]}]),
+    )
+    assert rows["u1"]["match_status"] == "matched"
+    assert rows["u2"]["match_status"] == "missing"
+    assert rows["u2"]["record_id"] is None
+
+
+def test_kernel_used_records_reset_at_block_change():
+    rows = _run_kernel(_kernel_batch([
+        {"url": "u1", "block_key": "acme", "cands": [_cand("R1")]},
+        {"url": "u2", "block_key": "zeta", "cands": [_cand("R1")]},
+    ]))
+    assert rows["u1"]["record_id"] == rows["u2"]["record_id"] == "R1"
+    assert rows["u2"]["match_status"] == "matched"
+
+
+def test_kernel_empty_candidates_is_no_vendor_missing():
+    rows = _run_kernel(_kernel_batch([
+        {"url": "u1", "block_key": "zeta", "vendor_name": "Zeta", "inv_amount": 42.5},
+        {"url": "u2", "block_key": "zeta", "vendor_name": None},
+    ]))
+    assert rows["u1"] == {
+        "invoice_url": "u1", "record_id": None, "match_status": "missing",
+        "discrepancy": 42.5,
+        "flag_reason": "No matching vendor found in payment register for: Zeta",
+        "confidence_score": 0, "suggestions": None, "inv_amount": 42.5,
+    }
+    assert rows["u2"]["flag_reason"] == "No matching vendor found in payment register for: "
+
+
+def test_kernel_saturated_block_suggests_three_used_records():
+    cands = [_cand(f"R{i}", combined_score=i / 10, confidence=100 - i) for i in range(1, 5)]
+    rows = _run_kernel(_kernel_batch(
+        [{"url": f"u{i}", "block_key": "acme", "cands": cands} for i in range(1, 6)]
+    ))
+    # each invoice claims the best record the earlier urls left
+    assert [rows[f"u{i}"]["record_id"] for i in range(1, 5)] == ["R1", "R2", "R3", "R4"]
+    r = rows["u5"]
+    assert (r["match_status"], r["record_id"], r["discrepancy"], r["confidence_score"]) == (
+        "missing", None, 100.0, 0)
+    assert r["flag_reason"] == "All potential matching records already used. Vendor: Acme Corp"
+    assert r["suggestions"] == [
+        {"record_id": f"R{i}", "confidence": 100 - i,
+         "reason": f"Fuzzy vendor match ({100 - i}%) - Already linked to another invoice"}
+        for i in range(1, 4)
+    ]
+
+
+def test_kernel_duplicate_claims_nothing():
+    rows = _run_kernel(_kernel_batch([
+        {"url": "u1", "block_key": "acme", "is_duplicate": True,
+         "invoice_number": "INV-1", "cands": []},
+        {"url": "u2", "block_key": "acme", "cands": [_cand("R1")]},
+    ]))
+    assert rows["u1"] == {
+        "invoice_url": "u1", "record_id": None, "match_status": "duplicate",
+        "discrepancy": 0.0, "flag_reason": "Duplicate invoice number: INV-1",
+        "confidence_score": 100, "suggestions": None, "inv_amount": 100.0,
+    }
+    assert rows["u2"]["record_id"] == "R1"
+
+
+def test_kernel_matched_row_has_empty_suggestions():
+    """A matched row's suggestions are [], not null (results digests tell
+    the two apart); its confidence is floored at 70."""
+    rows = _run_kernel(_kernel_batch([
+        {"url": "u1", "block_key": "acme",
+         "cands": [_cand("R1", vendor_score=0.2, combined_score=0.12, confidence=60)]},
+    ]))
+    assert rows["u1"] == {
+        "invoice_url": "u1", "record_id": "R1", "match_status": "matched",
+        "discrepancy": 0.0, "flag_reason": None, "confidence_score": 70,
+        "suggestions": [], "inv_amount": 100.0,
+    }
