@@ -201,19 +201,18 @@ def pagerank(
     contrib_places = places + 3
     out_nodes = nodes.join(deg, "node", "left")  # deg NULL = dangling
     # every iteration reads `ranks` TWICE (dangling agg + contribution
-    # join) and `out_nodes` once, so without materialization the plan
-    # tree doubles per iteration. LAZY persists break the re-reference
-    # while keeping the run one job — measured (4M-node graph, 8 cores,
-    # 3 iters): 45.6s with per-iteration eager localCheckpoint -> 23.0s
-    # persisted, identical ranks; the eager RDD materialization was a
-    # scheduling barrier per iteration. localCheckpoint remains as a
-    # periodic lineage cut for deep runs (hyperball's contract).
-    checkpoint_every = 8
+    # join) and `out_nodes` once, so the plan tree doubles per iteration
+    # unless each round's lineage is cut. A persist does not cut it: an
+    # InMemoryTableScan still renders the plan it caches, so every
+    # action's plan description walks every earlier round (a 6-edge
+    # graph ran out of a 3g heap at 8 iterations). The cut is LAZY so the
+    # run stays one job: an eager checkpoint per round is a scheduling
+    # barrier (4M-node graph, 8 cores, 3 iters: 45.6s eager vs 23.0s as
+    # one job).
     if truncate_lineage:
         out_nodes = out_nodes.persist(StorageLevel.MEMORY_AND_DISK)
     ranks = out_nodes.select("node", "deg", F.lit(1.0 / n).alias("rank"))
-    persisted: list[DataFrame] = []
-    for it in range(1, int(n_iter) + 1):
+    for _ in range(int(n_iter)):
         # dangling mass: 1-row agg, broadcast back — exact mass conservation
         dang = F.broadcast(
             ranks.agg(
@@ -251,13 +250,7 @@ def pagerank(
             )
         )
         if truncate_lineage:
-            ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(ranks)
-            if it % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
+            ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", "rank")
 
 
@@ -1228,14 +1221,12 @@ def trust_rank(
     )
     if s == 0:
         return out_nodes.select("node", F.lit(0.0).alias("trust"))
-    # same double-reference shape as pagerank -> same lazy-persist
-    # lineage contract (see pagerank's measured rationale)
-    checkpoint_every = 8
+    # same double-reference shape as pagerank -> same per-round lazy
+    # localCheckpoint (see pagerank: a persist does not cut the plan)
     if truncate_lineage:
         out_nodes = out_nodes.persist(StorageLevel.MEMORY_AND_DISK)
     ranks = out_nodes.select("node", "deg", "tele", F.col("tele").alias("rank"))
-    persisted: list[DataFrame] = []
-    for it in range(1, int(n_iter) + 1):
+    for _ in range(int(n_iter)):
         # dangling mass: 1-row agg broadcast back (exact conservation,
         # the pagerank contract) — but redistributed over SEEDS, not /N
         dang = F.broadcast(
@@ -1275,13 +1266,7 @@ def trust_rank(
             )
         )
         if truncate_lineage:
-            ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(ranks)
-            if it % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
+            ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", F.col("rank").alias("trust"))
 
 

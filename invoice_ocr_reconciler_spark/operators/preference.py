@@ -26,10 +26,13 @@ judgments), the item table is small (models / sources / annotators):
     on both endpoints (strengths frame is item-sized -> broadcast
     hint), one groupBy(item) for the denominator, one 1-row
     normalization agg broadcast back. No per-row Python anywhere.
-  * Strengths are persisted per round (the operators/graph.py pagerank
-    lineage contract: each round reads the previous strengths twice —
-    join + normalization — so a lazy persist stops plan-tree doubling
-    while keeping the run one job).
+  * Each round's strengths are cut from their lineage with a lazy
+    localCheckpoint (the operators/graph.py pagerank contract). A round
+    reads the previous strengths four times — both pair-join endpoints,
+    under the raw update and again under its normalization total — so
+    without a cut the plan grows fourfold per round. A persist does not
+    cut it: a cached frame still renders the plan it caches. The lazy
+    cut keeps the run one job.
 
 Cross-engine determinism (the DuckDB oracle unrolls the rounds as
 CTEs): every division is rounded on the 1e-12 grid via
@@ -49,7 +52,6 @@ from invoice_ocr_reconciler_spark.plans.relational import roundn
 
 ITER_PLACES = 12
 OUT_PLACES = 9
-CHECKPOINT_EVERY = 8
 
 
 def bt_strengths(
@@ -107,7 +109,6 @@ def bt_strengths(
     n_games = sym.groupBy("item").agg(F.sum("n_games").alias("n_games"))
 
     strengths = items.select("item", F.lit(1.0).alias("p"))
-    persisted: list[DataFrame] = []
     for _ in range(int(n_iter)):
         p_self = strengths.select(F.col("item"), F.col("p").alias("p_i"))
         p_opp = strengths.select(
@@ -156,15 +157,7 @@ def bt_strengths(
             .alias("p"),
         )
         if truncate_lineage:
-            strengths = strengths.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(strengths)
-            if len(persisted) % CHECKPOINT_EVERY == 0:
-                # the pagerank deep-run contract: periodic eager lineage
-                # cut, then release the per-round caches it supersedes
-                strengths = strengths.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
+            strengths = strengths.localCheckpoint(eager=False)
 
     from pyspark.sql import Window
 

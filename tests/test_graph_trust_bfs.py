@@ -41,6 +41,18 @@ def test_trust_rank_mass_conservation_and_seed_teleport(spark):
     assert math.isclose(total, 1.0, abs_tol=1e-6)
 
 
+def test_trust_rank_mass_conserved_with_dangling_deep(spark):
+    # pagerank's dangling-node graph (9 has no outlinks) at 8 rounds: each
+    # round's lineage is cut, so the plan stays flat and the mass stays 1
+    e = _edges(spark, [(1, 9), (2, 9), (3, 9), (1, 2), (2, 3), (3, 1)])
+    total = (
+        trust_rank(e, _seeds(spark, [1]), n_iter=8)
+        .agg(F.sum("trust").alias("s"))
+        .collect()[0]["s"]
+    )
+    assert abs(total - 1.0) < 1e-6
+
+
 def test_trust_rank_no_seed_in_graph_is_all_zero(spark):
     e = _edges(spark, [(0, 1)])
     out = trust_rank(e, _seeds(spark, [99])).collect()

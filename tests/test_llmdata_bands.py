@@ -48,6 +48,14 @@ def test_bt_partitioning_invariance(spark):
     assert a == b
 
 
+def test_bt_deep_run_one_row_per_item(spark):
+    # 8 rounds: each round's strengths are cut from their lineage, so the
+    # plan does not grow fourfold per round
+    df = spark.createDataFrame(COMPS, "winner string, loser string")
+    rows = bt_strengths(df, n_iter=8).collect()
+    assert sorted(r.item for r in rows) == ["A", "B", "C"]
+
+
 def test_bt_empty(spark):
     df = spark.createDataFrame([], "winner string, loser string")
     assert bt_strengths(df).count() == 0
