@@ -866,26 +866,6 @@ def q_reconcile_summary_invariants(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka truncation-recall curve
-    (operators/matryoshka.py:truncation_recall): recall@5 of exact search
-    over the first {8,16,32,64} embedding dims vs exact search over all
-    64. Fully oracled: DuckDB replays each truncated brute-force pass via
-    list slicing (embedding[1:d]) + the same round-6/id-tiebreak window,
-    then the hits join and per-width rollup."""
-    from invoice_ocr_reconciler_spark.operators.matryoshka import (
-        truncation_recall,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    return truncation_recall(emb, queries_df, dims=[8, 16, 32, 64], k=5).orderBy(
-        "dim"
-    )
-
-
 def q_curation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation pipeline, SQL-expressible subset (annotate -> exact-dedup
     first-wins -> quality/lang filter): the per-doc survivors with their
@@ -4597,7 +4577,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # tightened oracles + recall reporting
         "parse_fields_subset": q_parse_fields_subset,
         "reconcile_summary_invariants": q_reconcile_summary_invariants,
-        "matryoshka_recall": q_matryoshka_recall,
         # composed training-data curation
         "curation_filter": q_curation_filter,
         "curation_pipeline": q_curation_pipeline,
@@ -6680,7 +6659,7 @@ def _pca_recall_oracle() -> str:
     1e-6 floor-half-up snap), the per-width reduced-space brute-force
     top-5 (eigenvectors nest, so width w = the first w coords), the
     full-space truth pass, and the recall/explained rollup replayed in
-    SQL (matryoshka_recall's slice pattern + ann_brute_force's window)."""
+    SQL (list slicing per width + ann_brute_force's window)."""
     loaded = _load_emb_local()
     if loaded is None:
         return ""
@@ -7725,46 +7704,6 @@ def oracle_sql() -> dict[str, str]:
                                    ORDER BY cosine DESC, neighbor_id) AS INT) AS nb_rank
                        FROM s)
             SELECT query_id, neighbor_id, cosine, nb_rank FROM r WHERE nb_rank <= 5
-        """,
-        # matryoshka truncation recall: the brute-force replay run once
-        # per prefix width via DuckDB 1-based list slicing, plus the
-        # full-width truth pass; hits join + dims-spine rollup mirrors
-        # operators/matryoshka.py exactly
-        "matryoshka_recall": """
-            WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-                       FROM embeddings WHERE vec_id < 10),
-                 c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv
-                       FROM embeddings),
-                 dims(dim) AS (VALUES (CAST(8 AS INT)), (16), (32), (64)),
-                 full_r AS (
-                   SELECT query_id, neighbor_id FROM (
-                     SELECT query_id, neighbor_id,
-                            row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(list_cosine_similarity(qv, cv), 6) DESC,
-                                         neighbor_id) AS rnk
-                     FROM q, c WHERE neighbor_id <> query_id)
-                   WHERE rnk <= 5),
-                 trunc_r AS (
-                   SELECT dim, query_id, neighbor_id FROM (
-                     SELECT d.dim, query_id, neighbor_id,
-                            row_number() OVER (PARTITION BY d.dim, query_id
-                                ORDER BY round(list_cosine_similarity(
-                                    qv[1:d.dim], cv[1:d.dim]), 6) DESC,
-                                         neighbor_id) AS rnk
-                     FROM q, c, dims d WHERE neighbor_id <> query_id)
-                   WHERE rnk <= 5),
-                 h AS (SELECT t.dim, count(*) AS hits
-                       FROM trunc_r t JOIN full_r f
-                         USING (query_id, neighbor_id)
-                       GROUP BY t.dim),
-                 tot AS (SELECT count(*) AS total FROM full_r)
-            SELECT d.dim,
-                   CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-                   CAST(tot.total AS BIGINT) AS total,
-                   round(CAST(COALESCE(h.hits, 0) AS DOUBLE) / tot.total, 6)
-                       AS recall_at_k
-            FROM dims d LEFT JOIN h USING (dim), tot
-            ORDER BY d.dim
         """,
         # hard_negatives: brute scoring replay + null-safe label
         # inequality (IS DISTINCT FROM) + 0.99 false-negative ceiling

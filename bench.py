@@ -108,7 +108,6 @@ def main() -> None:
         "content_sniff",     # magic-byte type router (codegen)
         "resolve_redirects", # bounded-unroll 3xx chain resolution
         "ann_brute_force",
-        "matryoshka_recall",    # truncation-recall curve (4+1 exact passes)
         "align_sentences",      # Gale-Church bitext DP (one Arrow crossing)
         "pca_covariance",       # exact-integer PCA moment pass (codegen)
         "upsert_table",         # MERGE/upsert over the orders table

@@ -9,10 +9,10 @@ one row per invoice from input to result:
                          order = input array order, ours = url (stable, documented);
 2. key normalization   — pure column expressions (ref :15-23);
 3. blocked similarity join — block key = first token of the normalized vendor;
-                         the ledger collapses to one array row per block and is
-                         broadcast (the Fuse index build at ref :53-67 becomes a
-                         broadcast dim), or joins shuffled on the block key when
-                         it is too big to broadcast;
+                         the ledger collapses to one array row per block (the
+                         Fuse index build at ref :53-67) and joins on the block
+                         key; Spark's join selection decides broadcast vs
+                         shuffle from the register's size;
 4. JVM-side scoring    — Levenshtein ratio + token-set (Dice) similarity,
                          vendor_score = 1 - max(lev_ratio, token_dice); the
                          amount-tolerance predicate abs(a-b)/max(a,b) <= 1%
@@ -142,7 +142,7 @@ def _with_amount_scores(c):
     )
 
 
-def _with_candidates(invoices: DataFrame, ledger: DataFrame, broadcast_ledger: bool) -> DataFrame:
+def _with_candidates(invoices: DataFrame, ledger: DataFrame) -> DataFrame:
     """``invoices`` plus ``block_key``, ``inv_amount`` and ``cands``, one row
     per input row: the <= 10 ledger records of the invoice's block whose
     vendor scores within VENDOR_THRESHOLD, in (vendor_score, record_id) order
@@ -187,32 +187,16 @@ def _with_candidates(invoices: DataFrame, ledger: DataFrame, broadcast_ledger: b
     def passing(c):
         return c["vendor_score"] <= VENDOR_THRESHOLD
 
-    if broadcast_ledger:
-        # the per-block ledger collapses to one array row (|blocks| rows —
-        # trivially broadcastable) and each invoice scores its block inside
-        # codegen array expressions: no pair rows at all. The left join keeps
-        # invoices whose block no record shares (null recs -> empty cands).
-        blocks = F.broadcast(
-            led.groupBy("block_key").agg(F.collect_list("rec").alias("recs"))
-        )
-        found = inv.join(blocks, "block_key", "left").select(
-            *keep, F.filter(F.transform("recs", candidate), passing).alias("found")
-        )
-    else:
-        # shuffled sort-merge path for a ledger too big to broadcast: scored
-        # pair rows, the passing ones collected back into one row per invoice
-        # (the left join keeps invoices with no record in their block)
-        c = F.col("c")
-        found = (
-            inv.join(led, "block_key", "left")
-            .withColumn("c", candidate(F.col("rec")))
-            .groupBy(*keep)
-            .agg(
-                F.collect_list(F.when(F.col("rec").isNotNull() & passing(c), c)).alias(
-                    "found"
-                )
-            )
-        )
+    # the per-block ledger collapses to one array row, and each invoice
+    # scores its block inside codegen array expressions: no pair rows at
+    # all. Spark's join selection picks the exchange — a broadcast while the
+    # collapsed register fits autoBroadcastJoinThreshold, a sort-merge join
+    # on the block key once it does not. The left join keeps invoices whose
+    # block no record shares (null recs -> empty cands).
+    blocks = led.groupBy("block_key").agg(F.collect_list("rec").alias("recs"))
+    found = inv.join(blocks, "block_key", "left").select(
+        *keep, F.filter(F.transform("recs", candidate), passing).alias("found")
+    )
     # array_sort on (vendor_score, record_id, rec_amount) = the reference's
     # Fuse order; slice keeps its 10; amounts are scored on those 10 only
     top = F.transform(
@@ -221,16 +205,12 @@ def _with_candidates(invoices: DataFrame, ledger: DataFrame, broadcast_ledger: b
     return found.select(*keep, F.coalesce(top, F.array()).alias("cands"))
 
 
-def candidate_pairs(
-    invoices: DataFrame, ledger: DataFrame, broadcast_ledger: bool = True
-) -> DataFrame:
+def candidate_pairs(invoices: DataFrame, ledger: DataFrame) -> DataFrame:
     """Blocked similarity join + JVM-side scoring as pair rows: one row per
     (invoice url, candidate record), <= 10 per invoice — the candidates
     ``reconcile`` assigns from, exploded."""
     return (
-        _with_candidates(
-            invoices.select("url", "vendor_name", "total_amount"), ledger, broadcast_ledger
-        )
+        _with_candidates(invoices.select("url", "vendor_name", "total_amount"), ledger)
         .select("url", "block_key", "inv_amount", F.explode("cands").alias("c"))
         .select("url", "block_key", "inv_amount", "c.*")
     )
@@ -374,7 +354,6 @@ class Reconciled(dict):
 def reconcile(
     invoices: DataFrame,
     ledger: DataFrame,
-    broadcast_ledger: bool = True,
     with_amount_suggestions: bool = True,
 ) -> Reconciled:
     """Full reconcile stage -> {'results', 'missing_records', 'summary'}.
@@ -393,7 +372,7 @@ def reconcile(
     # analog of the reference persisting OCR output before reconciling
     # (backend/server.js:298-315 then :516-529)
     assigned = (
-        _with_candidates(flagged, ledger, broadcast_ledger)
+        _with_candidates(flagged, ledger)
         .select(
             "url", "block_key", "is_duplicate", "invoice_number", "vendor_name",
             "inv_amount",
@@ -413,7 +392,7 @@ def reconcile(
     # sides grow with the corpus, so BNLJ goes quadratic. Amounts are banded
     # on a log_{1.01} grid: any pair within the 1% tolerance lands within
     # +-2 bands, so exploding the (small) unused side over its neighbor
-    # bands turns this into a broadcast equi-join. The per-band unused
+    # bands turns this into an equi-join. The per-band unused
     # records collapse to ONE ARRAY ROW (same shape as the candidate join),
     # and the exact tolerance filter, the record_id-ascending top-3 cut
     # (ref :93) and the suggestion structs all run inside codegen array
@@ -427,7 +406,7 @@ def reconcile(
 
         # a record appears ONCE per band group, so the per-row array join
         # yields each candidate at most once — no dedup pass needed
-        band_arrays = F.broadcast(
+        band_arrays = (
             missing_records.select(
                 F.col("record_id").alias("s_record_id"),
                 normalize_amount_col(F.col("expected_amount")).alias("s_amount"),

@@ -24,8 +24,6 @@ def with_scan_parallelism(df: DataFrame) -> DataFrame:
     Values are partition-invariant everywhere this is used (pure per-row
     functions; pinned by the two-parallelism determinism tests).
     """
-    if df.isStreaming:  # .rdd is illegal on streaming frames; micro-batch
-        return df  # parallelism is the source's concern (maxFilesPerTrigger)
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -199,9 +199,11 @@ def test_reconcile_empty_invoices(spark):
 
 
 def test_broadcast_and_smj_paths_identical(spark):
-    """candidate generation has two physical paths (array-blocked broadcast
-    vs exploded sort-merge with the kernel-side cap); reconcile output must
-    be identical row-for-row across them."""
+    """reconcile has one candidate path and Spark's join selection picks its
+    exchange: the register joins broadcast under the session's
+    autoBroadcastJoinThreshold and sort-merge with it at -1. The plan
+    assertions make sure two strategies are compared; the output must be
+    identical row-for-row across them."""
     from invoice_ocr_reconciler_spark import datagen
     from invoice_ocr_reconciler_spark.operators.reconcile import reconcile
     from invoice_ocr_reconciler_spark.pipeline import extract_and_parse
@@ -209,15 +211,32 @@ def test_broadcast_and_smj_paths_identical(spark):
     inv = extract_and_parse(datagen.pages_df(spark, 400), include_text=False)
     ledger = datagen.ledger_df(spark, 50, 400)
 
-    def rows(broadcast):
-        out = reconcile(inv, ledger, broadcast_ledger=broadcast)
-        return sorted(
-            map(str, out["results"].select(
+    def rows_and_plan():
+        out = reconcile(inv, ledger)
+        try:
+            res = out["results"].select(
                 "invoice_url", "record_id", "match_status", "discrepancy",
-                "flag_reason", "confidence_score", "suggestions").collect())
-        )
+                "flag_reason", "confidence_score", "suggestions")
+            rows = sorted(map(str, res.collect()))
+            return rows, res._jdf.queryExecution().executedPlan().toString()
+        finally:
+            # a cached assignment would be reused by the next call's plan
+            out.release()
 
-    assert rows(True) == rows(False)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    broadcast_rows, broadcast_plan = rows_and_plan()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        smj_rows, smj_plan = rows_and_plan()
+    finally:
+        spark.conf.set(key, old)
+
+    assert "BroadcastHashJoin" in broadcast_plan
+    assert "SortMergeJoin" not in broadcast_plan
+    assert "SortMergeJoin" in smj_plan
+    assert "BroadcastHashJoin" not in smj_plan
+    assert broadcast_rows == smj_rows
 
 
 def test_summary_counts_missing_register_rows(spark):

@@ -65,7 +65,7 @@ PURE_CODEGEN_QUERIES = [
     "trust_rank", "bfs_distance", "extraction_f1",
     "c4_line_filters",
  "justext_classify",
-    "sketch_quantiles", "matryoshka_recall",
+    "sketch_quantiles",
     "extractor_sweep",
     "bt_strengths", "temperature_sampling",
     "ngram_diversity", "bootstrap_ci",
