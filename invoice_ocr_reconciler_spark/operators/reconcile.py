@@ -370,7 +370,10 @@ def reconcile(
     # results, missing_records and summary all read the assignment: persist
     # it so the upstream DAG (incl. the extraction UDF) runs once — the batch
     # analog of the reference persisting OCR output before reconciling
-    # (backend/server.js:298-315 then :516-529)
+    # (backend/server.js:298-315 then :516-529). The session lets AQE size
+    # the cached plan's block exchange from its map output, so a small batch
+    # runs the kernel in a few merged partitions: coalescing merges whole
+    # reducers (a block stays in one partition) and the sort runs above it.
     assigned = (
         _with_candidates(flagged, ledger)
         .select(

@@ -39,12 +39,13 @@ SHUFFLE_BLOCK_TARGET_BYTES = 128 * 1024 * 1024
 #     already derived from 2x cores — so the bench regime is untouched.
 #
 # Below the floor AQE coalesces a shuffle's reducers to actual map-output
-# bytes. That does not make every small job free: AQE does not change the
-# output partitioning of a persisted frame's plan (Spark's
-# spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is off), so a
-# small cached frame can still run 64 tasks per stage — ROADMAP item 1
-# measured a 2k-page reconcile batch at 1,672 tasks this way, against 97
-# with that conf on. Above the floor, 64 x 128 MB ≈ 8 GB per shuffle stage before a
+# bytes, persisted frames included: get_spark turns on
+# spark.sql.optimizer.canChangeCachedPlanOutputPartitioning, which stock
+# Spark leaves off. With it off a small cached frame runs 64 tasks per
+# stage (a 2k-page reconcile batch: 1,672 tasks for its results, against
+# 97 with it on). Coalescing keeps at least defaultParallelism partitions
+# once a shuffle outgrows ~1 MB per core (coalescePartitions.
+# parallelismFirst), so it narrows nothing at scale. Above the floor, 64 x 128 MB ≈ 8 GB per shuffle stage before a
 # 100-TB submitter must raise it — via spark-submit --conf exactly as
 # they raise shuffle.partitions, or programmatically via
 # get_spark(data_bytes_hint=...) which sizes both knobs from input bytes
@@ -124,7 +125,10 @@ def get_spark(
     bytes — the floor decouples width from core count, so a 2-executor
     session running a corpus-sized pair join no longer concentrates the
     corpus into core-count partitions (the round-4 rehearsal OOM), while
-    small jobs coalesce down and pay nothing. Passing ``data_bytes_hint``
+    small jobs coalesce down and pay nothing. That holds for persisted
+    frames too: ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+    is on, so AQE may also coalesce the shuffle under a cached plan (stock
+    Spark keeps a cached frame at the full width). Passing ``data_bytes_hint``
     (job input bytes) raises the floor via
     ``shuffle_partitions_for_bytes``; passing ``shuffle_partitions``
     explicitly pins BOTH knobs to exactly that value (tests / plan pins
@@ -182,6 +186,9 @@ def get_spark(
             str(initial_partitions),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(

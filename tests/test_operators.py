@@ -513,12 +513,11 @@ def test_iceberg_gate_config_assembly():
     assert got["spark.sql.catalog.local.warehouse"] == "/wh"
 
 
-def test_executor_mode_pins_executor_memory(monkeypatch):
-    """Round-4 regression pin: local-cluster[E,C,M] budgets only the
-    WORKER; without an explicit spark.executor.memory the executor JVMs
-    launch at the 1g default (found when '8g' executors peaked at ~880MB
-    and OOM'd growing a BytesToBytesMap). The builder must carry the
-    requested size. Config-assembly check only — no real session spun."""
+@pytest.fixture
+def built_conf(monkeypatch):
+    """``built_conf(**kwargs)`` -> the master and configs ``get_spark``
+    hands the session builder. Config-assembly checks only — no real
+    session is spun."""
     import invoice_ocr_reconciler_spark.session as sess
 
     captured = {}
@@ -541,51 +540,53 @@ def test_executor_mode_pins_executor_memory(monkeypatch):
     monkeypatch.setattr(
         sess.SparkSession, "builder", FakeBuilder(), raising=True
     )
-    with pytest.raises(RuntimeError, match="stop-before-jvm"):
-        sess.get_spark(cores=2, executors=3, executor_mem_mb=4096)
-    assert captured["master"] == "local-cluster[3,2,4096]"
-    assert captured["spark.executor.memory"] == "4096m"
+
+    def build(**kwargs):
+        captured.clear()
+        with pytest.raises(RuntimeError, match="stop-before-jvm"):
+            sess.get_spark(**kwargs)
+        return dict(captured)
+
+    return build
 
 
-def test_driver_memory_fits_the_box(monkeypatch):
+def test_executor_mode_pins_executor_memory(built_conf):
+    """Round-4 regression pin: local-cluster[E,C,M] budgets only the
+    WORKER; without an explicit spark.executor.memory the executor JVMs
+    launch at the 1g default (found when '8g' executors peaked at ~880MB
+    and OOM'd growing a BytesToBytesMap). The builder must carry the
+    requested size."""
+    conf = built_conf(cores=2, executors=3, executor_mem_mb=4096)
+    assert conf["master"] == "local-cluster[3,2,4096]"
+    assert conf["spark.executor.memory"] == "4096m"
+
+
+def test_driver_memory_fits_the_box(monkeypatch, built_conf):
     """The stock driver heap is a quarter of physical memory, at most 4g,
     so a runaway plan fails with an OutOfMemoryError instead of growing
     the shared JVM until the OS kills it; SPARK_GRAFT_DRIVER_MEM still
-    overrides it. Config-assembly check only — no real session spun."""
+    overrides it."""
     import invoice_ocr_reconciler_spark.session as sess
 
-    captured = {}
-
-    class FakeBuilder:
-        def master(self, m):
-            return self
-
-        def appName(self, *_):
-            return self
-
-        def config(self, k, v):
-            captured[k] = v
-            return self
-
-        def getOrCreate(self):
-            raise RuntimeError("stop-before-jvm")
-
-    monkeypatch.setattr(
-        sess.SparkSession, "builder", FakeBuilder(), raising=True
-    )
     gib = 1024**3
     pages = {"SC_PAGE_SIZE": 4096}
     monkeypatch.setattr(sess.os, "sysconf", lambda k: pages[k])
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     for ram, want in ((15 * gib, "3g"), (64 * gib, "4g"), (2 * gib, "1g")):
         pages["SC_PHYS_PAGES"] = ram // 4096
-        with pytest.raises(RuntimeError, match="stop-before-jvm"):
-            sess.get_spark(cores=2)
-        assert captured["spark.driver.memory"] == want, ram
+        assert built_conf(cores=2)["spark.driver.memory"] == want, ram
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
-    with pytest.raises(RuntimeError, match="stop-before-jvm"):
-        sess.get_spark(cores=2)
-    assert captured["spark.driver.memory"] == "6g"
+    assert built_conf(cores=2)["spark.driver.memory"] == "6g"
+
+
+def test_aqe_may_coalesce_cached_plans(built_conf):
+    """Every session get_spark builds lets AQE change a persisted frame's
+    output partitioning, so a small cached frame (reconcile's assignment)
+    coalesces below the shuffle floor like any other shuffle — on the
+    stock sizing path and with an explicit shuffle_partitions pin alike."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    for kwargs in ({}, {"shuffle_partitions": 8}):
+        assert built_conf(cores=2, **kwargs)[key] == "true", kwargs
 
 
 def test_detect_hot_hosts_single_job(spark):

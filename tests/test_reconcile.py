@@ -239,6 +239,73 @@ def test_broadcast_and_smj_paths_identical(spark):
     assert broadcast_rows == smj_rows
 
 
+def test_cached_assignment_coalesces_without_changing_rows(spark):
+    """The session lets AQE coalesce the block exchange under reconcile's
+    persisted assignment. Coalescing merges whole reducers, so each block
+    stays in one partition and the sort above the read keeps every merged
+    partition in (block_key, url) order: the rows must not change, only the
+    task count drops. The suite pins 8 shuffle partitions, so AQE merges
+    several reducers, each holding whole blocks, into one kernel partition
+    at this size."""
+    hot = [  # one hot block: 40 invoices contend for 20 records
+        (f"https://h.example/{i:03d}", f"H-{i}", "Acme Corp", 100.0 + i % 10)
+        for i in range(40)
+    ]
+    cold = [
+        (f"https://c.example/{v}/{i}", f"{v[:2]}-{i}", f"{v} Ltd", 50.0 * (i + 1))
+        for v in ("Zeta", "Beta", "Gamma", "Delta", "Omega")
+        for i in range(3)
+    ]
+    inv = spark.createDataFrame(
+        hot + cold + [("https://c.example/dup", "H-1", "Acme Corp", 101.0)],
+        "url string, invoice_number string, vendor_name string, total_amount double",
+    )
+    led = spark.createDataFrame(
+        [(f"A{j}", "Acme Inc", 100.0 + j % 10) for j in range(20)]
+        + [(f"{v}{i}", f"{v} GmbH", 50.0 * (i + 1) + 0.25)
+           for v in ("Zeta", "Beta", "Gamma", "Delta") for i in range(2)]
+        + [("X1", "Nobody LLC", 7.0)],
+        "record_id string, vendor_name string, expected_amount double",
+    )
+    sc = spark.sparkContext
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+    def rows_and_tasks(value):
+        group = f"cached-coalesce-{value}"
+        spark.conf.set(key, value)
+        sc.setJobGroup(group, "cached assignment coalescing")
+        out = reconcile(inv, led)
+        try:
+            rows = sorted(map(str, out["results"].select(
+                "invoice_url", "record_id", "match_status", "discrepancy",
+                "flag_reason", "confidence_score", "suggestions").collect()))
+            rows.append(str(out["summary"].collect()))
+        finally:
+            sc.setJobGroup(None, None)
+            # a cached assignment would be reused by the next call's plan
+            out.release()
+        tracker = sc.statusTracker()
+        tasks = 0
+        for job in tracker.getJobIdsForGroup(group):
+            for stage in tracker.getJobInfo(job).stageIds:
+                info = tracker.getStageInfo(stage)
+                tasks += info.numCompletedTasks if info else 0
+        return rows, tasks
+
+    old = spark.conf.get(key)
+    try:
+        wide_rows, wide_tasks = rows_and_tasks("false")
+        merged_rows, merged_tasks = rows_and_tasks("true")
+    finally:
+        spark.conf.set(key, old)
+
+    statuses = " ".join(wide_rows)
+    for status in ("matched", "mismatch", "missing", "duplicate"):
+        assert f"'{status}'" in statuses, status
+    assert merged_rows == wide_rows
+    assert merged_tasks < wide_tasks, (merged_tasks, wide_tasks)
+
+
 def test_summary_counts_missing_register_rows(spark):
     """Two identical register rows share their content-hash record_id; the
     summary's missing_records still equals the missing_records frame's."""
