@@ -351,11 +351,7 @@ class Reconciled(dict):
             df.unpersist()
 
 
-def reconcile(
-    invoices: DataFrame,
-    ledger: DataFrame,
-    with_amount_suggestions: bool = True,
-) -> Reconciled:
+def reconcile(invoices: DataFrame, ledger: DataFrame) -> Reconciled:
     """Full reconcile stage -> {'results', 'missing_records', 'summary'}.
 
     ``invoices`` needs (url, invoice_number, vendor_name, total_amount);
@@ -389,7 +385,6 @@ def reconcile(
     used_ids = assigned.filter(F.col("record_id").isNotNull()).select("record_id")
     missing_records = ledger.join(used_ids, "record_id", "left_anti")
 
-    results = assigned
     # amount-only suggestions for vendor-miss invoices (ref :91-94) against
     # the records no invoice claimed. NOT a nested-loop theta join — both
     # sides grow with the corpus, so BNLJ goes quadratic. Amounts are banded
@@ -401,56 +396,55 @@ def reconcile(
     # (ref :93) and the suggestion structs all run inside codegen array
     # expressions. Only vendor-miss rows get a band, so the left join
     # leaves every other row as it is.
-    if with_amount_suggestions:
-        band_width = math.log(1.01)
+    band_width = math.log(1.01)
 
-        def band(amount: str, d: int = 0):
-            return (F.floor(F.log1p(amount) / band_width) + d).cast("long")
+    def band(amount: str, d: int = 0):
+        return (F.floor(F.log1p(amount) / band_width) + d).cast("long")
 
-        # a record appears ONCE per band group, so the per-row array join
-        # yields each candidate at most once — no dedup pass needed
-        band_arrays = (
-            missing_records.select(
-                F.col("record_id").alias("s_record_id"),
-                normalize_amount_col(F.col("expected_amount")).alias("s_amount"),
-            )
-            .withColumn(
-                "amount_band",
-                F.explode(F.array(*[band("s_amount", d) for d in (-2, -1, 0, 1, 2)])),
-            )
-            .groupBy("amount_band")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("s_record_id", "s_amount"))
-                ).alias("band_cands")
-            )
+    # a record appears ONCE per band group, so the per-row array join
+    # yields each candidate at most once — no dedup pass needed
+    band_arrays = (
+        missing_records.select(
+            F.col("record_id").alias("s_record_id"),
+            normalize_amount_col(F.col("expected_amount")).alias("s_amount"),
         )
-        tol = f"CAST({AMOUNT_TOLERANCE!r} AS DOUBLE)"
-        top_expr = f"""
-            transform(
-              slice(
-                filter(band_cands, c ->
-                  CASE WHEN greatest(inv_amount, c.s_amount) = 0D THEN true
-                       ELSE abs(inv_amount - c.s_amount)
-                            / greatest(inv_amount, c.s_amount) <= {tol} END),
-                1, {TOP_K_SUGGESTIONS}),
-              c -> struct(c.s_record_id AS record_id,
-                          'Matching amount' AS reason,
-                          50 AS confidence))
-        """
-        no_vendor = F.col("flag_reason").startswith(NO_VENDOR)
-        results = (
-            assigned.withColumn("amount_band", F.when(no_vendor, band("inv_amount")))
-            .join(band_arrays, "amount_band", "left")
-            .withColumn("amount_suggestions", F.expr(top_expr))
-            .withColumn(
-                "suggestions",
-                F.when(
-                    F.size("amount_suggestions") > 0, F.col("amount_suggestions")
-                ).otherwise(F.col("suggestions")),
-            )
+        .withColumn(
+            "amount_band",
+            F.explode(F.array(*[band("s_amount", d) for d in (-2, -1, 0, 1, 2)])),
         )
-    results = results.select(*RESULT_SCHEMA.fieldNames())
+        .groupBy("amount_band")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("s_record_id", "s_amount"))
+            ).alias("band_cands")
+        )
+    )
+    tol = f"CAST({AMOUNT_TOLERANCE!r} AS DOUBLE)"
+    top_expr = f"""
+        transform(
+          slice(
+            filter(band_cands, c ->
+              CASE WHEN greatest(inv_amount, c.s_amount) = 0D THEN true
+                   ELSE abs(inv_amount - c.s_amount)
+                        / greatest(inv_amount, c.s_amount) <= {tol} END),
+            1, {TOP_K_SUGGESTIONS}),
+          c -> struct(c.s_record_id AS record_id,
+                      'Matching amount' AS reason,
+                      50 AS confidence))
+    """
+    no_vendor = F.col("flag_reason").startswith(NO_VENDOR)
+    results = (
+        assigned.withColumn("amount_band", F.when(no_vendor, band("inv_amount")))
+        .join(band_arrays, "amount_band", "left")
+        .withColumn("amount_suggestions", F.expr(top_expr))
+        .withColumn(
+            "suggestions",
+            F.when(
+                F.size("amount_suggestions") > 0, F.col("amount_suggestions")
+            ).otherwise(F.col("suggestions")),
+        )
+        .select(*RESULT_SCHEMA.fieldNames())
+    )
 
     # summary (ref :201-210): one conditional aggregation over the
     # assignment next to one over the register. coalesce: SQL SUM over zero

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the extraction+reconciliation workload.
 
-Local-mode sandbox today; the same configs scale to a multi-executor cluster
-(the knobs that matter at 100 TB — AQE, Arrow batch caps, shuffle sizing —
-are identical; only master/memory change under spark-submit).
+Local mode here; the same configs carry to a multi-executor cluster, where
+only master, memory and the shuffle width change under spark-submit. The
+session sets only what differs from Spark's defaults (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -14,65 +14,6 @@ from pyspark.sql import SparkSession
 # Arrow record-batch cap: html payloads are large (tens of KB each), so bound
 # the rows per Arrow batch to keep executor + Python-worker memory flat.
 ARROW_MAX_RECORDS_PER_BATCH = 2048
-
-# ~128 MB of shuffle bytes per reduce task: the block size production
-# submitters target so one task's hash map / sort buffer fits any
-# reasonably-sized executor regardless of how few executors are running.
-SHUFFLE_BLOCK_TARGET_BYTES = 128 * 1024 * 1024
-
-# Stock shuffle-partition FLOOR, decoupled from core count. Shuffle
-# partitioning is a DATA property, not a core-count property — the round-4
-# executor rehearsal proved 2x-cores partitions (8 at local-cluster[2,2])
-# concentrate a corpus-sized pair-join hash map into one task and OOM a
-# correctly-sized 8 GB executor (PLANS.md 'rehearsal-exec'), and AQE can
-# coalesce partitions but can NEVER split them. The floor is where the
-# round-5 measurements landed, from both directions:
-#
-#   - a blanket WIDE start (AQE initialPartitionNum 1024, then 256) fixes
-#     the OOM but taxes every multi-stage pipeline at small scale —
-#     interleaved best-of-5 at sf0.1: hits 4.1s -> 10.2s at 1024 (2.3x);
-#     reconcile +39%, bt_strengths +42%, corpus_build +40% at 256 (the
-#     per-stage scheduler/fetch overhead times dozens of stages);
-#   - 64 is the config the executor rehearsal PASSED with (r4 hand-pin,
-#     now the stock value): all ten heavies at E=2/E=4 on 8 GB heaps,
-#     containment_pairs@50k included, AND it is exactly what local[32]
-#     already derived from 2x cores — so the bench regime is untouched.
-#
-# Below the floor AQE coalesces a shuffle's reducers to actual map-output
-# bytes, persisted frames included: get_spark turns on
-# spark.sql.optimizer.canChangeCachedPlanOutputPartitioning, which stock
-# Spark leaves off. With it off a small cached frame runs 64 tasks per
-# stage (a 2k-page reconcile batch: 1,672 tasks for its results, against
-# 97 with it on). Coalescing keeps at least defaultParallelism partitions
-# once a shuffle outgrows ~1 MB per core (coalescePartitions.
-# parallelismFirst), so it narrows nothing at scale. Above the floor, 64 x 128 MB ≈ 8 GB per shuffle stage before a
-# 100-TB submitter must raise it — via spark-submit --conf exactly as
-# they raise shuffle.partitions, or programmatically via
-# get_spark(data_bytes_hint=...) which sizes both knobs from input bytes
-# (shuffle_partitions_for_bytes).
-SHUFFLE_PARTITIONS_FLOOR = 64
-
-
-def shuffle_partitions_for_bytes(
-    input_bytes: int,
-    min_parallelism: int = 8,
-    target_bytes: int = SHUFFLE_BLOCK_TARGET_BYTES,
-    expansion: float = 1.0,
-) -> int:
-    """Data-aware shuffle partition count: ~one ``target_bytes`` block per
-    reduce task, never below ``min_parallelism``.
-
-    Use this to size ``get_spark(data_bytes_hint=...)`` / explicit
-    ``shuffle_partitions`` for a job whose input size is known up front
-    (e.g. a backfill over N bytes of pages). ``expansion`` is the
-    operator's shuffle-bytes-to-input-bytes ratio for workloads known to
-    expand (pair generation, posexplode) — for unknown expansion prefer
-    the stock session, whose AQE initial-partition sizing works from
-    actual map-output bytes instead of estimates."""
-    if input_bytes < 0:
-        raise ValueError(f"input_bytes must be >= 0, got {input_bytes}")
-    blocks = -(-int(input_bytes * expansion) // target_bytes)  # ceil
-    return max(int(min_parallelism), blocks, 1)
 
 
 def default_driver_memory() -> str:
@@ -113,26 +54,19 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
     executors: int | None = None,
     executor_mem_mb: int = 4096,
-    data_bytes_hint: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores.
 
-    Shuffle sizing (stock): ``spark.sql.shuffle.partitions`` =
-    ``max(2 x total cores, SHUFFLE_PARTITIONS_FLOOR)`` with AQE starting
-    every coalescible shuffle there and coalescing from real map-output
-    bytes — the floor decouples width from core count, so a 2-executor
-    session running a corpus-sized pair join no longer concentrates the
-    corpus into core-count partitions (the round-4 rehearsal OOM), while
-    small jobs coalesce down and pay nothing. That holds for persisted
+    ``spark.sql.shuffle.partitions`` defaults to 2 x total cores, where
+    AQE starts every shuffle and coalesces it down to the real map-output
+    bytes; a job too big for that width is widened by its submitter with
+    ``--conf spark.sql.shuffle.partitions=...``. AQE coalesces persisted
     frames too: ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-    is on, so AQE may also coalesce the shuffle under a cached plan (stock
-    Spark keeps a cached frame at the full width). Passing ``data_bytes_hint``
-    (job input bytes) raises the floor via
-    ``shuffle_partitions_for_bytes``; passing ``shuffle_partitions``
-    explicitly pins BOTH knobs to exactly that value (tests / plan pins
-    rely on an exact count).
+    is on (stock Spark keeps a cached frame at the full width). An explicit
+    ``shuffle_partitions`` pins the width exactly (tests and goldens rely on
+    an exact count).
 
     ``executors``: when set, use ``local-cluster[executors, cores,
     executor_mem_mb]`` — SEPARATE executor JVM processes (own GC, allocator,
@@ -142,20 +76,8 @@ def get_spark(
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    total = cores * (executors or 1)
     if shuffle_partitions is None:
-        # stock: core-decoupled floor (see SHUFFLE_PARTITIONS_FLOOR);
-        # AQE coalesces small shuffles down from it, and a
-        # data_bytes_hint raises it for known-big jobs.
-        shuffle_partitions = max(2 * total, SHUFFLE_PARTITIONS_FLOOR)
-        if data_bytes_hint is not None:
-            shuffle_partitions = max(
-                shuffle_partitions,
-                shuffle_partitions_for_bytes(data_bytes_hint),
-            )
-    # AQE starts every coalescible shuffle at the same count (an explicit
-    # pin keeps exact reduce-task counts for determinism tests/goldens)
-    initial_partitions = shuffle_partitions
+        shuffle_partitions = 2 * cores * (executors or 1)
 
     # Python WORKERS do not inherit the driver's sys.path — a caller that
     # imported this package via sys.path manipulation from another cwd would
@@ -179,13 +101,6 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(initial_partitions),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )

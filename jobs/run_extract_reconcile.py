@@ -24,7 +24,6 @@ def main() -> None:
     ap.add_argument("--ledger", required=True, help="register CSV/JSON path")
     ap.add_argument("--out", required=True, help="output root")
     ap.add_argument("--manifest", default=None, help="checkpoint manifest dir")
-    ap.add_argument("--skip-suggestions", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -60,9 +59,7 @@ def main() -> None:
         else read_register_csv(spark, args.ledger)
     )
     invoices = spark.read.parquet(f"{extracted_path}/url_bucket=*")
-    out = reconcile(
-        invoices, ledger, with_amount_suggestions=not args.skip_suggestions
-    )
+    out = reconcile(invoices, ledger)
     out["results"].write.mode("overwrite").parquet(f"{args.out}/results")
     out["missing_records"].write.mode("overwrite").parquet(f"{args.out}/missing_records")
     out["summary"].write.mode("overwrite").json(f"{args.out}/summary")

@@ -29,3 +29,40 @@ def _release_cached_frames():
     active = SparkSession.getActiveSession()
     if active is not None:
         active.catalog.clearCache()
+
+
+@pytest.fixture
+def built_conf(monkeypatch):
+    """``built_conf(**kwargs)`` -> the master and configs ``get_spark``
+    hands the session builder. Config-assembly checks only — no real
+    session is spun."""
+    import invoice_ocr_reconciler_spark.session as sess
+
+    captured = {}
+
+    class FakeBuilder:
+        def master(self, m):
+            captured["master"] = m
+            return self
+
+        def appName(self, *_):
+            return self
+
+        def config(self, k, v):
+            captured[k] = v
+            return self
+
+        def getOrCreate(self):
+            raise RuntimeError("stop-before-jvm")
+
+    monkeypatch.setattr(
+        sess.SparkSession, "builder", FakeBuilder(), raising=True
+    )
+
+    def build(**kwargs):
+        captured.clear()
+        with pytest.raises(RuntimeError, match="stop-before-jvm"):
+            sess.get_spark(**kwargs)
+        return dict(captured)
+
+    return build

@@ -513,43 +513,6 @@ def test_iceberg_gate_config_assembly():
     assert got["spark.sql.catalog.local.warehouse"] == "/wh"
 
 
-@pytest.fixture
-def built_conf(monkeypatch):
-    """``built_conf(**kwargs)`` -> the master and configs ``get_spark``
-    hands the session builder. Config-assembly checks only — no real
-    session is spun."""
-    import invoice_ocr_reconciler_spark.session as sess
-
-    captured = {}
-
-    class FakeBuilder:
-        def master(self, m):
-            captured["master"] = m
-            return self
-
-        def appName(self, *_):
-            return self
-
-        def config(self, k, v):
-            captured[k] = v
-            return self
-
-        def getOrCreate(self):
-            raise RuntimeError("stop-before-jvm")
-
-    monkeypatch.setattr(
-        sess.SparkSession, "builder", FakeBuilder(), raising=True
-    )
-
-    def build(**kwargs):
-        captured.clear()
-        with pytest.raises(RuntimeError, match="stop-before-jvm"):
-            sess.get_spark(**kwargs)
-        return dict(captured)
-
-    return build
-
-
 def test_executor_mode_pins_executor_memory(built_conf):
     """Round-4 regression pin: local-cluster[E,C,M] budgets only the
     WORKER; without an explicit spark.executor.memory the executor JVMs
@@ -582,7 +545,7 @@ def test_driver_memory_fits_the_box(monkeypatch, built_conf):
 def test_aqe_may_coalesce_cached_plans(built_conf):
     """Every session get_spark builds lets AQE change a persisted frame's
     output partitioning, so a small cached frame (reconcile's assignment)
-    coalesces below the shuffle floor like any other shuffle — on the
+    coalesces below the shuffle width like any other shuffle — on the
     stock sizing path and with an explicit shuffle_partitions pin alike."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     for kwargs in ({}, {"shuffle_partitions": 8}):

@@ -395,77 +395,39 @@ def test_shingle_hashes_memoized_identical():
     assert np.array_equal(_shingle_hashes(text), expected)
 
 
-# --- round-5: data-aware shuffle sizing in the LIBRARY path -----------------
-# The round-4 executor rehearsal proved shuffle partitions are a DATA
-# property: 2x-cores partitions at local-cluster[2,2] concentrated a
-# corpus-sized hash map into 8 tasks and OOM'd a correctly-sized 8 GB
-# executor (PLANS.md 'rehearsal-exec'). These tests pin the fix where it
-# now lives — the stock session, not just the rehearsal harness.
+# --- stock shuffle sizing ----------------------------------------------------
+# The stock session starts every shuffle at 2 x total cores and lets AQE
+# coalesce it from real map-output bytes; a submitter widens it with
+# --conf. These tests pin that path and the exact pin tests rely on.
 
 
-def test_shuffle_partitions_for_bytes_math():
-    from invoice_ocr_reconciler_spark.session import (
-        SHUFFLE_BLOCK_TARGET_BYTES,
-        shuffle_partitions_for_bytes,
-    )
-
-    mb = 1024 * 1024
-    assert SHUFFLE_BLOCK_TARGET_BYTES == 128 * mb
-    # floors at min_parallelism for small inputs
-    assert shuffle_partitions_for_bytes(0) == 8
-    assert shuffle_partitions_for_bytes(10 * mb, min_parallelism=4) == 4
-    # ~one 128MB block per task above the floor (ceil division)
-    assert shuffle_partitions_for_bytes(128 * mb * 100) == 100
-    assert shuffle_partitions_for_bytes(128 * mb * 100 + 1) == 101
-    # expansion multiplies the byte estimate (pair-generating operators)
-    assert shuffle_partitions_for_bytes(128 * mb * 10, expansion=4.0) == 40
-    # 100 TB at 128MB blocks is ~800k tasks -- the math must not overflow
-    assert shuffle_partitions_for_bytes(100 * 1024**4) == 819200
-    with pytest.raises(ValueError):
-        shuffle_partitions_for_bytes(-1)
-
-
-def test_stock_session_confs_are_data_aware(spark):
-    """The conftest session pins shuffle_partitions=8 explicitly -- AQE
-    must start exactly there (determinism pins stay exact). The STOCK
-    config path (no explicit pin) floors shuffle width at the
-    core-decoupled SHUFFLE_PARTITIONS_FLOOR so a few-executor session
-    never concentrates corpus-sized shuffles into core-count partitions
-    (the round-4 OOM) -- getOrCreate pins one session per process, so
-    the stock path is asserted on the builder-visible constant + harness
-    default, and the executor-JVM rehearsal artifact
-    (dist/rehearsal_exec_r5_*.jsonl) is the end-to-end evidence."""
-    from invoice_ocr_reconciler_spark.session import SHUFFLE_PARTITIONS_FLOOR
-
-    # the two knobs are COUPLED by get_spark (explicit pin or stock floor
-    # alike); the literal value is order-dependent across the shared
-    # getOrCreate session (conftest pins 8, but another test file may
-    # have built the process session stock-first), so assert the
-    # invariant, not the number
-    sp = spark.conf.get("spark.sql.shuffle.partitions")
-    assert (
-        spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-        )
-        == sp
-    )
-    assert int(sp) >= 8
+def test_stock_session_confs_are_data_aware(spark, built_conf):
+    """The stock builder sets the shuffle width to 2 x cores x executors
+    and leaves AQE's initial partition count to Spark, which starts it at
+    that width; an explicit ``shuffle_partitions`` pins the width exactly
+    (determinism tests and goldens rely on it). The live session reads AQE
+    and its coalescing as on, which is Spark's own default."""
+    key = "spark.sql.shuffle.partitions"
+    for kwargs, want in (
+        ({"cores": 2}, "4"),
+        ({"cores": 2, "executors": 2}, "8"),
+        ({"cores": 2, "shuffle_partitions": 8}, "8"),
+    ):
+        conf = built_conf(**kwargs)
+        assert conf[key] == want, kwargs
+        assert not any("initialPartitionNum" in k for k in conf), kwargs
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert (
         spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
         == "true"
     )
-    # stock floor: the config the 8g-executor rehearsal passes with at
-    # E=2 (and what local[32] derives anyway) -- NOT wider: blanket wide
-    # starts (256/1024) measured 30-50% tax on multi-stage pipelines at
-    # sf0.1 (session.py comment, BENCH/BASELINE.md round-5 tables)
-    assert SHUFFLE_PARTITIONS_FLOOR == 64
 
 
 def test_rehearsal_harness_defaults_to_stock_session():
-    """The executor rehearsal must exercise STOCK session defaults (the
-    round-4 finding's regression gate) -- a hand-pinned partition count in
-    the harness would mask a library regression."""
+    """The executor rehearsal runs the STOCK session (2 x cores, AQE
+    coalescing) unless REHEARSAL_SHUFFLE_PARTITIONS pins a width: the stock
+    session does not floor it at 64, so rerunning the auxiliary heavies
+    at the round-5 width takes REHEARSAL_SHUFFLE_PARTITIONS=64."""
     import importlib
     import sys as _sys
 
@@ -481,33 +443,3 @@ def test_rehearsal_harness_defaults_to_stock_session():
     # override is set
     assert 'os.environ.get("REHEARSAL_SHUFFLE_PARTITIONS")' in src
     assert "if shuffle_env else None" in src
-
-
-def test_data_bytes_hint_raises_both_knobs():
-    """get_spark(data_bytes_hint=...) must size shuffle width from input
-    bytes when it exceeds the floor -- asserted in a SUBPROCESS because
-    getOrCreate pins one session per test process."""
-    import subprocess
-    import sys as _sys
-
-    code = """
-import sys
-sys.path.insert(0, ".")
-from invoice_ocr_reconciler_spark.session import get_spark
-spark = get_spark(cores=2, data_bytes_hint=100 * 1024**3,
-                  extra_conf={"spark.ui.showConsoleProgress": "false"})
-sp = spark.conf.get("spark.sql.shuffle.partitions")
-init = spark.conf.get(
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-print("KNOBS", sp, init)
-spark.stop()
-"""
-    out = subprocess.run(
-        [_sys.executable, "-c", code], capture_output=True, text=True,
-        cwd="/root/repo", timeout=300,
-    )
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("KNOBS")]
-    assert line, out.stderr[-800:]
-    _tag, sp, init = line[0].split()
-    # 100 GiB / 128 MiB = 800 blocks > the 64 floor; both knobs agree
-    assert int(sp) == 800 and init == sp

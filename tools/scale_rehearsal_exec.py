@@ -87,13 +87,11 @@ def main() -> None:
     # BytesToBytesMap blew the 8g executor budget (UNABLE_TO_ACQUIRE_MEMORY
     # on containment_pairs@50k — the failure class thread-mode local[32]
     # masks, because there 64 partitions come free with the core count).
-    # Round 5 moved that lesson INTO the library: the stock session floors
-    # shuffle width at the core-decoupled SHUFFLE_PARTITIONS_FLOOR (64 —
-    # exactly this harness' round-4 pin) with AQE coalescing small
-    # shuffles down from it (session.py), so this harness now runs STOCK
-    # defaults — passing here with no pin is the round-4 finding's
-    # regression gate. REHEARSAL_SHUFFLE_PARTITIONS remains as an A/B
-    # override (e.g. set it to 8 to reproduce the round-4 OOM).
+    # Round 5 floored the stock width at 64; the floor is gone again, because
+    # the core pipeline has no pair-join hash map and runs the same at
+    # 2 x cores (PLANS.md 'Round-5: stock shuffle sizing'). The harness runs
+    # stock defaults; to rerun these auxiliary heavies at the round-5 width,
+    # set REHEARSAL_SHUFFLE_PARTITIONS=64 (or 8 to reproduce the round-4 OOM).
     shuffle_env = os.environ.get("REHEARSAL_SHUFFLE_PARTITIONS")
     shuffle_parts = int(shuffle_env) if shuffle_env else None
     spark = get_spark(
@@ -167,9 +165,8 @@ def main() -> None:
                 "shuffle_partitions": (
                     shuffle_parts if shuffle_parts is not None else "stock"
                 ),
-                "aqe_initial_partitions": spark.conf.get(
-                    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                    None,
+                "session_shuffle_partitions": spark.conf.get(
+                    "spark.sql.shuffle.partitions"
                 ),
                 "rehearsal_exec": rows,
                 "final_peaks": _executor_peaks(em.api),
