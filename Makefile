@@ -15,7 +15,7 @@ oracle-check:
 	python tools/check_oracles.py /root/testdata/sf0.01
 
 scaling:
-	python tools/run_scaling.py
+	python tools/run_scaling_exec.py
 
 # ship the package for spark-submit --py-files (north_rule requirement)
 package:

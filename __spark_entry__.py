@@ -371,7 +371,7 @@ def _ensure_register_csv() -> str:
 
 def q_register_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 (backend/server.js:136-159): CSV register ingest — alias coalesce,
-    [$,] strip + parseFloat, default status, deterministic content-hash ids.
+    [$,] strip + parseFloat, default status, one deterministic id per row.
     DuckDB-checked via read_csv over the same fixture."""
     from invoice_ocr_reconciler_spark.sources.registers import read_register_csv
 
@@ -447,7 +447,7 @@ def _ensure_binary_files() -> str:
 def q_register_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 (backend/server.js:458-463): JSON register ingest through the same
     normalization as CSV (alias coalesce via company/total/date/ref, [$,]
-    strip, default status, content-hash ids); DuckDB read_json replay."""
+    strip, default status, one id per row); DuckDB read_json replay."""
     from invoice_ocr_reconciler_spark.sources.registers import read_register_json
 
     path = _ensure_register_json()
@@ -7920,12 +7920,25 @@ def oracle_sql() -> dict[str, str]:
                        Due AS due_date,
                        reference_number,
                        coalesce(status, 'unpaid') AS status
-                FROM raw)
-            SELECT 'R-' || substr(md5(concat_ws('|', vendor_name,
-                       CAST(expected_amount AS VARCHAR), due_date,
-                       reference_number)), 1, 12) AS record_id,
+                FROM raw),
+            hashed AS (
+                SELECT 'R-' || substr(md5(concat_ws('|', vendor_name,
+                           CAST(expected_amount AS VARCHAR), due_date,
+                           reference_number)), 1, 12) AS h, *
+                FROM norm),
+            numbered AS (
+                SELECT *, ROW_NUMBER() OVER (
+                           PARTITION BY h
+                           ORDER BY vendor_name NULLS FIRST,
+                                    expected_amount NULLS FIRST,
+                                    due_date NULLS FIRST,
+                                    reference_number NULLS FIRST,
+                                    status NULLS FIRST) AS n
+                FROM hashed)
+            SELECT CASE WHEN n = 1 THEN h ELSE h || '-' || CAST(n AS VARCHAR) END
+                       AS record_id,
                    vendor_name, expected_amount, due_date, reference_number, status
-            FROM norm ORDER BY record_id
+            FROM numbered ORDER BY record_id
         """,
         "register_json_scan": f"""
             WITH raw AS (SELECT * FROM read_json_auto('{_REGISTER_JSON_PATH}')),
@@ -7936,12 +7949,25 @@ def oracle_sql() -> dict[str, str]:
                        "date" AS due_date,
                        ref AS reference_number,
                        'unpaid' AS status
-                FROM raw)
-            SELECT 'R-' || substr(md5(concat_ws('|', vendor_name,
-                       CAST(expected_amount AS VARCHAR), due_date,
-                       reference_number)), 1, 12) AS record_id,
+                FROM raw),
+            hashed AS (
+                SELECT 'R-' || substr(md5(concat_ws('|', vendor_name,
+                           CAST(expected_amount AS VARCHAR), due_date,
+                           reference_number)), 1, 12) AS h, *
+                FROM norm),
+            numbered AS (
+                SELECT *, ROW_NUMBER() OVER (
+                           PARTITION BY h
+                           ORDER BY vendor_name NULLS FIRST,
+                                    expected_amount NULLS FIRST,
+                                    due_date NULLS FIRST,
+                                    reference_number NULLS FIRST,
+                                    status NULLS FIRST) AS n
+                FROM hashed)
+            SELECT CASE WHEN n = 1 THEN h ELSE h || '-' || CAST(n AS VARCHAR) END
+                       AS record_id,
                    vendor_name, expected_amount, due_date, reference_number, status
-            FROM norm ORDER BY record_id
+            FROM numbered ORDER BY record_id
         """,
         "binary_file_scan": f"""
             SELECT regexp_extract(filename, '([^/]+)\\.bin$', 1) AS name,

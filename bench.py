@@ -5,8 +5,8 @@ on local[$SPARK_GRAFT_CPUS]. The flagship metric is the full extract+reconcile
 pipeline over pages derived from the documents table; per-query wall times are
 reported under "queries".
 
-Scaling evidence (BASELINE.md protocol): run this twice,
-SPARK_GRAFT_CPUS=8 then =32, via tools/run_scaling.py -> BENCH/BASELINE.md.
+Scaling evidence (BASELINE.md protocol, N vs 4N executors):
+tools/run_scaling_exec.py.
 """
 
 from __future__ import annotations

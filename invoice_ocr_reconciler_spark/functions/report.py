@@ -1,7 +1,7 @@
 """Report sinks (SURVEY.md §2.1 S6/S7).
 
-S6 (CSV) is a straight LEFT JOIN projection written with df.write.csv (see
-jobs/run_extract_reconcile.py). S7 is the reference's PDF report
+S6 (CSV) projects ``enrich_results``, the LEFT JOIN below, and writes it
+with df.write.csv (sources/reports.py). S7 is the reference's PDF report
 (reference: backend/server.js:605-657) — presentation colors aside, its
 CONTENT is a summary block plus one line per result:
 
@@ -25,8 +25,9 @@ _STATUS_ORDER = ["matched", "mismatch", "missing", "duplicate"]
 
 
 def enrich_results(results: DataFrame, invoices: DataFrame) -> DataFrame:
-    """J7: results x invoices LEFT JOIN projection used by both report sinks
-    (reference: backend/server.js:611-616).
+    """J7: results x invoices LEFT JOIN, the one join every report sink
+    projects from (reference: backend/server.js:589-599, 611-616): each
+    result column plus the invoice's number, vendor and total.
 
     NO broadcast hint: ``invoices`` is the FACT table — results and invoices
     are both corpus-sized (one row per url), so the right plan at scale is a
@@ -35,16 +36,9 @@ def enrich_results(results: DataFrame, invoices: DataFrame) -> DataFrame:
     own; a forced broadcast of a 10^12-row side would be fatal (round-2
     self-review fix)."""
     inv = invoices.select(
-        F.col("url").alias("invoice_url"),
-        F.col("vendor_name"),
-        F.col("invoice_number"),
-        F.col("total_amount"),
-        F.col("invoice_date"),
+        F.col("url").alias("invoice_url"), "invoice_number", "vendor_name", "total_amount"
     )
-    return results.join(inv, "invoice_url", "left").select(
-        "invoice_url", "match_status", "flag_reason",
-        "vendor_name", "invoice_number", "total_amount", "invoice_date",
-    )
+    return results.join(inv, "invoice_url", "left")
 
 
 def _money(x) -> str:

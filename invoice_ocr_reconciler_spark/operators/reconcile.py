@@ -35,7 +35,11 @@ one row per invoice from input to result:
                          about their amount that no invoice claimed (ref :91-94);
 8. missing / summary   — ledger records never matched (ref :199); one
                          conditional aggregation over the results next to the
-                         register's totals (ref :201-210).
+                         register's totals (ref :201-210). ``record_id`` is
+                         the register's key (one id per row, as the
+                         reference's uuids), so the missing count is the
+                         register's total less the matched and mismatched
+                         invoices, each of which claimed one id.
 
 Scorer note (documented deviation): the reference scores vendors with
 Fuse.js's bitap algorithm; per the project north_star the target scorer is
@@ -355,7 +359,9 @@ def reconcile(invoices: DataFrame, ledger: DataFrame) -> Reconciled:
     """Full reconcile stage -> {'results', 'missing_records', 'summary'}.
 
     ``invoices`` needs (url, invoice_number, vendor_name, total_amount);
-    ``ledger`` needs (record_id, vendor_name, expected_amount).
+    ``ledger`` needs (record_id, vendor_name, expected_amount), with
+    ``record_id`` a key, as ``normalize_register`` makes it. Nothing checks
+    that at run time: a check would cost the shuffle the summary saves.
     """
     # column-prune FIRST: dragging the extracted_text / line_items payload
     # through the duplicate window and the block exchange is the #1 scale
@@ -448,33 +454,35 @@ def reconcile(invoices: DataFrame, ledger: DataFrame) -> Reconciled:
 
     # summary (ref :201-210): one conditional aggregation over the
     # assignment next to one over the register. coalesce: SQL SUM over zero
-    # rows is NULL, but the reference's counters start at 0. A register row
-    # is missing when no invoice claimed its id — counted on the rows, not
-    # the ids, so the count equals missing_records' even where two identical
-    # register rows share their content-hash id (sources/registers.py).
+    # rows is NULL, but the reference's counters start at 0. record_id is
+    # the register's key and each matched or mismatched invoice claims one
+    # id, so the records no invoice claimed are the rest of the register.
     def _n(status: str):
-        return F.coalesce(
-            F.sum(F.when(F.col("match_status") == status, 1).otherwise(0)), F.lit(0)
-        )
+        return F.count_if(F.col("match_status") == status)
 
-    claimed = used_ids.distinct().withColumn("claimed", F.lit(True))
-    summary = assigned.agg(
-        F.count("*").alias("total_invoices"),
-        _n("matched").alias("matched"),
-        _n("mismatch").alias("mismatched"),
-        _n("missing").alias("missing_invoices"),
-        _n("duplicate").alias("duplicate"),
-        F.coalesce(F.round(F.sum("inv_amount"), 2), F.lit(0.0)).alias(
-            "total_amount_invoiced"
-        ),
-    ).crossJoin(
-        ledger.join(claimed, "record_id", "left").agg(
-            F.count("*").alias("total_records"),
-            F.coalesce(
-                F.round(F.sum(normalize_amount_col(F.col("expected_amount"))), 2),
-                F.lit(0.0),
-            ).alias("total_amount_expected"),
-            F.count(F.when(F.col("claimed").isNull(), 1)).alias("missing_records"),
+    summary = (
+        assigned.agg(
+            F.count("*").alias("total_invoices"),
+            _n("matched").alias("matched"),
+            _n("mismatch").alias("mismatched"),
+            _n("missing").alias("missing_invoices"),
+            _n("duplicate").alias("duplicate"),
+            F.coalesce(F.round(F.sum("inv_amount"), 2), F.lit(0.0)).alias(
+                "total_amount_invoiced"
+            ),
+        )
+        .crossJoin(
+            ledger.agg(
+                F.count("*").alias("total_records"),
+                F.coalesce(
+                    F.round(F.sum(normalize_amount_col(F.col("expected_amount"))), 2),
+                    F.lit(0.0),
+                ).alias("total_amount_expected"),
+            )
+        )
+        .withColumn(
+            "missing_records",
+            F.col("total_records") - F.col("matched") - F.col("mismatched"),
         )
     )
 

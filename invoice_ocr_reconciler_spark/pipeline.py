@@ -7,9 +7,6 @@ E1 ingest/extract (backend/server.js:285-344), E2 reconcile
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from invoice_ocr_reconciler_spark.functions.parse_fields import FIELDS_SCHEMA
@@ -47,7 +44,7 @@ def _extract_parse_rows(urls, htmls, include_text: bool) -> list[dict]:
 def _make_extract_parse_arrow(include_text: bool):
     def gen(batches):
         # Arrow-native batches skip the pandas construction on both sides
-        # (~15% over mapInPandas on the dominant stage; byte-equal, tested)
+        # (~15% over mapInPandas on the dominant stage)
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
@@ -68,18 +65,6 @@ def _make_extract_parse_arrow(include_text: bool):
     return gen
 
 
-def _make_extract_parse_batches(include_text: bool):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _fields_schema(include_text).fields]
-        for pdf in batches:
-            yield pd.DataFrame(
-                _extract_parse_rows(pdf["url"], pdf["html"], include_text),
-                columns=cols,
-            )
-
-    return gen
-
-
 def extract_and_parse(pages: DataFrame, include_text: bool = True) -> DataFrame:
     """pages -> structured invoice rows (E1).
 
@@ -92,7 +77,7 @@ def extract_and_parse(pages: DataFrame, include_text: bool = True) -> DataFrame:
     be one scan split widens it first (run_pipeline does).
 
     ``include_text=False`` drops ``extracted_text`` from the OUTPUT schema —
-    a mapInArrow/mapInPandas node is opaque to Catalyst, so column pruning
+    a mapInArrow node is opaque to Catalyst, so column pruning
     cannot remove it downstream; when the consumer is reconciliation-only
     (needs four small fields) this skips serializing kilobytes of text per
     row across the Arrow channel. The extracted-table write path (jobs/,
@@ -103,24 +88,19 @@ def extract_and_parse(pages: DataFrame, include_text: bool = True) -> DataFrame:
     )
 
 
-def run_pipeline(
-    pages: DataFrame,
-    ledger: DataFrame,
-    include_text: bool = False,
-) -> Reconciled:
+def run_pipeline(pages: DataFrame, ledger: DataFrame) -> Reconciled:
     """Full extract+reconcile; returns results/missing_records/summary plus
     the intermediate ``invoices`` frame for inspection. Call its
     ``release()`` once done with the outputs (see ``Reconciled``).
 
-    ``include_text`` defaults False: reconciliation consumes four small
-    fields, so the flagship path never ships the extracted text across the
-    Arrow channel (see extract_and_parse). Pass True to keep
-    ``invoices.extracted_text`` for inspection/persistence.
+    ``invoices`` carries no ``extracted_text``: reconciliation consumes four
+    small fields, so the flagship path never ships the extracted text across
+    the Arrow channel (see extract_and_parse, which keeps it by default).
 
     ``pages`` is widened to at least defaultParallelism partitions before
     extraction: a batch landed as one file is one scan split, which would
     run every page's extraction on one core."""
-    invoices = extract_and_parse(with_scan_parallelism(pages), include_text=include_text)
+    invoices = extract_and_parse(with_scan_parallelism(pages), include_text=False)
     out = reconcile(invoices, ledger)
     out["invoices"] = invoices
     return out

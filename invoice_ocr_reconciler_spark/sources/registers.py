@@ -3,14 +3,19 @@
 Reimplements the reference's register upload normalization (reference:
 backend/server.js:136-159,458-463): lowercase+underscore column names,
 coalesce alias columns, strip [$,] from amounts, default status 'unpaid',
-deterministic synthesized ids (uuid in the reference -> content hash here,
-determinism contract)."""
+one synthesized id per row (a uuid in the reference, backend/server.js:79).
+
+``record_id`` is the register's key, and it is deterministic: a content hash
+of the row, plus an ordinal for each later identical row. Rows that share a
+hash are numbered in the order of all five output columns, so the rows that
+order ties on are identical and any numbering of them gives the same
+output at any parallelism."""
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 # alias precedence mirrors backend/server.js:147-154
@@ -50,23 +55,24 @@ def normalize_register(df: DataFrame) -> DataFrame:
         _coalesce_present(df, _REF_ALIASES).alias("reference_number"),
         status.alias("status"),
     )
-    # deterministic id (reference uses uuidv4, backend/server.js:79 — replaced
-    # by a content hash for the determinism contract)
-    return out.withColumn(
-        "record_id",
-        F.concat(
-            F.lit("R-"),
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", "vendor_name", "expected_amount", "due_date", "reference_number"
-                    )
-                ),
-                1,
-                12,
-            ),
-        ),
-    ).select("record_id", "vendor_name", "expected_amount", "due_date", "reference_number", "status")
+    # R-<12 hex of the content hash> (every field but status) for the first
+    # row of each hash; its later identical twins get -2, -3, ... so every
+    # row keeps its own id and greedy can claim each of them
+    fields = ["vendor_name", "expected_amount", "due_date", "reference_number", "status"]
+    digest = F.concat(
+        F.lit("R-"), F.substring(F.md5(F.concat_ws("|", *fields[:4])), 1, 12)
+    )
+    twin = F.row_number().over(Window.partitionBy("record_id").orderBy(*fields))
+    return (
+        out.withColumn("record_id", digest)
+        .withColumn("twin", twin)
+        .select(
+            F.when(F.col("twin") == 1, F.col("record_id"))
+            .otherwise(F.concat("record_id", F.lit("-"), F.col("twin").cast("string")))
+            .alias("record_id"),
+            *fields,
+        )
+    )
 
 
 def read_register_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -1,9 +1,9 @@
 """Report sinks (reference: backend/server.js:577-657).
 
-CSV export: LEFT JOIN reconciliation results x invoices, project the
-reference's 8 report columns, write CSV (S6). The PDF report (S7) is
-presentation-layer per SURVEY §2.1; its summary block is the reconcile
-summary frame rendered by the caller.
+CSV export: project the reference's 8 report columns from the results x
+invoices LEFT JOIN (``functions.report.enrich_results``), write CSV (S6).
+The PDF report (S7) is presentation-layer per SURVEY §2.1; its summary
+block is the reconcile summary frame rendered by the caller.
 """
 
 from __future__ import annotations
@@ -11,30 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the reference projects: invoice number, vendor, amount, status,
-# discrepancy, flag reason, confidence, created date (server.js:589-599)
-REPORT_COLUMNS = [
-    "invoice_number",
-    "vendor_name",
-    "total_amount",
-    "match_status",
-    "discrepancy",
-    "flag_reason",
-    "confidence_score",
-    "invoice_url",
-]
+from invoice_ocr_reconciler_spark.functions.report import enrich_results
 
 
 def report_frame(results: DataFrame, invoices: DataFrame) -> DataFrame:
-    """results x invoices LEFT JOIN -> the 8-column report projection (J7)."""
-    inv = invoices.select(
-        F.col("url").alias("invoice_url"),
-        "invoice_number",
-        "vendor_name",
-        "total_amount",
-    )
-    joined = results.join(inv, "invoice_url", "left")
-    return joined.select(
+    """The J7 join (``enrich_results``) projected to the reference's 8 report
+    columns: invoice number, vendor, amount, status, discrepancy, flag
+    reason, confidence and url (server.js:589-599)."""
+    return enrich_results(results, invoices).select(
         "invoice_number",
         "vendor_name",
         F.round("total_amount", 2).alias("total_amount"),

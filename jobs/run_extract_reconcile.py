@@ -63,7 +63,8 @@ def main() -> None:
     out["results"].write.mode("overwrite").parquet(f"{args.out}/results")
     out["missing_records"].write.mode("overwrite").parquet(f"{args.out}/missing_records")
     out["summary"].write.mode("overwrite").json(f"{args.out}/summary")
-    print("done:", {r: out[r].count() for r in ("results", "missing_records")})
+    s = out["summary"].first()
+    print("done:", {"results": s["total_invoices"], "missing_records": s["missing_records"]})
     out.release()
 
 

@@ -2,70 +2,46 @@
 same input at different partition counts + shuffle partitions -> identical
 per-url extracted bytes and identical reconciliation output."""
 
-from pyspark.sql import functions as F
-
 from invoice_ocr_reconciler_spark import datagen
-from invoice_ocr_reconciler_spark.pipeline import run_pipeline
+from invoice_ocr_reconciler_spark.pipeline import extract_and_parse, run_pipeline
 
 N = 150
 
 
-def _signature(out):
-    texts = {
-        r["url"]: r["extracted_text"]
-        for r in out["invoices"].select("url", "extracted_text").collect()
-    }
-    results = sorted(
-        map(
-            tuple,
-            out["results"]
-            .select("invoice_url", "record_id", "match_status", "discrepancy",
-                    "confidence_score")
-            .collect(),
-        )
-    )
-    return texts, results
-
-
 def test_identical_output_across_partitioning(spark):
-    out_a = run_pipeline(
-        datagen.pages_df(spark, N, partitions=2), datagen.ledger_df(spark, 25, N),
-        include_text=True,
-    )
-    out_b = run_pipeline(
-        datagen.pages_df(spark, N, partitions=13), datagen.ledger_df(spark, 25, N),
-        include_text=True,
-    )
-    texts_a, results_a = _signature(out_a)
-    texts_b, results_b = _signature(out_b)
-    assert texts_a == texts_b  # byte-identical per url
-    assert results_a == results_b
+    def texts(parts):
+        pages = datagen.pages_df(spark, N, partitions=parts)
+        return dict(extract_and_parse(pages).select("url", "extracted_text").collect())
+
+    def results(parts):
+        out = run_pipeline(
+            datagen.pages_df(spark, N, partitions=parts), datagen.ledger_df(spark, 25, N)
+        )
+        return sorted(
+            map(
+                tuple,
+                out["results"]
+                .select("invoice_url", "record_id", "match_status", "discrepancy",
+                        "confidence_score")
+                .collect(),
+            )
+        )
+
+    assert texts(2) == texts(13)  # byte-identical per url
+    assert results(2) == results(13)
 
 
 def test_fused_paths_byte_identical(spark):
-    """mapInArrow fused == mapInPandas fused == two-stage composition."""
+    """mapInArrow fused == two-stage composition."""
     from invoice_ocr_reconciler_spark.extraction.udfs import extract_pages
     from invoice_ocr_reconciler_spark.functions.parse_fields import (
-        FIELDS_SCHEMA,
         parse_invoice_fields,
-    )
-    from invoice_ocr_reconciler_spark.pipeline import (
-        _make_extract_parse_batches,
-        extract_and_parse,
     )
 
     pages = datagen.pages_df(spark, 200)
     arrow = sorted(map(str, extract_and_parse(pages).collect()))
-    pandas_fused = sorted(
-        map(
-            str,
-            pages.select("url", "html")
-            .mapInPandas(_make_extract_parse_batches(True), schema=FIELDS_SCHEMA)
-            .collect(),
-        )
-    )
     two_stage = sorted(map(str, parse_invoice_fields(extract_pages(pages)).collect()))
-    assert arrow == pandas_fused == two_stage
+    assert arrow == two_stage
     # text-free output == text-bearing output minus the text column
     slim = sorted(map(str, extract_and_parse(pages, include_text=False).collect()))
     slim_ref = sorted(
@@ -78,8 +54,6 @@ def test_scan_widened_by_run_pipeline_not_extract_and_parse(spark, tmp_path):
     """extract_and_parse keeps its input's partitioning (no exchange: the
     bucket pool runs it per bucket); run_pipeline widens a one-file batch
     to at least defaultParallelism partitions before extraction."""
-    from invoice_ocr_reconciler_spark.pipeline import extract_and_parse
-
     path = str(tmp_path / "pages")
     datagen.pages_df(spark, 60).coalesce(1).write.parquet(path)
     pages = spark.read.parquet(path)

@@ -277,7 +277,7 @@ def test_pipeline_status_writeback_integration(spark):
 
     pages = datagen.pages_df(spark, 200)
     ledger = datagen.ledger_df(spark, 30, 200)
-    out = run_pipeline(pages, ledger, include_text=False)
+    out = run_pipeline(pages, ledger)
     invoices = out["invoices"].withColumn("status", F.lit("pending"))
     written = status_writeback(invoices, out["results"])
     assert written.count() == 200

@@ -135,6 +135,7 @@ def test_missing_records_anti_join(outputs):
     out, _ = outputs
     missing = sorted(r["record_id"] for r in out["missing_records"].collect())
     assert missing == ["R5", "R6"]
+    assert out["summary"].collect()[0]["missing_records"] == len(missing)
 
 
 def test_summary(outputs):
@@ -306,25 +307,61 @@ def test_cached_assignment_coalesces_without_changing_rows(spark):
     assert merged_tasks < wide_tasks, (merged_tasks, wide_tasks)
 
 
-def test_summary_counts_missing_register_rows(spark):
-    """Two identical register rows share their content-hash record_id; the
-    summary's missing_records still equals the missing_records frame's."""
+def _register(spark, rows):
     from invoice_ocr_reconciler_spark.sources.registers import normalize_register
 
-    raw = spark.createDataFrame(
-        [("Acme Corp", "100.00", "2024-01-01", "REF-1")] * 2
-        + [("Zeta Ltd", "50.00", "2024-01-02", "REF-2")],
-        "vendor string, amount string, due_date string, reference string",
-    )
+    return normalize_register(spark.createDataFrame(
+        rows, "vendor string, amount string, due_date string, ref string"
+    ))
+
+
+ACME = ("Acme Corp", "100.00", "2024-01-01", "REF-1")
+ZETA = ("Zeta Ltd", "50.00", "2024-01-02", "REF-2")
+
+
+def test_summary_counts_missing_register_rows(spark):
+    """Two identical register rows get their own record_ids; the one no
+    invoice claims stays missing, and the summary's missing_records equals
+    the missing_records frame's."""
     inv = spark.createDataFrame(
         [("u1", "INV-1", "Acme Corp", 100.0)],
         "url string, invoice_number string, vendor_name string, total_amount double",
     )
-    out = reconcile(inv, normalize_register(raw))
+    out = reconcile(inv, _register(spark, [ACME] * 2 + [ZETA]))
     s = out["summary"].collect()[0]
-    assert (s["total_records"], s["missing_records"]) == (3, 1)
+    assert (s["total_records"], s["missing_records"]) == (3, 2)
+    assert out["missing_records"].count() == 2
+    out.release()
+
+
+def test_identical_register_rows_each_match_an_invoice(spark):
+    """Identical register rows are distinct records: two invoices that match
+    them are both matched, each to its own id."""
+    ids = [r["record_id"] for r in _register(spark, [ACME] * 2 + [ZETA]).collect()]
+    assert len(set(ids)) == 3
+    inv = spark.createDataFrame(
+        [("u1", "INV-1", "Acme Corp", 100.0), ("u2", "INV-2", "Acme Corp", 100.0)],
+        "url string, invoice_number string, vendor_name string, total_amount double",
+    )
+    out = reconcile(inv, _register(spark, [ACME] * 2 + [ZETA]))
+    rows = out["results"].collect()
+    assert [r["match_status"] for r in rows] == ["matched", "matched"]
+    assert len({r["record_id"] for r in rows}) == 2
+    s = out["summary"].collect()[0]
+    assert s["missing_records"] == 1
     assert out["missing_records"].count() == 1
     out.release()
+
+
+def test_register_row_without_twin_keeps_content_hash_id(spark):
+    """A row with no identical twin keeps the bare R- + 12-hex md5 id; its
+    twins' ids extend the first one's with -2, -3, ..."""
+    import hashlib
+
+    digest = hashlib.md5(b"Zeta Ltd|50.0|2024-01-02|REF-2").hexdigest()[:12]
+    acme = "R-" + hashlib.md5(b"Acme Corp|100.0|2024-01-01|REF-1").hexdigest()[:12]
+    ids = sorted(r["record_id"] for r in _register(spark, [ACME] * 3 + [ZETA]).collect())
+    assert ids == sorted([acme, f"{acme}-2", f"{acme}-3", f"R-{digest}"])
 
 
 def test_release_leaves_no_cached_frames(spark):

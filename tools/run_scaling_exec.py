@@ -1,11 +1,11 @@
-"""Scaling evidence with SEPARATE EXECUTOR JVMS (local-cluster mode).
+"""Scaling evidence (BASELINE.md protocol: N vs 4N, efficiency >= 0.8) with
+SEPARATE EXECUTOR JVMS (local-cluster mode).
 
-`tools/run_scaling.py` measures N vs 4N as local[] thread counts inside one
-JVM — a conservative analog that under-states real clusters (one GC, one
+local[] thread counts inside one JVM under-state real clusters (one GC, one
 allocator, one shuffle service shared by all "executors"). Spark's
 local-cluster[E, C, M] master launches E genuine executor PROCESSES with C
 cores and M MB each: own JVM, own GC, own Python worker pool, shuffle over
-local sockets. This is the closest in-sandbox shape to "N executors vs 4N
+local sockets. This is the closest single-host shape to "N executors vs 4N
 executors" the north rule asks for.
 
 Usage: python tools/run_scaling_exec.py [n_pages] [n_ledger] [cores_per_exec]
@@ -22,15 +22,45 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.run_scaling import (  # noqa: E402
-    LEDGER_PATH,
-    OUT,
-    PAGES_PATH,
-    build_input,
-    warm_page_cache,
-)
-
+PAGES_PATH = "/tmp/bench_pages_parquet"
+LEDGER_PATH = "/tmp/bench_ledger_parquet"
 EXEC_MEM_MB = 10240
+
+
+def build_input(n_pages: int, n_ledger: int) -> None:
+    """Write the url-bucketed pages and the ledger once; the session takes
+    every core of the box."""
+    from invoice_ocr_reconciler_spark import datagen
+    from invoice_ocr_reconciler_spark.session import get_spark
+    from invoice_ocr_reconciler_spark.sources.pages import write_pages_bucketed
+
+    spark = get_spark(app_name="scaling-datagen",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+    write_pages_bucketed(datagen.pages_df(spark, n_pages, partitions=64), PAGES_PATH)
+    datagen.ledger_df(spark, n_ledger, n_pages).write.mode("overwrite").parquet(LEDGER_PATH)
+    spark.stop()
+
+
+def warm_page_cache(*roots: str) -> float:
+    """Pull every input byte into the OS page cache before a timed leg.
+
+    On a virtual disk that throttles unpredictably, whichever leg happens to
+    read cache-cold measures disk luck, not the job's parallel fraction
+    (observed swings 0.55-0.98 on identical code). A real N vs 4N cluster
+    comparison scales disk spindles with executors — cache-warm local legs
+    are the faithful single-host analog. Returns GiB touched."""
+    total = 0
+    for root in roots:
+        for dirpath, _dirs, files in os.walk(root):
+            for name in files:
+                p = os.path.join(dirpath, name)
+                try:
+                    with open(p, "rb", buffering=1024 * 1024) as fh:
+                        while chunk := fh.read(32 * 1024 * 1024):
+                            total += len(chunk)
+                except OSError:
+                    pass
+    return total / 2**30
 
 
 def _leg(executors: int, cores_per: int, n_pages: int) -> dict:
@@ -85,7 +115,6 @@ def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 1_200_000
     n_ledger = int(sys.argv[2]) if len(sys.argv) > 2 else 12_000
     cores_per = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    os.makedirs(OUT, exist_ok=True)
     if not os.path.exists(PAGES_PATH) or not os.path.exists(LEDGER_PATH):
         build_input(n_pages, n_ledger)
     gib = warm_page_cache(PAGES_PATH, LEDGER_PATH)
