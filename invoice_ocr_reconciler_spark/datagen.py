@@ -8,7 +8,7 @@ table, reference: backend/db.js:125-135).
 Every value is a pure function of the row index via md5 — no wall clock, no
 RNG object, no cross-row state — so the corpus is identical at any scale
 factor prefix, any partitioning, and any parallelism. Distributed generation
-goes through ``spark.range(n) -> mapInPandas`` so 100 TB-scale corpora
+goes through ``spark.range(n) -> util.map_rows`` so 100 TB-scale corpora
 generate partition-parallel with no driver materialization.
 
 Host distribution is Zipf-skewed (a few hot hosts take ~35% of urls) to
@@ -19,13 +19,14 @@ from __future__ import annotations
 
 import datetime as dt
 import hashlib
-from collections.abc import Iterator
 from functools import lru_cache as _lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from invoice_ocr_reconciler_spark.util import map_rows, with_scan_parallelism
 
 BASE_TS = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -193,36 +194,37 @@ def make_document_text(i: int) -> str:
     return _article_body(i) + f" ref-{i}"
 
 
+DOCUMENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("source", T.StringType()),
+        T.StructField("n_chars", T.LongType()),
+    ]
+)
+
+
+def _document_row(row: dict) -> dict:
+    i = row["id"]
+    text = make_document_text(i)
+    return {
+        "doc_id": i,
+        "text": text,
+        "lang": LANGS[_h(f"lang:{i}") % len(LANGS)],
+        "source": f"synthetic/{i % 10}",
+        "n_chars": len(text),
+    }
+
+
 def documents_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Distributed deterministic documents table (doc_id, text, lang,
     source, n_chars) — the large-scale stand-in for the driver's
     documents.parquet, used by the curation bench leg."""
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 4)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                text = make_document_text(i)
-                rows.append(
-                    {
-                        "doc_id": i,
-                        "text": text,
-                        "lang": LANGS[_h(f"lang:{i}") % len(LANGS)],
-                        "source": f"synthetic/{i % 10}",
-                        "n_chars": len(text),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
-            )
-
-    schema = (
-        "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    )
-    return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, schema=schema)
+    ids = spark.range(0, n, numPartitions=partitions)
+    return map_rows(ids, _document_row, DOCUMENTS_SCHEMA)
 
 
 def _html_page(i: int, body_text: str) -> bytes:
@@ -298,19 +300,24 @@ def pages_pdf(n: int, start: int = 0) -> pd.DataFrame:
 
 
 def pages_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    """Distributed deterministic generation: spark.range -> mapInPandas."""
+    """Distributed deterministic generation: spark.range -> util.map_rows."""
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 4)
+    ids = spark.range(0, n, numPartitions=partitions)
+    return map_rows(ids, lambda row: make_page(row["id"]), PAGES_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [make_page(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in PAGES_SCHEMA.fields])
 
-    return (
-        spark.range(0, n, numPartitions=partitions)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
-    )
+def _page_from_document(row: dict) -> dict:
+    i = row["doc_id"]
+    if i % 10 not in (6, 8):
+        return make_page(i)
+    return {
+        "url": url_for(i),
+        "warc_ts": BASE_TS + dt.timedelta(seconds=int(_h(f"ts:{i}") % 31_536_000)),
+        "html": _html_page(i, row["text"] or ""),
+        "text": "",
+        "lang": LANGS[_h(f"lang:{i}") % len(LANGS)],
+    }
 
 
 def pages_from_documents(docs: DataFrame) -> DataFrame:
@@ -320,39 +327,15 @@ def pages_from_documents(docs: DataFrame) -> DataFrame:
     ledger generator's invoice alignment holds; kinds 6 and 8 carry the real
     document text as the main-content block (those rows are the
     extraction-identity oracle subset: extracted_text == text for them).
+
+    The driver's documents.parquet is a single small file -> ONE scan
+    partition, which would serialize the whole (CPU-bound) extraction stage
+    behind it. The projected columns are tiny (html is synthesized AFTER the
+    exchange), so widening the scan is a ~free shuffle that unlocks every
+    core. Real page tables (many files, hash-bucketed) never hit this path.
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                if i % 10 in (6, 8):
-                    rows.append(
-                        {
-                            "url": url_for(i),
-                            "warc_ts": BASE_TS
-                            + dt.timedelta(seconds=int(_h(f"ts:{i}") % 31_536_000)),
-                            "html": _html_page(i, text or ""),
-                            "text": "",
-                            "lang": LANGS[_h(f"lang:{i}") % len(LANGS)],
-                        }
-                    )
-                else:
-                    rows.append(make_page(i))
-            yield pd.DataFrame(rows, columns=[f.name for f in PAGES_SCHEMA.fields])
-
-    # The driver's documents.parquet is a single small file -> ONE scan
-    # partition, which would serialize the whole (CPU-bound) extraction
-    # stage behind it. The projected columns are tiny (html is synthesized
-    # AFTER the exchange), so fanning out to the session's parallelism is a
-    # ~free shuffle that unlocks every core. Real page tables (many files,
-    # hash-bucketed) never hit this path.
-    slim = docs.select("doc_id", "text")
-    target = max(docs.sparkSession.sparkContext.defaultParallelism, 4)
-    if slim.rdd.getNumPartitions() < target:
-        slim = slim.repartition(target)
-    return slim.mapInPandas(gen, schema=PAGES_SCHEMA)
+    slim = with_scan_parallelism(docs.select("doc_id", "text"))
+    return map_rows(slim, _page_from_document, PAGES_SCHEMA)
 
 
 # --- ledger dimension (analog of payment_records, backend/db.js:125-135) ---

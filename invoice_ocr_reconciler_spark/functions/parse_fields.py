@@ -1,8 +1,8 @@
 """Structured-field extraction from raw extracted text.
 
 Faithful reimplementation of the reference's regex-cascade parser semantics
-(reference: backend/invoiceParser.js:5-128) in Python ``re``, vectorized as a
-struct-returning pandas UDF. Cascade semantics: try patterns in order, return
+(reference: backend/invoiceParser.js:5-128) in Python ``re``, applied per row
+through ``util.map_rows``. Cascade semantics: try patterns in order, return
 the FIRST group-1 capture, trimmed (reference: backend/invoiceParser.js:61-67).
 
 Dialect notes (JS -> Python audit, SURVEY.md §7 hard parts):
@@ -22,11 +22,11 @@ from __future__ import annotations
 
 import hashlib
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from invoice_ocr_reconciler_spark.util import map_rows
 
 # --- pattern cascades (reference: backend/invoiceParser.js:5-50) ---
 
@@ -234,16 +234,8 @@ FIELDS_SCHEMA = T.StructType(
 )
 
 
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            {"url": u, "extracted_text": t, **parse_invoice_text(t, u)}
-            for u, t in zip(pdf["url"], pdf["extracted_text"])
-        ]
-        yield pd.DataFrame(
-            rows,
-            columns=[f.name for f in FIELDS_SCHEMA.fields],
-        )
+def _parse_row(row: dict) -> dict:
+    return {**row, **parse_invoice_text(row["extracted_text"], row["url"])}
 
 
 SCALAR_SUBSET_SCHEMA = T.StructType(
@@ -267,41 +259,25 @@ def parse_scalar_fields(
     fallback/coalescing layers, so each raw capture gets a value-hash check
     against a DuckDB regexp replay instead of only goldens."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                text = (t or "")[:PARSE_MAX_CHARS]
-                cur = extract_field(text, PATTERNS["currency"])
-                out.append(
-                    {
-                        "doc_id": int(i),
-                        "invoice_number_raw": extract_field(
-                            text, PATTERNS["invoice_number"]
-                        ),
-                        "total_parsed": parse_amount(
-                            extract_field(text, PATTERNS["total"])
-                        ),
-                        "tax_parsed": parse_amount(extract_field(text, PATTERNS["tax"])),
-                        "currency": CURRENCY_SYMBOLS.get(cur, cur.upper())
-                        if cur
-                        else "USD",
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in SCALAR_SUBSET_SCHEMA.fields]
-            )
+    def scalar_row(row: dict) -> dict:
+        text = (row[text_col] or "")[:PARSE_MAX_CHARS]
+        cur = extract_field(text, PATTERNS["currency"])
+        return {
+            "doc_id": int(row[id_col]),
+            "invoice_number_raw": extract_field(text, PATTERNS["invoice_number"]),
+            "total_parsed": parse_amount(extract_field(text, PATTERNS["total"])),
+            "tax_parsed": parse_amount(extract_field(text, PATTERNS["tax"])),
+            "currency": CURRENCY_SYMBOLS.get(cur, cur.upper()) if cur else "USD",
+        }
 
-    return frame.select(id_col, text_col).mapInPandas(gen, schema=SCALAR_SUBSET_SCHEMA)
+    return map_rows(frame.select(id_col, text_col), scalar_row, SCALAR_SUBSET_SCHEMA)
 
 
 def parse_invoice_fields(extracted: DataFrame) -> DataFrame:
     """extracted(url, extracted_text, ...) -> one struct row per document.
 
-    Vectorized over Arrow batches; all P1-P12 cascades in one Python pass
-    (one JVM<->Python crossing per batch, not per field). Keeps its input's
-    partitioning, like extract_pages.
+    All P1-P12 cascades in one Python pass (one ``util.map_rows`` crossing
+    per Arrow batch, not per field). Keeps its input's partitioning, like
+    extract_pages.
     """
-    return extracted.select("url", "extracted_text").mapInPandas(
-        _parse_batches, schema=FIELDS_SCHEMA
-    )
+    return map_rows(extracted.select("url", "extracted_text"), _parse_row, FIELDS_SCHEMA)

@@ -312,7 +312,6 @@ def build_corpus_resumable(
         CheckpointManifest,
         _discover_buckets,
         run_resumable,
-        shuffle_pool_width,
     )
 
     manifest_dir = os.path.join(out_root, "manifest")
@@ -327,9 +326,6 @@ def build_corpus_resumable(
             manifest,
             clean_pages_bucket,
             fail_after=fail_after,
-            # latest_snapshot's window and the widening before extract_pages
-            # shuffle per bucket
-            max_concurrent=shuffle_pool_width(spark),
         )
     if phase in ("finish", "all"):
         # The finish phase is only well-defined over a COMPLETE extract

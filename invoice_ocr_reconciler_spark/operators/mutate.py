@@ -206,7 +206,6 @@ def write_back_bucketed(
     insert_missing: bool = True,
     n_buckets: int | None = None,
     fail_after: int | None = None,
-    max_concurrent: int | None = None,
 ) -> dict:
     """Durable MERGE over the url-hash-bucketed table (Iceberg MERGE INTO
     analog): each url_bucket=K partition is rewritten as
@@ -225,7 +224,6 @@ def write_back_bucketed(
     from invoice_ocr_reconciler_spark.streaming.resume import (
         _discover_buckets,
         run_resumable,
-        shuffle_pool_width,
     )
 
     if n_buckets is None:
@@ -255,8 +253,6 @@ def write_back_bucketed(
 
         return transform
 
-    if max_concurrent is None:  # each bucket is a join: a shuffle unless updates broadcast
-        max_concurrent = shuffle_pool_width(spark)
     return run_resumable(
         spark,
         input_path,
@@ -265,7 +261,6 @@ def write_back_bucketed(
         transform=None,
         transform_factory=factory,
         fail_after=fail_after,
-        max_concurrent=max_concurrent,
     )
 
 

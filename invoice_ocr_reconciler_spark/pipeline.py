@@ -7,85 +7,53 @@ E1 ingest/extract (backend/server.js:285-344), E2 reconcile
 
 from __future__ import annotations
 
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from invoice_ocr_reconciler_spark.functions.parse_fields import FIELDS_SCHEMA
+from invoice_ocr_reconciler_spark.extraction.html_extract import extract_payload
+from invoice_ocr_reconciler_spark.functions.parse_fields import (
+    FIELDS_SCHEMA,
+    parse_invoice_text,
+)
 from invoice_ocr_reconciler_spark.operators.reconcile import Reconciled, reconcile
-from invoice_ocr_reconciler_spark.util import with_scan_parallelism
+from invoice_ocr_reconciler_spark.util import map_rows, with_scan_parallelism
+
+_FIELDS_NO_TEXT = T.StructType(
+    [f for f in FIELDS_SCHEMA.fields if f.name != "extracted_text"]
+)
 
 
-def _fields_schema(include_text: bool):
-    if include_text:
-        return FIELDS_SCHEMA
-    import pyspark.sql.types as T
-
-    return T.StructType([f for f in FIELDS_SCHEMA.fields if f.name != "extracted_text"])
-
-
-def _extract_parse_rows(urls, htmls, include_text: bool) -> list[dict]:
+def _extract_parse_row(row: dict) -> dict:
     # one Python crossing for both stages: composing extract_pages and
     # parse_invoice_fields would ship the full extracted text
     # JVM->Python->JVM->Python; fused, the text never leaves the worker
     # between extraction and field parsing. Same pure functions,
     # byte-identical output (pinned by tests).
-    from invoice_ocr_reconciler_spark.extraction.html_extract import extract_payload
-    from invoice_ocr_reconciler_spark.functions.parse_fields import parse_invoice_text
-
-    rows = []
-    for url, payload in zip(urls, htmls):
-        text = extract_payload(payload)
-        row = {"url": url, **parse_invoice_text(text, url)}
-        if include_text:
-            row["extracted_text"] = text
-        rows.append(row)
-    return rows
-
-
-def _make_extract_parse_arrow(include_text: bool):
-    def gen(batches):
-        # Arrow-native batches skip the pandas construction on both sides
-        # (~15% over mapInPandas on the dominant stage)
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        schema = _fields_schema(include_text)
-        atype = to_arrow_type(schema)
-        names = [f.name for f in schema.fields]
-        for batch in batches:
-            rows = _extract_parse_rows(
-                batch.column("url").to_pylist(),
-                batch.column("html").to_pylist(),
-                include_text,
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[n] for r in rows], type=atype.field(n).type) for n in names],
-                names=names,
-            )
-
-    return gen
+    text = extract_payload(row["html"])
+    return {"url": row["url"], "extracted_text": text, **parse_invoice_text(text, row["url"])}
 
 
 def extract_and_parse(pages: DataFrame, include_text: bool = True) -> DataFrame:
     """pages -> structured invoice rows (E1).
 
-    Runs extraction + field parsing in a single Arrow-native crossing
-    (mapInArrow). Its rows are byte-identical to composing the standalone
-    operators, ``parse_invoice_fields(extract_pages(pages))`` (tested).
+    Runs extraction + field parsing in a single Python crossing
+    (``util.map_rows``). Its rows are byte-identical to composing the
+    standalone operators, ``parse_invoice_fields(extract_pages(pages))``
+    (tested).
 
     It keeps its input's partitioning: it adds no exchange, so each
     run_resumable bucket pays no shuffle. A caller whose single input may
     be one scan split widens it first (run_pipeline does).
 
     ``include_text=False`` drops ``extracted_text`` from the OUTPUT schema —
-    a mapInArrow node is opaque to Catalyst, so column pruning
-    cannot remove it downstream; when the consumer is reconciliation-only
+    a mapInArrow node is opaque to Catalyst, so column pruning cannot
+    remove it downstream; when the consumer is reconciliation-only
     (needs four small fields) this skips serializing kilobytes of text per
     row across the Arrow channel. The extracted-table write path (jobs/,
     byte-identity contract) keeps the default.
     """
-    return pages.select("url", "html").mapInArrow(
-        _make_extract_parse_arrow(include_text), schema=_fields_schema(include_text)
-    )
+    schema = FIELDS_SCHEMA if include_text else _FIELDS_NO_TEXT
+    return map_rows(pages.select("url", "html"), _extract_parse_row, schema)
 
 
 def run_pipeline(pages: DataFrame, ledger: DataFrame) -> Reconciled:

@@ -111,15 +111,6 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def shuffle_pool_width(spark: SparkSession) -> int:
-    """Bucket pool width for transforms that shuffle inside each bucket.
-
-    Such a bucket already spreads over ``spark.sql.shuffle.partitions``
-    tasks, so half the cores' worth of buckets at a time keeps the
-    concurrent shuffles bounded (run_resumable's former default)."""
-    return max(2, spark.sparkContext.defaultParallelism // 2)
-
-
 def run_resumable(
     spark: SparkSession,
     input_path: str,
@@ -127,22 +118,20 @@ def run_resumable(
     manifest: CheckpointManifest,
     transform: Callable[[DataFrame], DataFrame] | None,
     fail_after: int | None = None,
-    max_concurrent: int | None = None,
     transform_factory: Callable[[int], Callable[[DataFrame], DataFrame]] | None = None,
 ) -> dict:
     """Process each incomplete url bucket through ``transform`` and commit.
 
     Buckets are dispatched as CONCURRENT Spark jobs from a driver-side
-    thread pool, ``max_concurrent`` wide (default: ``defaultParallelism``,
-    one bucket per core). That default suits extract_and_parse and
-    extract_pages, which add no exchange: each one-file bucket is one
-    task, and the pool fills the cores when at least as many buckets as
-    cores are pending. Transforms that shuffle inside every bucket
-    (write_back_bucketed's MERGE join, build_corpus_resumable's
-    latest-snapshot window) pass ``shuffle_pool_width`` instead. Each pool
-    thread inherits the caller's Spark local properties (job group,
-    description) and session tags, so a bucket's jobs are attributed to
-    the calling context.
+    thread pool ``defaultParallelism`` wide, one bucket per core. With
+    extract_and_parse or extract_pages, which add no exchange, each
+    one-file bucket is one task, and the pool fills the cores when at least
+    as many buckets as cores are pending; transforms that shuffle inside
+    every bucket (write_back_bucketed's MERGE join, build_corpus_resumable's
+    latest-snapshot window) run at the same width. Each pool thread
+    inherits the caller's Spark local properties (job group, description)
+    and session tags, so a bucket's jobs are attributed to the calling
+    context.
 
     With extract_and_parse, a bucket costs two Spark jobs: reading its
     input's parquet footer, and the write. The
@@ -210,9 +199,7 @@ def run_resumable(
     else:
         from concurrent.futures import ThreadPoolExecutor, as_completed
 
-        if max_concurrent is None:
-            max_concurrent = spark.sparkContext.defaultParallelism
-        with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
+        with ThreadPoolExecutor(max_workers=spark.sparkContext.defaultParallelism) as pool:
             # wrapped per bucket: a wrapper clones the caller's local
             # properties once and installs that one object in its thread, so
             # a wrapper shared by the pool would let a bucket that sets its

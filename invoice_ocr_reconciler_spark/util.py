@@ -2,14 +2,41 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+
+def map_rows(df: DataFrame, fn: Callable[[dict], dict], schema: T.StructType) -> DataFrame:
+    """Apply a stateless per-row Python function in one ``mapInArrow``.
+
+    The core's one way across the JVM/Python boundary: each Arrow batch
+    becomes row dicts (``to_pylist``), ``fn`` maps every row to an output
+    dict, and the outputs become one batch of ``schema``. Keys outside
+    ``schema`` are dropped, so ``fn`` may return more than the caller keeps
+    (a missing key is null). No pandas frame is built on either side, and
+    the input's partitioning is kept: select the columns ``fn`` reads
+    first, since nothing else need cross.
+    """
+
+    def batches(it):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for batch in it:
+            rows = [fn(row) for row in batch.to_pylist()]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.mapInArrow(batches, schema=schema)
 
 
 def with_scan_parallelism(df: DataFrame) -> DataFrame:
     """Ensure a CPU-bound stage is fed at least defaultParallelism partitions.
 
     A small corpus in one parquet file yields ONE scan split, which serializes
-    every downstream Arrow/pandas UDF onto a single core. When the upstream
+    every downstream Python crossing onto a single core. When the upstream
     partition count is below the cluster's default parallelism, repartition up
     (round-robin). At web scale the scan has thousands of file splits and this
     is a no-op.

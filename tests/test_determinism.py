@@ -69,7 +69,8 @@ def test_scan_widened_by_run_pipeline_not_extract_and_parse(spark, tmp_path):
 
 def test_extract_pages_and_parse_fields_keep_partitioning(spark, tmp_path):
     """The standalone operators add no exchange either: only the caller
-    decides whether a scan is widened (run_pipeline does)."""
+    decides whether a scan is widened (run_pipeline does). No plan on the
+    pipeline's path crosses into Python through pandas."""
     from invoice_ocr_reconciler_spark.extraction.udfs import extract_pages
     from invoice_ocr_reconciler_spark.functions.parse_fields import (
         parse_invoice_fields,
@@ -80,9 +81,15 @@ def test_extract_pages_and_parse_fields_keep_partitioning(spark, tmp_path):
     pages = spark.read.parquet(path)
     assert pages.rdd.getNumPartitions() == 1
 
-    for frame in (extract_pages(pages), parse_invoice_fields(extract_pages(pages))):
+    for frame in (
+        extract_pages(pages),
+        parse_invoice_fields(extract_pages(pages)),
+        extract_and_parse(pages),
+    ):
         assert frame.rdd.getNumPartitions() == 1
-        assert "Exchange" not in frame._jdf.queryExecution().executedPlan().toString()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert "MapInPandas" not in plan
 
     wide = datagen.pages_df(spark, 60, partitions=5)
     assert extract_pages(wide).rdd.getNumPartitions() == 5

@@ -15,7 +15,8 @@ fits, merge learning and other driver-side fits DO run) and reports:
   exchanges        total Exchange operators (shuffles + broadcasts)
   broadcasts       BroadcastExchange count (subset of exchanges)
   python_nodes     BatchEvalPython / ArrowEvalPython / MapInPandas /
-                   FlatMapGroupsInPandas — the Python-crossing surface
+                   FlatMapGroupsInPandas / MapInArrow — the
+                   Python-crossing surface
   bnlj             BroadcastNestedLoopJoin count (intentional only for
                    broadcast-side sweeps like ANN/decontamination)
   sort_merge_joins SortMergeJoin count
@@ -90,7 +91,7 @@ PURE_CODEGEN_QUERIES = [
     "countmin",
 ]
 # NOT listed although their OPERATORS are pure codegen: queries whose
-# INPUT synthesis is datagen.pages_from_documents (a mapInPandas page
+# INPUT synthesis is datagen.pages_from_documents (a mapInArrow page
 # generator) — the Python node belongs to the fixture, not the operator:
 # extract_links/extract_anchors/anchor_index/host_link_graph/
 # crawl_frontier/fetch_schedule/salted_host_partitions/url_blocklist.
@@ -107,7 +108,8 @@ PYTHON_MARKERS = (
     "ArrowEvalPython",
     "MapInPandas",
     "FlatMapGroupsInPandas",
-    "PythonMapInArrow",
+    # Spark 4's MapInArrowExec prints as MapInArrow (Spark 3: PythonMapInArrow)
+    "MapInArrow",
 )
 
 
